@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from herodb_spark.graph import algorithms as GA
 from herodb_spark.graph import edges as GE
+from herodb_spark.session import fixture_conf
 
 SEED = 0
 
@@ -154,38 +155,25 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the 10 rank updates into chained (non-recursive)
     CTEs — this is a full hash-checked oracle, not rows-only.
 
-    The bounded iteration loop runs with AQE disabled for the
-    fixture's duration (r14 opt, same scope pattern as
-    lifecycle._few_shuffle_partitions): each checkpoint
-    materialization is a static 25-node multi-join plan whose AQE
-    per-stage materialization costs several scheduler round-trips per
-    shuffle for zero re-planning benefit. The returned frame is lazy
-    and re-plans at the caller's settings; production-scale graphs
-    keep their session's AQE."""
-    import contextlib
-
+    The bounded iteration loop runs under session.fixture_conf: 8
+    shuffle partitions, AQE off and auto-broadcast off. Each checkpoint
+    materialization is a static 25-node multi-join plan, where AQE's
+    per-stage materialization and BroadcastExchange jobs cost
+    scheduler round-trips for no re-planning benefit. The returned
+    frame is lazy and re-plans at the caller's settings;
+    production-scale graphs keep their session's AQE and broadcast
+    planning."""
     from herodb_spark.catalog import load_table
 
-    @contextlib.contextmanager
-    def _no_aqe():
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    with _no_aqe():
+    with fixture_conf(spark):
         # every eager job of the fixture — the two input checkpoints
         # and the iteration-cadence checkpoints inside GA.pagerank —
         # runs in this scope; the returned select/sort over the final
-        # checkpoint is lazy and re-plans at the caller's settings
+        # checkpoint is lazy and re-plans at the caller's settings.
+        # The pinned partition count also fixes how the double
+        # contribution and dangling-mass sums split into partial sums,
+        # i.e. their float summation order: the ROUND(6)-gated ranks
+        # do not depend on the caller's core count.
         nodes = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node")).localCheckpoint(eager=True)
         e = GE.sparse_edges(spark, sf_dir).localCheckpoint(eager=True)
         ranks = GA.pagerank(nodes, e, iters=10)
@@ -327,28 +315,10 @@ def graph_personalized_pagerank(
     non-seeds are exactly 0.0 and seeds are reachable at hops 0, so
     the joined support carries every nonzero score); this standalone
     entry + oracle kept."""
-    import contextlib
-
     from herodb_spark.catalog import load_table
 
-    # fixture-scoped AQE-off for the bounded iteration loop — same
-    # rationale and scope discipline as graph_pagerank above
-    @contextlib.contextmanager
-    def _no_aqe():
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    with _no_aqe():
+    # same fixture scope and rationale as graph_pagerank above
+    with fixture_conf(spark):
         nodes = (
             load_table(spark, sf_dir, "nation")
             .select(F.col("n_nationkey").alias("node"))

@@ -20,7 +20,6 @@ durably at database scope.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 
@@ -28,56 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from herodb_spark.catalog import load_table
-from herodb_spark.session import literal_df, run_overlapped as _overlap
-
-
-@contextlib.contextmanager
-def _few_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """The lifecycle schedules run dozens of EAGER Spark actions over
-    nation-sized frames (25 rows): at the session's 32 shuffle
-    partitions each tiny exchange pays 4× the task-scheduling cost for
-    zero parallelism benefit. Drop to `n` for the schedule's duration
-    (restored in finally; results are partitioning-independent and the
-    lazily-returned legs re-plan at the caller's setting). Same trick
-    as streamops._stateful_stream_legs (r12).
-
-    Since r13 the scope also disables ADAPTIVE execution: AQE
-    materializes every join's shuffle stages as separate Spark jobs —
-    a tiny mutation commit (anti-join + write) pays 3-4 scheduler
-    round-trips instead of 1 for frames whose static size estimates
-    already pick the right (broadcast) plan. Results are plan-
-    independent; production-scale callers of the snapshot layer keep
-    their session's AQE.
-
-    Since r14 the scope also disables AUTO broadcast planning
-    (autoBroadcastJoinThreshold=-1): once literal frames became sized
-    LocalRelations, every tiny fixture join flipped to
-    BroadcastHashJoin — the scale-correct shape, but each
-    BroadcastExchange is its OWN driver job, and at fixture size (25-
-    row frames, 8 shuffle partitions) the extra scheduler round-trip
-    costs more than the one-job shuffle join it replaces. Measured:
-    snapshot_lifecycle 41→27 jobs, snapshot_maintenance 19→15,
-    db_branch_merge 19→14, at identical results. Production-
-    scale callers keep their session's broadcast planning (the scope
-    restores it in the finally, and the returned legs re-plan at the
-    caller's settings); explicit F.broadcast hints, had the layer any,
-    would still win over the threshold."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
+from herodb_spark.session import fixture_conf, literal_df, run_overlapped as _overlap
 
 
 def snapshot_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _few_shuffle_partitions(spark):
+    with fixture_conf(spark):
         return _snapshot_lifecycle_impl(spark, sf_dir)
 
 
@@ -461,7 +415,7 @@ ORDER BY leg, key, grp
 
 
 def snapshot_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _few_shuffle_partitions(spark):
+    with fixture_conf(spark):
         return _snapshot_maintenance_impl(spark, sf_dir)
 
 
@@ -644,7 +598,7 @@ ORDER BY leg, key, grp
 
 
 def db_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _few_shuffle_partitions(spark):
+    with fixture_conf(spark):
         return _db_branch_merge_impl(spark, sf_dir)
 
 

@@ -213,38 +213,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def label_centroids_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-applyInPandas variant of `label_centroids` — kept as the
-    custom-Arrow aggregation demo (each label's vectors arrive as one
-    pandas DataFrame; numpy does the math; sequential accumulation in
-    vec_id order keeps the float sum deterministic). NOT the graded
-    plan: it materializes whole groups in a Python worker, which the
-    built-in partial-agg plan above avoids. Equivalence is pinned in
-    tests/test_dedup_similarity.py."""
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism, "label"
-    )
-
-    def centroid(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-        acc = np.zeros(mat.shape[1])
-        for row in mat:  # sequential accumulation: deterministic order
-            acc += row
-        c = acc / mat.shape[0]
-        return pd.DataFrame(
-            {"label": pdf["label"].iloc[0], "dim": range(len(c)), "centroid": c}
-        )
-
-    out = emb.groupBy("label").applyInPandas(centroid, "label int, dim int, centroid double")
-    return out.select("label", "dim", F.round("centroid", 6).alias("centroid")).orderBy(
-        "label", "dim"
-    )
-
-
 LABEL_CENTROIDS_SQL = """
 SELECT label, CAST(dim - 1 AS INT) AS dim,
        ROUND(CAST(SUM(CAST(CAST(x AS DOUBLE) AS DECIMAL(27,9))) AS DOUBLE) / COUNT(*), 6) AS centroid

@@ -183,7 +183,7 @@ def _stateful_stream_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from herodb_spark.session import literal_df
+    from herodb_spark.session import fixture_conf, literal_df
     from herodb_spark.sources.snapshot import SnapshotTable
     from herodb_spark.streaming import stateful as SS
     from herodb_spark.streaming.sink import SnapshotUpsertSink
@@ -199,266 +199,244 @@ def _stateful_stream_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = uuid.uuid4().hex[:8]
     spend_name = f"spend_sess_{tag}"
     queries = []
-    # the stateful operators' state-store count per micro-batch equals
-    # spark.sql.shuffle.partitions at query start — 32 stores × batches
-    # × queries of pure setup cost on report-sized state. Drop to 8 for
-    # the duration of this fixture (restored in the finally; the result
-    # is eagerly localCheckpoint-ed before restore, and output values
-    # are partitioning-independent). Since the r13 optimization pass
-    # the scope also disables AQE, the lifecycle-fixture treatment:
-    # the DatabaseTxnSink batches and the snapshot-table commits this
-    # fixture drives are tiny static plans whose AQE stage
-    # materialization costs 3-4 scheduler round-trips per join for
-    # zero re-planning benefit (streaming queries never use AQE, so
-    # only the eager batch legs change execution, not results).
-    # Since r14 the scope also disables AUTO broadcast planning, the
-    # lifecycle._few_shuffle_partitions treatment: the sized
-    # LocalRelation literals flipped the DatabaseTxnSink legs' tiny
-    # joins to BroadcastHashJoin, whose BroadcastExchange is its own
-    # driver job — at fixture size the extra scheduler round-trip
-    # costs more than the one-job shuffle join. Results are
-    # plan-independent and hash-gated; restored in the finally.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # every eager job and micro-batch of this fixture runs under
+    # session.fixture_conf (8 state stores per stateful batch, no AQE
+    # stage jobs, no BroadcastExchange jobs in the DatabaseTxnSink
+    # legs); the result is localCheckpoint-ed before the scope restores
+    # the caller's conf
     try:
-        src = os.path.join(tmp, "batches")
-        os.makedirs(src)
-        sentinel = literal_df(
-            spark,
-            [(-1, hi + datetime.timedelta(hours=2), 0.0)],
-            "user_id long, ts timestamp, value double",
-        )
-        # ONE staging job for all four batch files: tag each row with
-        # its tercile (sentinel = 3), hash-cluster on the tag so each
-        # batch lands as a single file, then flatten to plain files
-        # (the file-stream source lists files, not partition dirs) with
-        # explicitly increasing mtimes — the source replays files in
-        # (timestamp, path) order, and second-granularity write times
-        # from one job could tie.
-        tagged = ev.withColumn(
-            "b",
-            F.when(F.col("ts") < lo + span, 0)
-            .when(F.col("ts") < lo + 2 * span, 1)
-            .otherwise(2),
-        ).unionByName(sentinel.withColumn("b", F.lit(3)))
-        stage = os.path.join(tmp, "stage")
-        tagged.repartition("b").write.partitionBy("b").parquet(stage)
-        import time as _time
+        with fixture_conf(spark):
+            src = os.path.join(tmp, "batches")
+            os.makedirs(src)
+            sentinel = literal_df(
+                spark,
+                [(-1, hi + datetime.timedelta(hours=2), 0.0)],
+                "user_id long, ts timestamp, value double",
+            )
+            # ONE staging job for all four batch files: tag each row with
+            # its tercile (sentinel = 3), hash-cluster on the tag so each
+            # batch lands as a single file, then flatten to plain files
+            # (the file-stream source lists files, not partition dirs) with
+            # explicitly increasing mtimes — the source replays files in
+            # (timestamp, path) order, and second-granularity write times
+            # from one job could tie.
+            tagged = ev.withColumn(
+                "b",
+                F.when(F.col("ts") < lo + span, 0)
+                .when(F.col("ts") < lo + 2 * span, 1)
+                .otherwise(2),
+            ).unionByName(sentinel.withColumn("b", F.lit(3)))
+            stage = os.path.join(tmp, "stage")
+            tagged.repartition("b").write.partitionBy("b").parquet(stage)
+            import time as _time
 
-        now = _time.time()
-        for i in range(4):
-            bdir = os.path.join(stage, f"b={i}")
-            pfs = [p for p in os.listdir(bdir) if p.endswith(".parquet")]
-            if len(pfs) != 1:
-                # the repartition('b') clustering must land each batch
-                # as ONE file; a writer setting (e.g. maxRecordsPerFile)
-                # splitting it would silently scramble the replay order
-                # this fixture depends on — fail loudly (r10 ADVICE)
-                raise RuntimeError(
-                    f"staging batch b={i} produced {len(pfs)} parquet files "
-                    f"(expected exactly 1): {sorted(pfs)} — a writer conf "
-                    "is splitting batches; the ordered-replay fixture "
-                    "requires one file per tercile"
+            now = _time.time()
+            for i in range(4):
+                bdir = os.path.join(stage, f"b={i}")
+                pfs = [p for p in os.listdir(bdir) if p.endswith(".parquet")]
+                if len(pfs) != 1:
+                    # the repartition('b') clustering must land each batch
+                    # as ONE file; a writer setting (e.g. maxRecordsPerFile)
+                    # splitting it would silently scramble the replay order
+                    # this fixture depends on — fail loudly (r10 ADVICE)
+                    raise RuntimeError(
+                        f"staging batch b={i} produced {len(pfs)} parquet files "
+                        f"(expected exactly 1): {sorted(pfs)} — a writer conf "
+                        "is splitting batches; the ordered-replay fixture "
+                        "requires one file per tercile"
+                    )
+                (pf,) = pfs
+                dst = os.path.join(src, f"b{i}.parquet")
+                os.rename(os.path.join(bdir, pf), dst)
+                os.utime(dst, (now - 40 + 10 * i, now - 40 + 10 * i))
+            schema = spark.read.parquet(os.path.join(src, "b0.parquet")).schema
+            # TWO files per trigger → two real micro-batches per query
+            # ({t0,t1} then {t2,sentinel}): state still crosses a batch
+            # boundary and the sentinel still closes every session at the
+            # final watermark, at half the micro-batch scheduling + state
+            # store setup cost of one-file-per-trigger (round-11 verdict
+            # item 5 — this union was the bench's dominant fixed cost).
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(src)
+                .withWatermark("ts", "1 minute")
+            )
+            # ONE combined stateful query for both custom operators (r14
+            # opt): spend and sessionization key state identically
+            # (user_id), so running them as separate availableNow queries
+            # paid micro-batch planning + file listing + state-store setup
+            # twice. spend_sessions_stream holds both states in one store
+            # and emits tagged rows; the legs below split on `kind`. The
+            # multi-micro-batch / state-crossing / EventTimeTimeout proof
+            # is unchanged — same staged files, same two-files-per-trigger
+            # slicing, same sentinel-driven final watermark.
+            comb_q = (
+                SS.spend_sessions_stream(stream)
+                .writeStream.format("memory")
+                .queryName(spend_name)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            seed = literal_df(spark, [], "user_id long, n_events long, total_value double")
+            snap = SnapshotTable.create(
+                spark, os.path.join(tmp, "sink_t"), seed, key_cols=["user_id"]
+            )
+            sink = SnapshotUpsertSink(snap, sink_id="spend")
+            sink_q = (
+                stream.groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).alias("n_events"),
+                    F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
+                    .cast("double")
+                    .alias("total_value"),
                 )
-            (pf,) = pfs
-            dst = os.path.join(src, f"b{i}.parquet")
-            os.rename(os.path.join(bdir, pf), dst)
-            os.utime(dst, (now - 40 + 10 * i, now - 40 + 10 * i))
-        schema = spark.read.parquet(os.path.join(src, "b0.parquet")).schema
-        # TWO files per trigger → two real micro-batches per query
-        # ({t0,t1} then {t2,sentinel}): state still crosses a batch
-        # boundary and the sentinel still closes every session at the
-        # final watermark, at half the micro-batch scheduling + state
-        # store setup cost of one-file-per-trigger (round-11 verdict
-        # item 5 — this union was the bench's dominant fixed cost).
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .withWatermark("ts", "1 minute")
-        )
-        # ONE combined stateful query for both custom operators (r14
-        # opt): spend and sessionization key state identically
-        # (user_id), so running them as separate availableNow queries
-        # paid micro-batch planning + file listing + state-store setup
-        # twice. spend_sessions_stream holds both states in one store
-        # and emits tagged rows; the legs below split on `kind`. The
-        # multi-micro-batch / state-crossing / EventTimeTimeout proof
-        # is unchanged — same staged files, same two-files-per-trigger
-        # slicing, same sentinel-driven final watermark.
-        comb_q = (
-            SS.spend_sessions_stream(stream)
-            .writeStream.format("memory")
-            .queryName(spend_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        seed = literal_df(spark, [], "user_id long, n_events long, total_value double")
-        snap = SnapshotTable.create(
-            spark, os.path.join(tmp, "sink_t"), seed, key_cols=["user_id"]
-        )
-        sink = SnapshotUpsertSink(snap, sink_id="spend")
-        sink_q = (
-            stream.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-                .cast("double")
-                .alias("total_value"),
+                .writeStream.outputMode("update")
+                .foreachBatch(sink)
+                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
             )
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        queries += [comb_q, sink_q]
-        # --- multi-table exactly-once sink (stream_db_sink) ---------
-        # Runs NOW, on the driver thread, WHILE the streaming
-        # queries execute on their scheduler threads (guide §2.6 —
-        # overlap independent jobs): the DatabaseTxnSink legs read the
-        # staged files directly and touch only their own database
-        # directory, so the eager batch jobs back-fill executor slots
-        # the micro-batches leave idle instead of running serially
-        # after them. awaitTermination moves below this block.
-        from herodb_spark.sources.database import SnapshotDatabase
-        from herodb_spark.streaming.sink import DatabaseTxnSink
+            queries += [comb_q, sink_q]
+            # --- multi-table exactly-once sink (stream_db_sink) ---------
+            # Runs NOW, on the driver thread, WHILE the streaming
+            # queries execute on their scheduler threads (guide §2.6 —
+            # overlap independent jobs): the DatabaseTxnSink legs read the
+            # staged files directly and touch only their own database
+            # directory, so the eager batch jobs back-fill executor slots
+            # the micro-batches leave idle instead of running serially
+            # after them. awaitTermination moves below this block.
+            from herodb_spark.sources.database import SnapshotDatabase
+            from herodb_spark.streaming.sink import DatabaseTxnSink
 
-        db = SnapshotDatabase.create(spark, os.path.join(tmp, "db"))
-        db.create_table(
-            "t_units", literal_df(spark, [], "user_id long, units long"),
-            key_cols=["user_id"],
-        )
-        db.create_table(
-            "t_counts", literal_df(spark, [], "user_id long, n long"),
-            key_cols=["user_id"],
-        )
-
-        def route_units(b: DataFrame) -> DataFrame:
-            delta = b.groupBy("user_id").agg(
-                F.sum((F.col("value").cast("decimal(18,4)") * 10000).cast("long")).alias("d")
+            db = SnapshotDatabase.create(spark, os.path.join(tmp, "db"))
+            db.create_table(
+                "t_units", literal_df(spark, [], "user_id long, units long"),
+                key_cols=["user_id"],
             )
-            cur = db.read("t_units")
-            return delta.join(cur, "user_id", "left").select(
+            db.create_table(
+                "t_counts", literal_df(spark, [], "user_id long, n long"),
+                key_cols=["user_id"],
+            )
+
+            def route_units(b: DataFrame) -> DataFrame:
+                delta = b.groupBy("user_id").agg(
+                    F.sum((F.col("value").cast("decimal(18,4)") * 10000).cast("long")).alias("d")
+                )
+                cur = db.read("t_units")
+                return delta.join(cur, "user_id", "left").select(
+                    "user_id",
+                    (F.col("d") + F.coalesce(F.col("units"), F.lit(0))).alias("units"),
+                )
+
+            def route_counts(b: DataFrame) -> DataFrame:
+                delta = b.groupBy("user_id").agg(F.count(F.lit(1)).alias("d"))
+                cur = db.read("t_counts")
+                return delta.join(cur, "user_id", "left").select(
+                    "user_id",
+                    (F.col("d") + F.coalesce(F.col("n"), F.lit(0))).alias("n"),
+                )
+
+            dsink = DatabaseTxnSink(
+                db, routes={"t_units": route_units, "t_counts": route_counts},
+                sink_id="pipe",
+            )
+            # two batches, matching the stream's two-files-per-trigger
+            # slicing — exactly what foreachBatch would feed the sink; the
+            # cumulative read-modify-write still crosses a batch boundary
+            for i, files in enumerate((("b0", "b1"), ("b2", "b3"))):
+                batch = spark.read.parquet(*[os.path.join(src, f"{b}.parquet") for b in files])
+                dsink(batch, i)
+            # stale replay of batch 0: the (sink_id, batch_id) watermark
+            # must no-op it or the cumulative tables double-count batch 0
+            dsink(
+                spark.read.parquet(
+                    os.path.join(src, "b0.parquet"), os.path.join(src, "b1.parquet")
+                ),
+                0,
+            )
+            for q in (comb_q, sink_q):
+                # a False return means the query is STILL RUNNING — the
+                # legs would read partial state and the driver would see
+                # an opaque hash mismatch; fail loudly instead
+                if not q.awaitTermination(300):
+                    raise TimeoutError(f"streaming query {q.name} did not finish in 300s")
+            # exactly-once proof inside the graded plan: replay a STALE
+            # batch (zeroed totals, batch_id=0). The sink's watermark must
+            # no-op it — a naive sink would upsert the zeros and the
+            # driver's hash check would catch it.
+            stale = snap.read().select(
                 "user_id",
-                (F.col("d") + F.coalesce(F.col("units"), F.lit(0))).alias("units"),
+                F.lit(0).cast("long").alias("n_events"),
+                F.lit(0.0).alias("total_value"),
             )
-
-        def route_counts(b: DataFrame) -> DataFrame:
-            delta = b.groupBy("user_id").agg(F.count(F.lit(1)).alias("d"))
-            cur = db.read("t_counts")
-            return delta.join(cur, "user_id", "left").select(
-                "user_id",
-                (F.col("d") + F.coalesce(F.col("n"), F.lit(0))).alias("n"),
+            sink(stale, 0)
+            db_units = (
+                db.read("t_units")
+                .where(F.col("user_id") >= 0)
+                .select(
+                    F.lit("db_sink_units").alias("win_kind"),
+                    F.lit(None).cast("string").alias("window_start"),
+                    F.col("user_id").cast("string").alias("event_type"),
+                    F.lit(None).cast("long").alias("n_events"),
+                    F.round(F.col("units") / 10000.0, 2).alias("total_value"),
+                )
             )
-
-        dsink = DatabaseTxnSink(
-            db, routes={"t_units": route_units, "t_counts": route_counts},
-            sink_id="pipe",
-        )
-        # two batches, matching the stream's two-files-per-trigger
-        # slicing — exactly what foreachBatch would feed the sink; the
-        # cumulative read-modify-write still crosses a batch boundary
-        for i, files in enumerate((("b0", "b1"), ("b2", "b3"))):
-            batch = spark.read.parquet(*[os.path.join(src, f"{b}.parquet") for b in files])
-            dsink(batch, i)
-        # stale replay of batch 0: the (sink_id, batch_id) watermark
-        # must no-op it or the cumulative tables double-count batch 0
-        dsink(
-            spark.read.parquet(
-                os.path.join(src, "b0.parquet"), os.path.join(src, "b1.parquet")
-            ),
-            0,
-        )
-        for q in (comb_q, sink_q):
-            # a False return means the query is STILL RUNNING — the
-            # legs would read partial state and the driver would see
-            # an opaque hash mismatch; fail loudly instead
-            if not q.awaitTermination(300):
-                raise TimeoutError(f"streaming query {q.name} did not finish in 300s")
-        # exactly-once proof inside the graded plan: replay a STALE
-        # batch (zeroed totals, batch_id=0). The sink's watermark must
-        # no-op it — a naive sink would upsert the zeros and the
-        # driver's hash check would catch it.
-        stale = snap.read().select(
-            "user_id",
-            F.lit(0).cast("long").alias("n_events"),
-            F.lit(0.0).alias("total_value"),
-        )
-        sink(stale, 0)
-        db_units = (
-            db.read("t_units")
-            .where(F.col("user_id") >= 0)
-            .select(
-                F.lit("db_sink_units").alias("win_kind"),
-                F.lit(None).cast("string").alias("window_start"),
-                F.col("user_id").cast("string").alias("event_type"),
-                F.lit(None).cast("long").alias("n_events"),
-                F.round(F.col("units") / 10000.0, 2).alias("total_value"),
+            db_counts = (
+                db.read("t_counts")
+                .where(F.col("user_id") >= 0)
+                .select(
+                    F.lit("db_sink_counts").alias("win_kind"),
+                    F.lit(None).cast("string").alias("window_start"),
+                    F.col("user_id").cast("string").alias("event_type"),
+                    F.col("n").alias("n_events"),
+                    F.lit(None).cast("double").alias("total_value"),
+                )
             )
-        )
-        db_counts = (
-            db.read("t_counts")
-            .where(F.col("user_id") >= 0)
-            .select(
-                F.lit("db_sink_counts").alias("win_kind"),
-                F.lit(None).cast("string").alias("window_start"),
-                F.col("user_id").cast("string").alias("event_type"),
-                F.col("n").alias("n_events"),
-                F.lit(None).cast("double").alias("total_value"),
+            sink_leg = (
+                snap.read()
+                .where(F.col("user_id") >= 0)
+                .select(
+                    F.lit("snapshot_sink_spend").alias("win_kind"),
+                    F.lit(None).cast("string").alias("window_start"),
+                    F.col("user_id").cast("string").alias("event_type"),
+                    "n_events",
+                    "total_value",
+                )
             )
-        )
-        sink_leg = (
-            snap.read()
-            .where(F.col("user_id") >= 0)
-            .select(
-                F.lit("snapshot_sink_spend").alias("win_kind"),
-                F.lit(None).cast("string").alias("window_start"),
-                F.col("user_id").cast("string").alias("event_type"),
-                "n_events",
-                "total_value",
+            comb = spark.table(spend_name).where(F.col("user_id") >= 0)
+            w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+            spend = (
+                comb.where(F.col("kind") == "spend")
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select(
+                    F.lit("stateful_spend").alias("win_kind"),
+                    F.lit(None).cast("string").alias("window_start"),
+                    F.col("user_id").cast("string").alias("event_type"),
+                    "n_events",
+                    "total_value",
+                )
             )
-        )
-        comb = spark.table(spend_name).where(F.col("user_id") >= 0)
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        spend = (
-            comb.where(F.col("kind") == "spend")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                F.lit("stateful_spend").alias("win_kind"),
-                F.lit(None).cast("string").alias("window_start"),
-                F.col("user_id").cast("string").alias("event_type"),
-                "n_events",
-                "total_value",
+            sess = (
+                comb.where(F.col("kind") == "session")
+                .select(
+                    F.lit("stateful_session_30m").alias("win_kind"),
+                    F.col("session_start").alias("window_start"),
+                    F.concat_ws(
+                        "|", F.col("user_id").cast("string"), "session_end"
+                    ).alias("event_type"),
+                    "n_events",
+                    "total_value",
+                )
             )
-        )
-        sess = (
-            comb.where(F.col("kind") == "session")
-            .select(
-                F.lit("stateful_session_30m").alias("win_kind"),
-                F.col("session_start").alias("window_start"),
-                F.concat_ws(
-                    "|", F.col("user_id").cast("string"), "session_end"
-                ).alias("event_type"),
-                "n_events",
-                "total_value",
+            return (
+                spend.unionByName(sess).unionByName(sink_leg)
+                .unionByName(db_units).unionByName(db_counts)
+                .localCheckpoint(eager=True)
             )
-        )
-        return (
-            spend.unionByName(sess).unionByName(sink_leg)
-            .unionByName(db_units).unionByName(db_counts)
-            .localCheckpoint(eager=True)
-        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
         for q in queries:  # availableNow self-terminates; belt-and-braces
             if q.isActive:
                 q.stop()

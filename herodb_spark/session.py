@@ -10,6 +10,7 @@ pinned to UTC so timestamp semantics are deployment-independent.
 from __future__ import annotations
 
 import calendar
+import contextlib
 import datetime
 import math
 import os
@@ -117,6 +118,51 @@ def literal_df(spark: SparkSession, rows: list, schema) -> "DataFrame":
     if sql is not None:
         return spark.sql(sql)
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+#: the settings `fixture_conf` pins for the duration of its body
+_FIXTURE_CONF = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+@contextlib.contextmanager
+def fixture_conf(spark: SparkSession):
+    """Conf scope for operators whose EAGER work (checkpoints, snapshot
+    commits, streaming micro-batches) runs over fixture-sized frames:
+    dozens of tiny actions whose cost is scheduler round-trips, not
+    data. Three settings change, each for its own reason:
+
+    - ``shuffle.partitions=8``: a stateful streaming operator opens one
+      state store per shuffle partition per micro-batch, and every tiny
+      exchange pays one task per partition — the session's per-core
+      count buys no parallelism on 25-row frames;
+    - ``adaptive.enabled=false``: AQE materializes each join's shuffle
+      stages as separate Spark jobs, so a tiny mutation commit
+      (anti-join + write) pays 3-4 jobs instead of 1 for plans whose
+      static estimates already pick the right shape;
+    - ``autoBroadcastJoinThreshold=-1``: sized LocalRelation literals
+      flip tiny joins to BroadcastHashJoin, and each BroadcastExchange
+      is its own driver job, costlier at this size than the one-job
+      shuffle join it replaces.
+
+    Results are plan-independent (hash-gated); only job counts move.
+    The caller's values are restored on exit, also when the body
+    raises. The scope sets and restores on the CALLER's session, not a
+    ``spark.newSession()``: a frame built in another session keeps
+    planning under that session's conf, so the lazily returned legs
+    would stop re-planning at the caller's settings. Production-scale
+    callers keep their session's AQE and broadcast planning."""
+    prev = {k: spark.conf.get(k) for k in _FIXTURE_CONF}
+    for k, v in _FIXTURE_CONF.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def run_overlapped(*fns) -> None:

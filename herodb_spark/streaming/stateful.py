@@ -3,17 +3,23 @@ the Spark-native form of herodb's incremental computed tables
 (`data ... :- rule` with Cache index, Kernel/Drafts/draft:55-75):
 state that updates as the log grows.
 
-Operator: per-user running spend monitor. For each user, maintain
-(total_value, n_events) across micro-batches and emit one row per
-batch with the updated totals — i.e. an incrementally-maintained
-aggregate, the streaming analog of a cached computed table.
+Operator: `spend_sessions_stream`, ONE per-user operator holding two
+folds in one state row (both key on user_id, so one state store,
+one round of micro-batch planning and one file listing serve both):
 
-Works in both modes:
-- streaming: groupBy(user_id).applyInPandasWithState(...) with
-  GroupStateTimeout.NoTimeout — state lives in the state store,
-  scales horizontally by key.
-- batch (for tests/oracle): the same fold expressed as a groupBy —
-  identical results when the whole log is one batch.
+- running spend — (n_events, total_value) across micro-batches,
+  emitted as a kind='spend' row per touched user per batch (update
+  semantics): an incrementally-maintained aggregate, the streaming
+  analog of a cached computed table;
+- gap sessionization with EVENT-TIME TIMEOUT — the full custom
+  stateful shape (state + watermark-driven expiry), vs the built-in
+  F.session_window used by streaming/ops.sessionize. Closed sessions
+  are emitted as kind='session' rows; the open tail session stays in
+  the state store until the watermark passes its last event + gap.
+
+The batch folds `running_spend_batch` and `sessionize_sessions_batch`
+are the oracles: the final spend row per user equals the former, and
+every closed session equals one of the latter's sessions.
 """
 
 from __future__ import annotations
@@ -25,180 +31,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
-STATE_SCHEMA = "n long, total double"
-
-
-def _update_user_state(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, total = state.get
-    else:
-        n, total = 0, 0.0
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_value": [round(total, 2)]})
-
-
-def running_spend_stream(events_stream: DataFrame) -> DataFrame:
-    """Streaming form: incrementally-maintained per-user totals."""
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_state,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def running_spend_batch(events: DataFrame) -> DataFrame:
-    """Batch-equivalent fold (single micro-batch semantics)."""
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# custom gap sessionization with EVENT-TIME TIMEOUT — the full custom
-# stateful-operator shape (state + watermark-driven expiry), vs the
-# built-in F.session_window used by streaming/ops.sessionize.
-# ---------------------------------------------------------------------------
-
 SESSION_GAP_US = 30 * 60 * 1_000_000
-SESSION_OUTPUT_SCHEMA = (
-    "user_id long, session_start string, session_end string, n_events long, total_value double"
+OUTPUT_SCHEMA = (
+    "user_id long, kind string, session_start string, session_end string, "
+    "n_events long, total_value double"
 )
-SESSION_STATE_SCHEMA = "start long, last long, n long, total double"  # µs epoch
+#: spend fold (n, total) + open session (s, l: µs epoch; sn, st) + flag
+STATE_SCHEMA = (
+    "n long, total double, s long, l long, sn long, st double, open boolean"
+)
 
 
 def _fmt_us(us: int) -> str:
     return pd.Timestamp(us, unit="us").strftime("%Y-%m-%d %H:%M:%S")
-
-
-def _update_session_state(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-user gap sessionization. Sessions close two ways:
-    (a) a later event for the same user arrives >= gap after the last
-    one (observed in-batch), or (b) the event-time watermark passes
-    last_ts + gap with no new event — the state TIMEOUT, which is what
-    applyInPandasWithState adds over a stateless transform. Emitted
-    rows are CLOSED sessions only (append semantics); the open tail
-    session stays in the state store."""
-    (user_id,) = key
-    closed: list[dict] = []
-
-    def emit(s: int, l: int, n: int, t: float) -> None:
-        closed.append(
-            {
-                "user_id": user_id,
-                "session_start": _fmt_us(s),
-                "session_end": _fmt_us(l),
-                "n_events": n,
-                "total_value": round(t, 2),
-            }
-        )
-
-    if state.hasTimedOut:
-        if state.exists:
-            s, l, n, t = state.get
-            emit(s, l, n, t)
-        state.remove()
-    else:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values("ts")
-        ts = pdf["ts"].astype("datetime64[ns]").astype("int64").to_numpy() // 1_000
-        vals = pdf["value"].to_numpy(dtype="float64")
-        # INTERVAL FOLD: the carried open session [s, l] participates
-        # as one item alongside the batch events (each a point item),
-        # all sorted by start; consecutive items merge when the next
-        # start is strictly within `gap` of the current end — the same
-        # boundary as F.session_window and the graded lag+cumsum
-        # sessionizer (split at exactly gap). This is what makes
-        # out-of-order (within-watermark) arrivals correct: an event
-        # between two batch events that individually look > gap apart
-        # still bridges them through the carried interval, and a late
-        # event more than gap BEFORE the carried start forms its own
-        # (already closed) session instead of silently merging.
-        items = [[int(x), int(x), 1, float(v)] for x, v in zip(ts, vals)]
-        if state.exists:
-            s, l, n, t = state.get
-            items.append([int(s), int(l), int(n), float(t)])
-        items.sort(key=lambda it: (it[0], it[1]))
-        merged = [items[0]]
-        for it in items[1:]:
-            cur = merged[-1]
-            if it[0] - cur[1] >= SESSION_GAP_US:
-                merged.append(it)
-            else:
-                cur[1] = max(cur[1], it[1])
-                cur[2] += it[2]
-                cur[3] += it[3]
-        for s_, l_, n_, t_ in merged[:-1]:
-            emit(s_, l_, n_, t_)
-        s, l, n, t = merged[-1]
-        state.update((int(s), int(l), int(n), float(t)))
-        # expire when the watermark passes last + gap (epoch millis)
-        state.setTimeoutTimestamp((int(l) + SESSION_GAP_US) // 1_000)
-    yield pd.DataFrame(
-        closed
-        or {
-            "user_id": pd.Series(dtype="int64"),
-            "session_start": pd.Series(dtype="object"),
-            "session_end": pd.Series(dtype="object"),
-            "n_events": pd.Series(dtype="int64"),
-            "total_value": pd.Series(dtype="float64"),
-        }
-    )
-
-
-def sessionize_stateful_stream(events_stream: DataFrame) -> DataFrame:
-    """Streaming form: custom gap sessionization with event-time
-    timeout expiry. Input must carry a watermark on `ts`."""
-    return (
-        events_stream.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_session_state,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# combined spend + sessionization in ONE stateful operator — the
-# fixture-collapse form (r14 opt, guide §1.2/§2.6): stream_window_aggs
-# ran running_spend_stream and sessionize_stateful_stream as TWO
-# availableNow queries over the same staged files, paying the
-# micro-batch planning, file-source listing and state-store setup
-# twice for state keyed identically (user_id). One operator holds both
-# states and emits tagged rows; the graded legs split on `kind`. Each
-# single-purpose operator above stays the library surface.
-# ---------------------------------------------------------------------------
-
-COMBINED_OUTPUT_SCHEMA = (
-    "user_id long, kind string, session_start string, session_end string, "
-    "n_events long, total_value double"
-)
-COMBINED_STATE_SCHEMA = (
-    "n long, total double, s long, l long, sn long, st double, open boolean"
-)
 
 
 def _update_spend_session_state(
@@ -207,14 +52,17 @@ def _update_spend_session_state(
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     """Spend fold + interval-fold sessionization over one shared
-    per-user state row. Data batches update both folds and emit one
-    'spend' row (update semantics — n_events strictly monotone per
-    user, so the max-n row is the final state) plus a 'session' row
-    per CLOSED session; the event-time timeout emits the final open
-    session and KEEPS the spend accumulators (update + no new timeout
-    — the session's expiry must not erase the running totals, which is
-    why the plain sessionizer's state.remove() is not reusable
-    here)."""
+    per-user state row. Sessions close two ways: (a) a later event for
+    the same user arrives >= gap after the last one (observed
+    in-batch), or (b) the event-time watermark passes last + gap with
+    no new event — the state TIMEOUT, which is what
+    applyInPandasWithState adds over a stateless transform. Data
+    batches update both folds and emit one 'spend' row (update
+    semantics — n_events strictly monotone per user, so the max-n row
+    is the final state) plus a 'session' row per CLOSED session; the
+    timeout emits the open session and KEEPS the spend accumulators
+    (update + no new timeout, never state.remove(): the session's
+    expiry must not erase the running totals)."""
     (user_id,) = key
     rows: list[dict] = []
 
@@ -244,7 +92,17 @@ def _update_spend_session_state(
         pdf = pdf.sort_values("ts")
         ts = pdf["ts"].astype("datetime64[ns]").astype("int64").to_numpy() // 1_000
         vals = pdf["value"].to_numpy(dtype="float64")
-        # identical interval fold to _update_session_state
+        # INTERVAL FOLD: the carried open session [s, l] participates
+        # as one item alongside the batch events (each a point item),
+        # all sorted by start; consecutive items merge when the next
+        # start is strictly within `gap` of the current end — the same
+        # boundary as F.session_window and the graded lag+cumsum
+        # sessionizer (split at exactly gap). This is what makes
+        # out-of-order (within-watermark) arrivals correct: an event
+        # between two batch events that individually look > gap apart
+        # still bridges them through the carried interval, and a late
+        # event more than gap BEFORE the carried start forms its own
+        # (already closed) session instead of silently merging.
         items = [[int(x), int(x), 1, float(v)] for x, v in zip(ts, vals)]
         if is_open:
             items.append([int(s), int(l), int(sn), float(st)])
@@ -262,6 +120,7 @@ def _update_spend_session_state(
             rows.append(session_row(s_, l_, n_, t_))
         s, l, sn, st = merged[-1]
         state.update((int(n), float(total), int(s), int(l), int(sn), float(st), True))
+        # expire when the watermark passes last + gap (epoch millis)
         state.setTimeoutTimestamp((int(l) + SESSION_GAP_US) // 1_000)
         rows.append(
             {
@@ -287,18 +146,17 @@ def _update_spend_session_state(
 
 
 def spend_sessions_stream(events_stream: DataFrame) -> DataFrame:
-    """Streaming form of the combined operator. Input must carry a
-    watermark on `ts`. Emits kind='spend' update rows (per batch per
-    touched user) and kind='session' append rows (closed sessions) —
-    byte-identical to what running_spend_stream and
-    sessionize_stateful_stream emit separately on the same batches."""
+    """Streaming form. Input must carry a watermark on `ts`. Emits
+    kind='spend' rows (one per batch per touched user; the last one
+    per user is its running total) and kind='session' rows (each
+    closed session exactly once)."""
     return (
         events_stream.select("user_id", "ts", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
             _update_spend_session_state,
-            outputStructType=COMBINED_OUTPUT_SCHEMA,
-            stateStructType=COMBINED_STATE_SCHEMA,
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
@@ -333,4 +191,12 @@ def sessionize_sessions_batch(events: DataFrame) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
         .drop("sess")
+    )
+
+
+def running_spend_batch(events: DataFrame) -> DataFrame:
+    """Batch-equivalent fold (single micro-batch semantics)."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
     )

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for the round-13 optimization targets
-into plans/r13/<query>_<tag>.txt (tag = before|after). Explain only —
+"""Dump .explain("formatted") for the optimization-target queries
+into <round_dir>/<query>_<tag>.txt (tag = before|after). Explain only —
 no jobs run, except where a query function itself executes eager
 fixture work (snapshot_lifecycle, stream_window_aggs), whose returned
 leg-union plan is still the honest final plan.
 
-Usage: python scripts/plans_r13.py <before|after> [query ...]
+Usage: python scripts/plans_dump.py <round_dir> <before|after> [query ...]
+e.g.   python scripts/plans_dump.py plans/r14 after graph_pagerank
 """
 
 from __future__ import annotations
@@ -56,6 +57,7 @@ def _queries():
         "text_filter_cascade": X.text_filter_cascade,
         "text_bm25_topk": X.text_bm25_topk,
         "dedup_incremental_minhash": D.dedup_incremental_minhash,
+        "dedup_split_leakage": D.dedup_split_leakage,
         "graph_adamic_adar": GX.graph_adamic_adar,
         "sim_hybrid_rrf": S.sim_hybrid_rrf,
         "events_transition_matrix": O.events_transition_matrix,
@@ -65,13 +67,13 @@ def _queries():
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    assert tag in ("before", "after"), "tag must be before|after"
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    outdir, tag = sys.argv[1], sys.argv[2]
     queries = _queries()
-    wanted = sys.argv[2:] or list(queries)
-    spark = get_spark("plans_r13")
+    wanted = sys.argv[3:] or list(queries)
+    spark = get_spark("plans_dump")
     spark.sparkContext.setLogLevel("ERROR")
-    outdir = os.path.join(REPO, "plans", "r13")
     os.makedirs(outdir, exist_ok=True)
     for name in wanted:
         df = queries[name](spark, SF_DIR)

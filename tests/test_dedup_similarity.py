@@ -125,14 +125,6 @@ def test_emb_lsh_bucket_sizes_bounded_beyond_default_regime(spark):
     assert biggest <= 2 * D.EMB_LSH_TARGET_BUCKET, biggest
 
 
-def test_label_centroids_pandas_variant_matches_builtin(spark, sf_dir):
-    """The grouped-applyInPandas centroid demo must equal the graded
-    built-in posexplode+partial-agg plan."""
-    a = S.label_centroids(spark, sf_dir).collect()
-    b = S.label_centroids_pandas(spark, sf_dir).collect()
-    assert a == b
-
-
 def test_ngram_df_cap_preserves_exactness_on_testdata(spark, sf_dir):
     """With a cap above the corpus max shingle-df, the capped path must
     reproduce the exact pair set (candidate pruning never fires; the

@@ -5,25 +5,21 @@ from herodb_spark.streaming import ops as SO
 from herodb_spark.streaming import stateful as SS
 
 
-def test_stateful_running_spend_matches_batch(spark, sf_dir):
-    stream_in = SO.stream_events(spark, sf_dir)
-    q = (
-        SS.running_spend_stream(stream_in)
-        .writeStream.format("memory")
-        .queryName("t_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # update mode may emit once per micro-batch per key; keep the last
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM t_state").collect()
-    }
+def _final_spend(rows) -> dict:
+    """user_id -> (n_events, total_value) of the LAST spend emission:
+    update mode emits once per micro-batch per touched user, and
+    n_events is strictly monotone per user, so the max-n row is it."""
+    got: dict = {}
+    for r in rows:
+        if r.kind == "spend" and r.n_events > got.get(r.user_id, (0, 0.0))[0]:
+            got[r.user_id] = (r.n_events, r.total_value)
+    return got
+
+
+def _assert_spend_matches_batch(got: dict, events) -> None:
     want = {
         r.user_id: (r.n_events, r.total_value)
-        for r in SS.running_spend_batch(load_table(spark, sf_dir, "events")).collect()
+        for r in SS.running_spend_batch(events).collect()
     }
     assert set(got) == set(want)
     for uid, (n, total) in want.items():
@@ -32,13 +28,32 @@ def test_stateful_running_spend_matches_batch(spark, sf_dir):
         assert abs(gt - total) < 0.05, (uid, gt, total)
 
 
+def test_stateful_running_spend_matches_batch(spark, sf_dir):
+    stream_in = SO.stream_events(spark, sf_dir)
+    q = (
+        SS.spend_sessions_stream(stream_in)
+        .writeStream.format("memory")
+        .queryName("t_state")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    _assert_spend_matches_batch(
+        _final_spend(spark.sql("SELECT * FROM t_state").collect()),
+        load_table(spark, sf_dir, "events"),
+    )
+
+
 def test_stateful_sessionize_across_microbatches(spark, sf_dir, tmp_path):
     """Custom gap sessionization with EventTimeTimeout, driven through
     THREE time-ordered micro-batches so sessions genuinely span batch
     boundaries and close both ways (in-batch gap AND watermark
     timeout). Every session that ended comfortably before the final
     watermark must be emitted exactly once with batch-identical stats;
-    the open tails may legitimately stay in the state store."""
+    the open tails may legitimately stay in the state store. The spend
+    fold shares the state row, so its last emission per user must
+    equal the whole-log totals."""
     from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
@@ -67,18 +82,23 @@ def test_stateful_sessionize_across_microbatches(spark, sf_dir, tmp_path):
         .withWatermark("ts", "1 minute")
     )
     q = (
-        SS.sessionize_stateful_stream(stream)
+        SS.spend_sessions_stream(stream)
         .writeStream.format("memory")
         .queryName("t_sess_state")
-        .outputMode("append")
+        .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
+    out = spark.sql("SELECT * FROM t_sess_state").collect()
+    # the spend fold carries its state across the same three batches
+    _assert_spend_matches_batch(_final_spend(out), ev)
+    sess = [r for r in out if r.kind == "session"]
     got = {
         (r.user_id, r.session_start): (r.session_end, r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM t_sess_state").collect()
+        for r in sess
     }
+    assert len(got) == len(sess), "a closed session was emitted twice"
     batch = SS.sessionize_sessions_batch(ev).collect()
     want_all = {
         (r.user_id, r.session_start): (r.session_end, r.n_events, r.total_value)
@@ -133,15 +153,47 @@ def test_stateful_sessionize_late_event_extends_backwards():
 
     base = pd.Timestamp("2024-01-01 10:00:00").value // 1_000  # µs
     MIN = 60 * 1_000_000
-    state = _FakeState(value=(base, base + 5 * MIN, 2, 10.0))  # open 10:00-10:05
+    # spend (2, 10.0); open session 10:00-10:05 of 2 events, 10.0
+    state = _FakeState(value=(2, 10.0, base, base + 5 * MIN, 2, 10.0, True))
     late = pd.DataFrame(
         {"user_id": [7], "ts": [pd.Timestamp("2024-01-01 09:45:00")], "value": [1.0]}
     )
-    out = list(SS._update_session_state((7,), iter([late]), state))
-    assert len(out) == 1 and out[0].empty  # nothing closed
-    s, l, n, t = state.get
+    out = list(SS._update_spend_session_state((7,), iter([late]), state))
+    assert len(out) == 1
+    # nothing closed: the only row is the updated running spend
+    assert out[0]["kind"].tolist() == ["spend"]
+    assert out[0]["n_events"].tolist() == [3]
+    n, total, s, l, sn, st, is_open = state.get
+    assert (n, total) == (3, 11.0)
     assert s == base - 15 * MIN, "session_start must move back to 09:45"
-    assert l == base + 5 * MIN and n == 3 and abs(t - 11.0) < 1e-9
+    assert l == base + 5 * MIN and sn == 3 and abs(st - 11.0) < 1e-9 and is_open
+    assert state.timeout_set == (base + 35 * MIN) // 1_000
+
+
+def test_stateful_timeout_closes_session_keeps_spend():
+    """The watermark TIMEOUT emits the open session and clears it, but
+    keeps the running spend: a user's totals must survive the expiry
+    of their session."""
+    import pandas as pd
+
+    base = pd.Timestamp("2024-01-01 10:00:00").value // 1_000  # µs
+    MIN = 60 * 1_000_000
+    state = _FakeState(
+        value=(5, 20.0, base, base + 5 * MIN, 2, 7.5, True), timed_out=True
+    )
+    (out,) = SS._update_spend_session_state((7,), iter([]), state)
+    assert out.to_dict("records") == [
+        {
+            "user_id": 7,
+            "kind": "session",
+            "session_start": "2024-01-01 10:00:00",
+            "session_end": "2024-01-01 10:05:00",
+            "n_events": 2,
+            "total_value": 7.5,
+        }
+    ]
+    assert state.get == (5, 20.0, 0, 0, 0, 0.0, False)
+    assert state.timeout_set is None
 
 
 def test_stateful_sessionize_out_of_order_batches(spark, tmp_path):
@@ -189,17 +241,17 @@ def test_stateful_sessionize_out_of_order_batches(spark, tmp_path):
         .withWatermark("ts", "2 hours")
     )
     q = (
-        SS.sessionize_stateful_stream(stream)
+        SS.spend_sessions_stream(stream)
         .writeStream.format("memory")
         .queryName("t_sess_ooo")
-        .outputMode("append")
+        .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got = {
         (r.user_id, r.session_start): (r.session_end, r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM t_sess_ooo").collect()
+        for r in spark.sql("SELECT * FROM t_sess_ooo WHERE kind = 'session'").collect()
     }
     # (b) user 2's late 11:00 = its own closed 1-event session
     assert got[(2, "2024-01-01 11:00:00")] == ("2024-01-01 11:00:00", 1, 5.0)
@@ -214,80 +266,3 @@ def test_stateful_sessionize_out_of_order_batches(spark, tmp_path):
         (2, "2024-01-01 11:00:00"),
         (2, "2024-01-01 12:00:00"),
     }, got
-
-
-def test_combined_spend_sessions_equals_separate_queries(spark, sf_dir, tmp_path):
-    """r14 opt: stream_window_aggs runs spend + sessionize as ONE
-    combined applyInPandasWithState query. Its tagged emissions over a
-    multi-micro-batch file stream must equal the two single-purpose
-    operators' emissions on the identical staged batches — spend rows
-    per (user, n_events) and closed sessions per (user, start, end)."""
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    span = (hi - lo) / 3
-    src = tmp_path / "batches"
-    src.mkdir()
-    for i in range(3):
-        part = ev.where(
-            (F.col("ts") >= lo + i * span) & (F.col("ts") < lo + (i + 1) * span)
-            if i < 2
-            else (F.col("ts") >= lo + 2 * span)
-        )
-        stage = tmp_path / f"stage{i}"
-        part.coalesce(1).write.parquet(str(stage))
-        (pf,) = [p for p in stage.iterdir() if p.name.endswith(".parquet")]
-        pf.rename(src / f"b{i}.parquet")
-    schema = spark.read.parquet(str(src / "b0.parquet")).schema
-
-    def mkstream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 minute")
-        )
-
-    for name, df, mode in (
-        ("t_comb_all", SS.spend_sessions_stream(mkstream()), "update"),
-        ("t_comb_sp", SS.running_spend_stream(mkstream()), "update"),
-        ("t_comb_se", SS.sessionize_stateful_stream(mkstream()), "append"),
-    ):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(240), name
-
-    comb = spark.sql("SELECT * FROM t_comb_all").collect()
-    got_spend = {
-        (r.user_id, r.n_events): r.total_value
-        for r in comb
-        if r.kind == "spend"
-    }
-    want_spend = {
-        (r.user_id, r.n_events): r.total_value
-        for r in spark.sql("SELECT * FROM t_comb_sp").collect()
-    }
-    assert set(got_spend) == set(want_spend)
-    for k, v in want_spend.items():
-        assert abs(got_spend[k] - v) < 0.05, (k, got_spend[k], v)
-    got_sess = {
-        (r.user_id, r.session_start, r.session_end, r.n_events): r.total_value
-        for r in comb
-        if r.kind == "session"
-    }
-    want_sess = {
-        (r.user_id, r.session_start, r.session_end, r.n_events): r.total_value
-        for r in spark.sql("SELECT * FROM t_comb_se").collect()
-    }
-    assert set(got_sess) == set(want_sess)
-    for k, v in want_sess.items():
-        assert abs(got_sess[k] - v) < 0.05, (k, got_sess[k], v)
-    for name in ("t_comb_all", "t_comb_sp", "t_comb_se"):
-        spark.catalog.dropTempView(name)
