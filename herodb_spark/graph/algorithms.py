@@ -13,6 +13,13 @@ Scale notes:
 - Each iteration = one shuffle keyed on src/dst. `localCheckpoint()`
   every iteration truncates lineage so plan size / replanning stays
   O(1) in iteration count (the classic iterative-DataFrame trap).
+- PageRank (plain and personalized) is the exception: `_rank_fold`
+  gathers the whole adjacency into ONE row and runs every rank update
+  in one task as a higher-order fold, so the plan and its exchanges
+  do not grow with the iteration count and no eager job runs. That
+  bounds it to node sets that fit one row — fixed-cardinality sets
+  such as the 25 nations; the edge extraction feeding it stays a
+  distributed plan.
 - Frontier-based BFS keeps per-iteration work proportional to the
   frontier, not the graph.
 - Connected components: `connected_components` is min-label
@@ -361,72 +368,75 @@ def connected_components_twophase(undirected: DataFrame, max_iters: int = MAX_IT
     ).select("node", F.coalesce("root", F.col("node")).alias("comp"))
 
 
-def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 10, damping: float = 0.85,
-             checkpoint_every: int = 5) -> DataFrame:
+def _rank_fold(nodes: DataFrame, edges: DataFrame, iters: int, init, update) -> DataFrame:
+    """The PageRank engine shared by `pagerank` and
+    `personalized_pagerank`: gather the graph into ONE row, run the
+    `iters` rank updates as a JVM higher-order fold inside one task,
+    and `inline` (node, rank) back into rows. The plan has the same
+    exchanges whatever `iters` is, and no eager job.
+
+    The row is a node-sorted array<struct<node, ..., deg, ins>>: the
+    columns of `nodes` (unique node ids), the out-degree over ALL of
+    `edges` (edges into nodes outside `nodes` still count, so their
+    mass leaves the graph) and `ins`, the sorted in-neighbours whose
+    source is in `nodes`, one entry per edge. Degree 0 means dangling.
+
+    `init(x, n)` is node x's starting rank; `update(x, c, dang, n)` its
+    rank after one step, with c = Σ_ins rank/deg and dang = Σ of the
+    dangling ranks (0.0 when nothing dangles). Both sums run in array
+    order, so the doubles do not depend on partitioning."""
+    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    ins = (
+        edges.join(nodes.select(F.col("node").alias("src")), "src", "left_semi")
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.array_sort(F.collect_list("src")).alias("ins"))
+    )
+    per_node = nodes.join(deg, "node", "left").join(ins, "node", "left").select(
+        *nodes.columns,
+        F.coalesce("deg", F.lit(0)).alias("deg"),
+        F.coalesce("ins", F.array()).alias("ins"),
+    )
+    g = F.col("g")
+    n = F.size(g)
+    pos = F.map_from_arrays(g["node"], F.transform(g, lambda _x, k: k + 1))
+
+    def step(ranks, _i):
+        def incoming(x):
+            return F.aggregate(
+                x["ins"],
+                F.lit(0.0),
+                lambda s, j: s
+                + F.element_at(ranks, F.element_at(pos, j))
+                / F.element_at(g, F.element_at(pos, j))["deg"],
+            )
+
+        # adding 0.0 for a non-dangling node leaves the sum's bits as is
+        dang = F.aggregate(
+            F.zip_with(g, ranks, lambda x, r: F.when(x["deg"] == 0, r).otherwise(0.0)),
+            F.lit(0.0),
+            lambda s, r: s + r,
+        )
+        return F.transform(g, lambda x: update(x, incoming(x), dang, n))
+
+    ranks = F.aggregate(F.array_repeat(F.lit(0), iters), F.transform(g, lambda x: init(x, n)), step)
+    return per_node.agg(F.array_sort(F.collect_list(F.struct(*per_node.columns))).alias("g")).select(
+        F.inline(F.zip_with(g, ranks, lambda x, r: F.struct(x["node"].alias("node"), r.alias("rank"))))
+    )
+
+
+def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 10, damping: float = 0.85) -> DataFrame:
     """Uniform-transition PageRank with dangling-mass redistribution.
     `nodes`: single column `node`; `edges`: src,dst (unweighted).
-    `checkpoint_every` sets the localCheckpoint cadence (see the
-    comment at the loop tail; sweep results in BASELINE.md)."""
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    out_deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=True
+    Update, in the expression shape of the GRAPH_PAGERANK_SQL oracle:
+
+        rank' = (1−d)/n + d·(Σ_in rank/deg + dang/n)"""
+    ranks = _rank_fold(
+        nodes,
+        edges,
+        iters,
+        init=lambda x, n: F.lit(1.0) / n,
+        update=lambda x, c, dang, n: F.lit(1.0 - damping) / n + F.lit(damping) * (c + dang / n),
     )
-    # Dangling topology is static — decide ONCE whether the per-
-    # iteration dangling-mass aggregation is needed instead of paying
-    # a driver round-trip every iteration. ONE setup job computes both
-    # |nodes| and the dangling count (r13 opt: was a count job plus an
-    # anti-join emptiness job).
-    setup = nodes.join(out_deg, "node", "left").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("deg").isNull(), 1).otherwise(0)).alias("n_dang"),
-    ).first()
-    n = setup["n"]
-    has_dangling = bool(setup["n_dang"])
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    for i in range(iters):
-        with_deg = ranks.join(out_deg, "node", "left")
-        contribs = (
-            with_deg.where(F.col("deg").isNotNull())
-            .join(edges, F.col("node") == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        incoming = F.coalesce(F.col("c"), F.lit(0.0))
-        if has_dangling:
-            # dangling mass as a broadcast 1-row DataFrame crossJoined
-            # into the update — the whole iteration stays lazy (no
-            # per-iteration driver round-trip; round-1 weak spot #5)
-            dang = with_deg.where(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-            )
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * (incoming + F.col("_dang") / F.lit(float(n)))
-                    ).alias("rank"),
-                )
-            )
-        else:
-            ranks = nodes.join(contribs, "node", "left").select(
-                "node",
-                (F.lit(base) + F.lit(damping) * incoming).alias("rank"),
-            )
-        # checkpoint every `checkpoint_every` iterations: enough to
-        # keep the plan bounded without one materialization job per
-        # iteration (each blocking job costs a full scheduler
-        # round-trip; at 10 iterations the cadence-3 version spent
-        # more wall-clock on the extra jobs than the longer lazy
-        # segments cost). Cadence swept at sf0.1 median-of-5 in
-        # round 5 — see BASELINE.md.
-        if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -446,69 +456,30 @@ def personalized_pagerank(
     seeds: list[int],
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """PERSONALIZED PageRank: the teleport distribution concentrates
     on `seeds` (uniform over them) instead of all nodes — the random
     walker restarts at the seed set, so scores measure proximity TO
     THE SEEDS (the recsys/similar-items staple; plain `pagerank` is
     the pref≡1/n special case). Dangling mass also teleports to the
-    seed distribution. Same iteration scaffolding as `pagerank`
-    (static dangling decision, broadcast 1-row dangling mass, cadence
-    checkpoints); update:
+    seed distribution. Same fold as `pagerank`; update, in the
+    expression shape of the GRAPH_PPR_SQL oracle:
 
         rank' = (1−d)·pref + d·(Σ_in rank/deg + dang·pref)
 
     Unreachable non-seeds converge to exactly 0.0 (pref 0, no
     incoming), so the nonzero support is the seed-reachable set."""
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     if not seeds:
         raise ValueError("personalized_pagerank needs at least one seed")
     pref = F.when(
         F.col("node").isin(*[int(s) for s in seeds]), F.lit(1.0) / len(seeds)
     ).otherwise(F.lit(0.0))
-    nodes_pref = nodes.select("node", pref.alias("pref")).localCheckpoint(eager=True)
-    out_deg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+    ranks = _rank_fold(
+        nodes.select("node", pref.alias("pref")),
+        edges,
+        iters,
+        init=lambda x, n: x["pref"],
+        update=lambda x, c, dang, n: F.lit(1.0 - damping) * x["pref"]
+        + F.lit(damping) * (c + dang * x["pref"]),
     )
-    has_dangling = not nodes.join(out_deg, "node", "left_anti").isEmpty()
-    ranks = nodes_pref.select("node", F.col("pref").alias("rank"))
-    one_minus_d = 1.0 - damping
-    for i in range(iters):
-        with_deg = ranks.join(out_deg, "node", "left")
-        contribs = (
-            with_deg.where(F.col("deg").isNotNull())
-            .join(edges, F.col("node") == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        incoming = F.coalesce(F.col("c"), F.lit(0.0))
-        if has_dangling:
-            dang = with_deg.where(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-            )
-            ranks = (
-                nodes_pref.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    (
-                        F.lit(one_minus_d) * F.col("pref")
-                        + F.lit(damping) * (incoming + F.col("_dang") * F.col("pref"))
-                    ).alias("rank"),
-                )
-            )
-        else:
-            ranks = nodes_pref.join(contribs, "node", "left").select(
-                "node",
-                (F.lit(one_minus_d) * F.col("pref") + F.lit(damping) * incoming).alias(
-                    "rank"
-                ),
-            )
-        if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.round("rank", 6).alias("ppr"))

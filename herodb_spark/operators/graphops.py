@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from herodb_spark.graph import algorithms as GA
 from herodb_spark.graph import edges as GE
-from herodb_spark.session import fixture_conf
 
 SEED = 0
 
@@ -155,29 +154,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the 10 rank updates into chained (non-recursive)
     CTEs — this is a full hash-checked oracle, not rows-only.
 
-    The bounded iteration loop runs under session.fixture_conf: 8
-    shuffle partitions, AQE off and auto-broadcast off. Each checkpoint
-    materialization is a static 25-node multi-join plan, where AQE's
-    per-stage materialization and BroadcastExchange jobs cost
-    scheduler round-trips for no re-planning benefit. The returned
-    frame is lazy and re-plans at the caller's settings;
-    production-scale graphs keep their session's AQE and broadcast
-    planning."""
+    Submits no job: the returned plan is lazy and re-plans at the
+    caller's settings. Only the edge extraction (the fact joins and
+    the top-3 window) is a distributed plan; GA.pagerank's fold ranks
+    the gathered 25-node graph inside one task, summing in sorted
+    array order, so the ROUND(6)-gated ranks do not depend on the
+    partition count or the core count."""
     from herodb_spark.catalog import load_table
 
-    with fixture_conf(spark):
-        # every eager job of the fixture — the two input checkpoints
-        # and the iteration-cadence checkpoints inside GA.pagerank —
-        # runs in this scope; the returned select/sort over the final
-        # checkpoint is lazy and re-plans at the caller's settings.
-        # The pinned partition count also fixes how the double
-        # contribution and dangling-mass sums split into partial sums,
-        # i.e. their float summation order: the ROUND(6)-gated ranks
-        # do not depend on the caller's core count.
-        nodes = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node")).localCheckpoint(eager=True)
-        e = GE.sparse_edges(spark, sf_dir).localCheckpoint(eager=True)
-        ranks = GA.pagerank(nodes, e, iters=10)
-    return ranks.orderBy("node")
+    nodes = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
+    return GA.pagerank(nodes, GE.sparse_edges(spark, sf_dir), iters=10).orderBy("node")
 
 
 def _pagerank_unrolled_sql(iters: int = 10, damping: float = 0.85) -> str:
@@ -317,16 +303,10 @@ def graph_personalized_pagerank(
     entry + oracle kept."""
     from herodb_spark.catalog import load_table
 
-    # same fixture scope and rationale as graph_pagerank above
-    with fixture_conf(spark):
-        nodes = (
-            load_table(spark, sf_dir, "nation")
-            .select(F.col("n_nationkey").alias("node"))
-            .localCheckpoint(eager=True)
-        )
-        e = GE.sparse_edges(spark, sf_dir, edges).localCheckpoint(eager=True)
-        ranks = GA.personalized_pagerank(nodes, e, seeds=[SEED], iters=10)
-    return ranks.orderBy("node")
+    # lazy, no eager job — same plan shape as graph_pagerank above
+    nodes = load_table(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
+    e = GE.sparse_edges(spark, sf_dir, edges)
+    return GA.personalized_pagerank(nodes, e, seeds=[SEED], iters=10).orderBy("node")
 
 
 def _ppr_unrolled_sql(iters: int = 10, damping: float = 0.85) -> str:

@@ -424,17 +424,6 @@ def test_snapshot_empty_string_partition_value_rejected(spark, tmp_path):
         SnapshotTable.create(spark, str(tmp_path / "es"), df, ["id"], partition_col="grp")
 
 
-def test_pagerank_rejects_nonpositive_cadence(spark):
-    import pytest
-
-    from herodb_spark.graph import algorithms as GA
-
-    nodes = spark.createDataFrame([(1,), (2,)], "node long")
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        GA.pagerank(nodes, edges, iters=2, checkpoint_every=0)
-
-
 def test_snapshot_vacuum_and_empty_read(spark, tmp_path):
     """VACUUM keeps the newest versions, physically removes directories
     only the dropped versions referenced (file-level reuse respected:
