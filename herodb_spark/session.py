@@ -15,6 +15,7 @@ import datetime
 import math
 import os
 import re
+import threading
 import time
 
 from pyspark.sql import SparkSession
@@ -126,6 +127,9 @@ _FIXTURE_CONF = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": "-1",
 }
+#: open `fixture_conf` scopes per session: [depth, caller's values]
+_fixture_scopes: dict = {}
+_fixture_lock = threading.Lock()
 
 
 @contextlib.contextmanager
@@ -154,15 +158,29 @@ def fixture_conf(spark: SparkSession):
     ``spark.newSession()``: a frame built in another session keeps
     planning under that session's conf, so the lazily returned legs
     would stop re-planning at the caller's settings. Production-scale
-    callers keep their session's AQE and broadcast planning."""
-    prev = {k: spark.conf.get(k) for k in _FIXTURE_CONF}
-    for k, v in _FIXTURE_CONF.items():
-        spark.conf.set(k, v)
+    callers keep their session's AQE and broadcast planning.
+
+    That conf is shared by every thread of the session, so scopes
+    entered on concurrent threads (run_overlapped) are counted: the
+    first entry saves the caller's values and sets the pins, the last
+    exit restores them. A thread leaving its scope never un-pins
+    another thread still inside one."""
+    with _fixture_lock:
+        scope = _fixture_scopes.setdefault(spark, [0, None])
+        if scope[0] == 0:
+            scope[1] = {k: spark.conf.get(k) for k in _FIXTURE_CONF}
+            for k, v in _FIXTURE_CONF.items():
+                spark.conf.set(k, v)
+        scope[0] += 1
     try:
         yield
     finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+        with _fixture_lock:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _fixture_scopes[spark]
+                for k, v in scope[1].items():
+                    spark.conf.set(k, v)
 
 
 def run_overlapped(*fns) -> None:

@@ -32,6 +32,7 @@ from __future__ import annotations
 import contextlib
 import datetime
 import json
+import math
 import os
 import shutil
 import time
@@ -242,16 +243,10 @@ class SnapshotTable:
         mutation's rewrite to the touched partitions."""
         t = cls(spark, path)
         os.makedirs(path, exist_ok=True)
-        if partition_col is None:
-            # single-job create (r13): the write observes its own stats
-            parts, files, stats, _kr, _n = t._write_unpartitioned_observed(
-                df, 0, t._stat_cols(df, key_cols)
-            )
-        else:
-            parts, files = t._write_partitions(df, 0, partition_col)
-            stats = t._partition_stats(
-                parts, df.schema, t._stat_cols(df, key_cols, partition_col)
-            )
+        parts, files = t._write_partitions(df, 0, partition_col)
+        stats, _ = t._zone_maps(
+            parts, df.schema, t._stat_cols(df, key_cols, partition_col)
+        )
         t._commit(
             {
                 "key_cols": key_cols,
@@ -379,118 +374,39 @@ class SnapshotTable:
             want.append(partition_col)
         return [c for c in want if dtypes.get(c) in self._STAT_TYPES]
 
-    def _write_unpartitioned_observed(
-        self, df: DataFrame, version: int, stat_cols: list[str],
-        upd_flag: str | None = None,
+    def _write_flagged(
+        self, df: DataFrame, flag: str, version: int, stat_keys: list[str],
+        transform=None,
     ) -> tuple:
-        """Single-job unpartitioned write (r13 fixed-cost cut): the
-        parquet write carries an observe() node computing the
-        version's zone-map stats in the SAME pass — no stats read-back
-        job. When `upd_flag` names a boolean tag column, the
-        observation additionally yields the update-key hulls and the
-        update-row count (merge_upsert's emptiness + key_ranges), and
-        the tag column is dropped before writing. min/max observations
-        are idempotent under task retries; the count is used only as a
-        zero/nonzero emptiness signal, which retries cannot corrupt.
-        Returns (parts, files, stats, key_ranges|None, n_upd|None)."""
+        """Unpartitioned write in ONE Spark job whose observe() node
+        yields what no written file holds: the number of rows tagged by
+        the boolean column `flag` and the [min, max] hulls of their
+        `stat_keys` — merge_upsert's update rows, _rewrite_touched's
+        matched rows. `transform` (default identity) maps the observed,
+        tagged frame to the rows to write; `flag` is dropped after it.
+        min/max observations are idempotent under task retries; the
+        count is used only as a zero/nonzero emptiness signal, which
+        retries cannot corrupt. Returns (parts, files, n_flagged,
+        key_ranges)."""
         from pyspark.sql import Observation
 
-        aggs = []
-        if upd_flag is not None:
-            aggs.append(F.sum(F.col(upd_flag).cast("long")).alias("n_upd"))
-        for c in stat_cols:
-            aggs.append(F.min(c).alias(f"amn_{c}"))
-            aggs.append(F.max(c).alias(f"amx_{c}"))
-            if upd_flag is not None:
-                aggs.append(F.min(F.when(F.col(upd_flag), F.col(c))).alias(f"umn_{c}"))
-                aggs.append(F.max(F.when(F.col(upd_flag), F.col(c))).alias(f"umx_{c}"))
-        obs = None
-        if aggs:
-            obs = Observation()
-            df = df.observe(obs, *aggs)
-        if upd_flag is not None:
-            df = df.drop(upd_flag)
-        parts, files = self._write_partitions(df, version, None)
-        got = obs.get if obs is not None else {}
-        stats = (
-            {_UNPARTITIONED: {
-                c: [_enc_stat(got[f"amn_{c}"]), _enc_stat(got[f"amx_{c}"])]
-                for c in stat_cols
-            }}
-            if stat_cols
-            else {}
-        )
-        key_ranges = None
-        n_upd = None
-        if upd_flag is not None:
-            n_upd = int(got.get("n_upd") or 0)
-            key_ranges = {
-                _UNPARTITIONED: {
-                    c: [_enc_stat(got[f"umn_{c}"]), _enc_stat(got[f"umx_{c}"])]
-                    for c in stat_cols
-                }
-            }
-        return parts, files, stats, key_ranges, n_upd
-
-    #: per-partition observed stats are expressed as |touched| ×
-    #: |stat_cols| × 2 conditional aggregates riding the write job;
-    #: past this partition count the expression fan-out stops paying
-    #: for itself and the one-job stats read-back takes over
-    _OBSERVED_STATS_MAX_PARTS = 64
-
-    def _write_partitions_stats(
-        self, df: DataFrame, version: int, pcol: str, touched: set,
-        stat_cols: list[str], schema,
-    ) -> tuple:
-        """Partitioned write + per-partition zone-map stats in ONE
-        Spark job (the r13-optimization partitioned twin of
-        `_write_unpartitioned_observed`): when the touched-partition
-        set is known and small, the write carries an observe() node
-        computing min/max of every stat column CONDITIONED on each
-        touched partition value — no stats read-back scan of the
-        freshly written files. Falls back to write + `_partition_stats`
-        (one read-back job) when the fan-out would exceed
-        `_OBSERVED_STATS_MAX_PARTS` partitions. min/max observations
-        are idempotent under task retries. Stats are keyed off the
-        DIRECTORIES the write actually produced, so a touched
-        partition whose rows all vanished (e.g. a delete emptying it)
-        gets no stats entry — identical to the read-back behavior.
-        Returns (parts, files, stats)."""
-        from pyspark.sql import Observation
-
-        # `not touched` rides the fallback too (r13 ADVICE): an empty
-        # touched set would make `aggs` empty and observe() raise —
-        # both current callers return before that, but the function
-        # must not half-handle the case for future ones
-        if not stat_cols or not touched or len(touched) > self._OBSERVED_STATS_MAX_PARTS:
-            parts, files = self._write_partitions(df, version, pcol, only=touched)
-            return parts, files, self._partition_stats(parts, schema, stat_cols)
-        pstr = F.col(pcol).cast("string")
-        # restrict BEFORE observing so the aggregates see exactly the
-        # written rows (the only= filter inside _write_partitions would
-        # otherwise sit above the observe node)
-        df = df.where(pstr.isin(*touched) if touched else F.lit(False))
-        vals = sorted(touched)
-        aggs = []
-        for i, v in enumerate(vals):
-            hit = pstr == F.lit(v)
-            for c in stat_cols:
-                aggs.append(F.min(F.when(hit, F.col(c))).alias(f"mn_{i}_{c}"))
-                aggs.append(F.max(F.when(hit, F.col(c))).alias(f"mx_{i}_{c}"))
         obs = Observation()
-        parts, files = self._write_partitions(
-            df.observe(obs, *aggs), version, pcol
-        )
+        aggs = [F.sum(F.col(flag).cast("long")).alias("n")]
+        for c in stat_keys:
+            aggs.append(F.min(F.when(F.col(flag), F.col(c))).alias(f"mn_{c}"))
+            aggs.append(F.max(F.when(F.col(flag), F.col(c))).alias(f"mx_{c}"))
+        out = df.observe(obs, *aggs)
+        if transform is not None:
+            out = transform(out)
+        parts, files = self._write_partitions(out.drop(flag), version, None)
         got = obs.get
-        stats = {
-            v: {
-                c: [_enc_stat(got[f"mn_{i}_{c}"]), _enc_stat(got[f"mx_{i}_{c}"])]
-                for c in stat_cols
+        key_ranges = {
+            _UNPARTITIONED: {
+                c: [_enc_stat(got[f"mn_{c}"]), _enc_stat(got[f"mx_{c}"])]
+                for c in stat_keys
             }
-            for i, v in enumerate(vals)
-            if v in parts
         }
-        return parts, files, stats
+        return parts, files, int(got["n"] or 0), key_ranges
 
     def _abandon_version_dir(self, parts: dict) -> None:
         """Remove a freshly staged (never-committed) version directory
@@ -657,7 +573,7 @@ class SnapshotTable:
         return hulls
 
     #: declared column type → the parquet physical type its footer
-    #: statistics must carry for `_footer_stats` to trust them.
+    #: statistics must carry for `_zone_maps` to trust them.
     #: date (r14): INT32 days-since-epoch, signed order = date order;
     #: `_footer_file_minmax` additionally requires pyarrow to have
     #: decoded the bounds AS dates (positive proof the chunk's logical
@@ -667,8 +583,8 @@ class SnapshotTable:
     #: parquet spec deprecates), and an INT64-micros chunk's bounds
     #: would still need the isAdjustedToUTC → session-timezone
     #: conversion the scan applies — not provably exact across writer
-    #: configs, so timestamp stat columns always take the scan/observed
-    #: paths.
+    #: configs, so timestamp stat columns always take the scan
+    #: fallback.
     _FOOTER_PHYS = {
         "int": "INT32", "smallint": "INT32", "tinyint": "INT32",
         "bigint": "INT64", "float": "FLOAT", "double": "DOUBLE",
@@ -691,8 +607,6 @@ class SnapshotTable:
         equal to 0.0 (the spec lets writers normalize the sign of
         zero). All-null chunks contribute nothing, like F.min/F.max;
         a column all-null everywhere yields (None, None)."""
-        import math
-
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
@@ -745,9 +659,9 @@ class SnapshotTable:
                         for b in (mn, mx)
                     ):
                         return None
-                    # encode here so the fold below and both callers see
-                    # the canonical manifest form (order-isomorphic, so
-                    # folding encodings == encoding the fold)
+                    # encode here so the folds below and in `_zone_maps`
+                    # see the canonical manifest form (order-isomorphic,
+                    # so folding encodings == encoding the fold)
                     mn, mx = _enc_stat(mn), _enc_stat(mx)
                 amn, amx = acc[c]
                 acc[c] = (
@@ -756,109 +670,92 @@ class SnapshotTable:
                 )
         return acc, md.num_rows
 
-    def _footer_stats(self, parts: dict, schema, stat_cols: list[str]):
-        """Per-partition [min, max] zone maps read from the parquet
-        FOOTERS of freshly written directories — pure driver file I/O,
-        NO Spark job (guide §1.2 "remove passes" / §6: trust the file
-        metadata lakehouse formats trust). Returns None (caller falls
-        back to the one-job scan) unless EVERY cell is provably exact
-        — see `_footer_file_minmax` for the gates. At 100 TB this
-        turns the post-write stats pass of a wide MERGE from a full
-        re-scan of everything just written into O(files) footer
-        reads."""
-        if not stat_cols or not parts:
-            return {}
-        if schema is None:
-            return None  # legacy manifest: declared types unknown
+    def _zone_maps(self, parts: dict, schema, cols: list[str]) -> tuple:
+        """ZONE MAPS of freshly written directories — the one producer
+        of post-write stats, the durable-layer analog of the
+        reference's `index Ordered(...)` (draft:28-47) and of lakehouse
+        file statistics. Returns ({pv: {col: [min, max]}},
+        {rel_dir: {file_name: {col: [min, max]}}}), values encoded by
+        `_enc_stat`, None for all-NULL.
+
+        Per-file bounds come from the parquet FOOTERS — pure driver
+        file I/O, NO Spark job (guide §1.2 "remove passes" / §6: trust
+        the file metadata lakehouse formats trust) — when every cell is
+        provably exact (see `_footer_file_minmax` for the gates);
+        otherwise from ONE column-pruned scan of `cols`, grouped by
+        input_file_name. A row-less file gets no file entry. Partition
+        stats are the driver-side fold of their files' bounds in
+        Spark's order (NaN above every double), so a row-less directory
+        folds to [None, None] — what F.min/F.max return over no rows.
+        Read-side: `read(ranges=...)` skips partitions (and, for
+        cluster's manifest-level file stats, files) whose interval
+        cannot intersect the predicate."""
+        if not cols or not parts:
+            return {}, {}
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-        want = {c: dtypes.get(c) for c in stat_cols}
-        if any(t not in self._FOOTER_PHYS for t in want.values()):
-            return None
-        stats: dict = {}
-        for pv, rel in parts.items():
-            d = os.path.join(self.path, rel)
-            acc: dict[str, tuple] = {c: (None, None) for c in stat_cols}
-            total_rows = 0
-            try:
-                names = [f for f in os.listdir(d) if f.endswith(".parquet")]
-                for fname in names:
-                    got = self._footer_file_minmax(os.path.join(d, fname), want)
+        want = {c: dtypes[c] for c in cols}
+
+        def footers():
+            out: dict = {}
+            for rel in parts.values():
+                d = os.path.join(self.path, rel)
+                for name in sorted(os.listdir(d)):
+                    if not name.endswith(".parquet"):
+                        continue
+                    got = self._footer_file_minmax(os.path.join(d, name), want)
                     if got is None:
                         return None
-                    got, nrows = got
-                    total_rows += nrows
-                    if nrows == 0:
-                        # mirror the scan fallback (r13 ADVICE): a
-                        # row-less file contributes no group rows there,
-                        # so it must fold nothing here either
-                        continue
-                    for c, (mn, mx) in got.items():
-                        amn, amx = acc[c]
-                        if mn is not None:
-                            amn = mn if amn is None or mn < amn else amn
-                            amx = mx if amx is None or mx > amx else amx
-                        acc[c] = (amn, amx)
-            except (OSError, ValueError):
-                return None
-            if total_rows == 0:
-                # a partition dir whose every file is row-less yields no
-                # groupBy row in the scan fallback — record no entry,
-                # keeping the two paths shape-identical by construction
-                continue
-            stats[pv] = {c: [mn, mx] for c, (mn, mx) in acc.items()}
-        return stats
+                    if got[1]:
+                        out.setdefault(rel, {})[name] = {
+                            c: list(b) for c, b in got[0].items()
+                        }
+            return out
 
-    def _partition_stats(
-        self, parts: dict, schema, stat_cols: list[str]
-    ) -> dict:
-        """ZONE MAPS: per-written-partition [min, max] of `stat_cols`,
-        recorded in the manifest at commit time — the durable-layer
-        analog of the reference's `index Ordered(...)` (draft:28-47)
-        and of lakehouse file statistics. Since the r13 optimization
-        pass the stats come from the written files' parquet FOOTERS
-        (`_footer_stats` — no Spark job) whenever every cell is
-        provably exact; otherwise ONE Spark job over the freshly
-        written directories (column-pruned scan of the stat columns
-        only), grouped by the source directory via input_file_name —
-        no per-partition job fan-out. Read-side: `read(ranges=...)`
-        skips partitions whose recorded interval cannot intersect the
-        predicate. Returns {pv: {col: [min, max]}} (values may be
-        None for all-NULL)."""
-        if not stat_cols or not parts:
-            return {}
-        footer = self._footer_stats(parts, schema, stat_cols)
-        if footer is not None:
-            return footer
-        dirs = {os.path.join(self.path, rel): pv for pv, rel in parts.items()}
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        df = reader.parquet(*dirs).select(
-            F.input_file_name().alias("_f"), *stat_cols
-        )
-        aggs = []
-        for c in stat_cols:
-            aggs.append(F.min(c).alias(f"mn_{c}"))
-            aggs.append(F.max(c).alias(f"mx_{c}"))
-        rows = df.withColumn("_d", F.expr("substring_index(_f, '/', size(split(_f, '/')) - 1)")).groupBy(
-            "_d"
-        ).agg(*aggs).collect()
-        # map each produced directory back to its partition value;
-        # normalize the file:// scheme the scan may prepend
-        by_dir = {}
-        for full, pv in dirs.items():
-            by_dir[os.path.abspath(full)] = pv
-        stats: dict = {}
-        for r in rows:
-            d = r["_d"]
-            if d.startswith("file:"):
-                d = d[len("file:"):]
-            pv = by_dir.get(os.path.abspath(d))
-            if pv is None:
-                continue
-            stats[pv] = {
-                c: [_enc_stat(r[f"mn_{c}"]), _enc_stat(r[f"mx_{c}"])]
-                for c in stat_cols
+        try:
+            files = footers()
+        except (OSError, ValueError):
+            files = None
+        if files is None:
+            by_dir = {
+                os.path.abspath(os.path.join(self.path, rel)): rel
+                for rel in parts.values()
             }
-        return stats
+            aggs = []
+            for c in cols:
+                aggs.append(F.min(c).alias(f"mn_{c}"))
+                aggs.append(F.max(c).alias(f"mx_{c}"))
+            rows = (
+                self.spark.read.schema(schema)
+                .parquet(*by_dir)
+                .select(F.input_file_name().alias("_f"), *cols)
+                .groupBy("_f")
+                .agg(*aggs)
+                .collect()
+            )
+            files = {}
+            for r in rows:
+                # the scan reports a URI (file:/..., percent-encoded)
+                f = urllib.parse.unquote(urllib.parse.urlparse(r["_f"]).path)
+                d, name = os.path.split(f)
+                files.setdefault(by_dir[os.path.abspath(d)], {})[name] = {
+                    c: [_enc_stat(r[f"mn_{c}"]), _enc_stat(r[f"mx_{c}"])]
+                    for c in cols
+                }
+
+        def order(v):
+            return (1, 0.0) if isinstance(v, float) and math.isnan(v) else (0, v)
+
+        stats: dict = {}
+        for pv, rel in parts.items():
+            per_file = list(files.get(rel, {}).values())
+            stats[pv] = {}
+            for c in cols:
+                mns = [st[c][0] for st in per_file if st[c][0] is not None]
+                mxs = [st[c][1] for st in per_file if st[c][1] is not None]
+                stats[pv][c] = (
+                    [min(mns, key=order), max(mxs, key=order)] if mns else [None, None]
+                )
+        return stats, files
 
     # -- reads -------------------------------------------------------------
     @staticmethod
@@ -1158,8 +1055,8 @@ class SnapshotTable:
           within its partition value; `files_per_partition` sizes the
           range partitioner (at 100 TB this is the file-size knob);
         - per-file [min, max] of key + cluster + partition columns
-          are computed in ONE column-pruned job grouped by
-          input_file_name and stored at the MANIFEST level keyed by
+          come from `_zone_maps` (footers, else ONE column-pruned
+          job) and are stored at the MANIFEST level keyed by
           the immutable data directory — later mutations that rewrite
           a partition simply produce dirs with no file stats (scanned
           whole, always correct), so no other commit path changes.
@@ -1227,7 +1124,7 @@ class SnapshotTable:
         version = self._next(m)
         parts, files = self._write_partitions(to_write, version, pcol)
         stat_cols = self._stat_cols(df, list(dict.fromkeys(m["key_cols"] + cluster_by)), pcol)
-        fstats = self._file_stats(parts, schema, stat_cols)
+        _, fstats = self._zone_maps(parts, schema, stat_cols)
         new_parts, new_files, new_stats = self._carry_forward(m, set(parts0))
         new_parts.update(parts)
         new_files.update(files)
@@ -1246,75 +1143,6 @@ class SnapshotTable:
         m.setdefault("file_stats", {}).update(fstats)
         self._commit(m, expected_current=read_version, expected_seq=read_seq)
         return {"files": files, "cutpoints": cutpoints}
-
-    def _file_stats(self, parts: dict, schema, stat_cols: list[str]) -> dict:
-        """Per-FILE [min, max] zone maps over freshly written dirs:
-        {rel_dir: {file_name: {col: [mn, mx]}}}. Footer statistics
-        first (`_footer_file_minmax`, exactness-gated, no Spark job —
-        r13 optimization pass); fallback is ONE column-pruned job
-        grouped by input_file_name."""
-        if not stat_cols or not parts:
-            return {}
-        if schema is not None:
-            dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-            want = {c: dtypes.get(c) for c in stat_cols}
-            if all(t in self._FOOTER_PHYS for t in want.values()):
-                out: dict = {}
-                ok = True
-                try:
-                    for rel in parts.values():
-                        d = os.path.join(self.path, rel)
-                        for fname in os.listdir(d):
-                            if not fname.endswith(".parquet"):
-                                continue
-                            got = self._footer_file_minmax(
-                                os.path.join(d, fname), want
-                            )
-                            if got is None:
-                                ok = False
-                                break
-                            got, nrows = got
-                            if nrows == 0:
-                                # the scan path emits no group for a
-                                # row-less file — mirror that
-                                continue
-                            out.setdefault(rel, {})[fname] = {
-                                c: [mn, mx] for c, (mn, mx) in got.items()
-                            }
-                        if not ok:
-                            break
-                except (OSError, ValueError):
-                    ok = False
-                if ok:
-                    return out
-        dirs = [os.path.join(self.path, rel) for rel in parts.values()]
-        by_dir = {os.path.abspath(os.path.join(self.path, rel)): rel for rel in parts.values()}
-        aggs = []
-        for c in stat_cols:
-            aggs.append(F.min(c).alias(f"mn_{c}"))
-            aggs.append(F.max(c).alias(f"mx_{c}"))
-        rows = (
-            self.spark.read.schema(schema)
-            .parquet(*dirs)
-            .select(F.input_file_name().alias("_f"), *stat_cols)
-            .groupBy("_f")
-            .agg(*aggs)
-            .collect()
-        )
-        out: dict = {}
-        for r in rows:
-            f = r["_f"]
-            if f.startswith("file:"):
-                f = f[len("file:"):]
-            d, name = os.path.split(f)
-            rel = by_dir.get(os.path.abspath(d))
-            if rel is None:
-                continue
-            out.setdefault(rel, {})[name] = {
-                c: [_enc_stat(r[f"mn_{c}"]), _enc_stat(r[f"mx_{c}"])]
-                for c in stat_cols
-            }
-        return out
 
     def add_columns(self, new_cols: dict[str, str]) -> int:
         """Schema evolution as a METADATA-ONLY commit (Rewrite.md:17-18
@@ -1425,15 +1253,8 @@ class SnapshotTable:
         if pc is not None and pc not in new_names:
             raise ValueError(f"{self.path}: partition column {pc!r} not in the new schema")
         version = self._next(m)
-        if pc is None:
-            parts, files, stats, _kr, _n = self._write_unpartitioned_observed(
-                out, version, self._stat_cols(out, new_keys)
-            )
-        else:
-            parts, files = self._write_partitions(out, version, pc)
-            stats = self._partition_stats(
-                parts, out.schema, self._stat_cols(out, new_keys, pc)
-            )
+        parts, files = self._write_partitions(out, version, pc)
+        stats, _ = self._zone_maps(parts, out.schema, self._stat_cols(out, new_keys, pc))
         entry = {
             "op": "migrate",
             "partitions": parts,
@@ -1667,33 +1488,31 @@ class SnapshotTable:
         # same-partition interleaves touched disjoint key sets (the
         # Row level of the reference's lock targets, Lock.h:22-27
         # Table/Page/Row — partition = Page, key range = Row).
-        # ONE job computes everything pre-write needs (r13 fixed-cost
-        # cut — was three: isEmpty + update hulls + moved-key old
-        # locations): the hulls of `updates` UNIONED with the matched
-        # target rows (a matched key may live in a partition the
-        # update row moves it OUT of — those source partitions rewrite
-        # too); grouping the union min/max-merges the two sides
-        # exactly as the old per-partition fold did, the produced
-        # partition set IS `touched`, and an empty result IS the
-        # empty-updates fast path.
+        # Partitioned tables compute everything pre-write needs in ONE
+        # job (r13 fixed-cost cut — was three: isEmpty + update hulls +
+        # moved-key old locations): the hulls of `updates` UNIONED with
+        # the matched target rows (a matched key may live in a
+        # partition the update row moves it OUT of — those source
+        # partitions rewrite too); grouping the union min/max-merges
+        # the two sides exactly as the old per-partition fold did, the
+        # produced partition set IS `touched`, and an empty result IS
+        # the empty-updates fast path. The new version's zone maps come
+        # from the written files' footers afterwards (`_zone_maps`).
         stat_keys = self._stat_cols(updates, keys)
         version = self._next(m)
-        schema_now = self._schema_at(m, read_version)
         if pcol is None:
-            # unpartitioned: ONE Spark job total (r13) — the write
-            # itself observes the new version's stats, the update-key
-            # hulls, and the update-row count; empty updates abandon
-            # the staged directory and commit only the txn watermark
+            # unpartitioned: ONE Spark job (r13) — the write observes
+            # the update-key hulls and the update-row count; empty
+            # updates abandon the staged directory and commit only the
+            # txn watermark
             touched = {_UNPARTITIONED}
             merged = (
                 target.join(updates.select(*keys), keys, "left_anti")
                 .withColumn("_u", F.lit(False))
                 .unionByName(updates.withColumn("_u", F.lit(True)))
             )
-            parts, files, stats, key_ranges, n_upd = (
-                self._write_unpartitioned_observed(
-                    merged, version, stat_keys, upd_flag="_u"
-                )
+            parts, files, n_upd, key_ranges = self._write_flagged(
+                merged, "_u", version, stat_keys
             )
             if not n_upd:  # empty updates — nothing logically written
                 self._abandon_version_dir(parts)
@@ -1731,10 +1550,10 @@ class SnapshotTable:
             merged = affected_target.join(
                 updates.select(*keys), keys, "left_anti"
             ).unionByName(updates)
-            parts, files, stats = self._write_partitions_stats(
-                merged, version, pcol, touched,
-                self._stat_cols(target, keys, pcol), schema_now,
-            )
+            parts, files = self._write_partitions(merged, version, pcol)
+        stats, _ = self._zone_maps(
+            parts, target.schema, self._stat_cols(target, keys, pcol)
+        )
         new_parts, new_files, new_stats = self._carry_forward(m, touched)
         new_parts.update(parts)
         new_files.update(files)
@@ -1787,8 +1606,8 @@ class SnapshotTable:
                 )
         version = self._next(m)
         parts, files = self._write_partitions(df, version, m["partition_col"])
-        stats = self._partition_stats(
-            parts, schema, self._stat_cols(df, m["key_cols"], m["partition_col"])
+        stats, _ = self._zone_maps(
+            parts, df.schema, self._stat_cols(df, m["key_cols"], m["partition_col"])
         )
         entry = {"op": "overwrite", "partitions": parts, "files": files, "stats": stats}
         if program is not None:
@@ -1866,13 +1685,13 @@ class SnapshotTable:
 
         Job shape (r13 fixed-cost cut): UNPARTITIONED tables run ONE
         Spark job — the write observes the matched-row count + hulls
-        (pre-transform node) and the new version's stats (the written
-        rows) in the same pass; a no-op abandons the staged directory.
-        PARTITIONED tables run one union-hull job (pre-image matched
-        partitions ∪ post-image partitions of the result's matched
-        rows — an update assigning the partition column moves rows
-        between partitions and both ends must rewrite), the write, and
-        the stats read-back."""
+        on the pre-transform node (`_write_flagged`); a no-op abandons
+        the staged directory. PARTITIONED tables run one union-hull job
+        (pre-image matched partitions ∪ post-image partitions of the
+        result's matched rows — an update assigning the partition
+        column moves rows between partitions and both ends must
+        rewrite) and the write. Either way the new version's zone maps
+        come from the written files' footers (`_zone_maps`)."""
         read_version = m["current"]
         read_seq = self._seq(m)
         pcol = m["partition_col"]
@@ -1881,27 +1700,13 @@ class SnapshotTable:
         version = self._next(m)
         t2 = target.withColumn("_m", matched)
         if pcol is None:
-            from pyspark.sql import Observation
-
-            aggs = [F.sum(F.col("_m").cast("long")).alias("n_m")]
-            for c in stat_keys:
-                aggs.append(F.min(F.when(F.col("_m"), F.col(c))).alias(f"umn_{c}"))
-                aggs.append(F.max(F.when(F.col("_m"), F.col(c))).alias(f"umx_{c}"))
-            obs = Observation()
-            result = transform(t2.observe(obs, *aggs)).drop("_m")
-            parts, files, stats, _kr, _n = self._write_unpartitioned_observed(
-                result, version, stat_keys
+            parts, files, n_m, key_ranges = self._write_flagged(
+                t2, "_m", version, stat_keys, transform
             )
-            got = obs.get
-            if not int(got.get("n_m") or 0):  # no-op: commit nothing new
+            if not n_m:  # no-op: commit nothing new
                 self._abandon_version_dir(parts)
                 return m["current"]
             touched = {_UNPARTITIONED}
-            key_ranges = {
-                _UNPARTITIONED: {
-                    c: [got[f"umn_{c}"], got[f"umx_{c}"]] for c in stat_keys
-                }
-            }
         else:
             matched_rows = t2.where(F.col("_m")).drop("_m")
             result = transform(t2).drop("_m")
@@ -1913,11 +1718,10 @@ class SnapshotTable:
             if not key_ranges:  # no-op mutation: commit nothing new
                 return m["current"]
             touched = set(key_ranges)
-            parts, files, stats = self._write_partitions_stats(
-                result, version, pcol, touched,
-                self._stat_cols(target, m["key_cols"], pcol),
-                self._schema_at(m, read_version),
-            )
+            parts, files = self._write_partitions(result, version, pcol, only=touched)
+        stats, _ = self._zone_maps(
+            parts, target.schema, self._stat_cols(target, keys, pcol)
+        )
         new_parts, new_files, new_stats = self._carry_forward(m, touched)
         new_parts.update(parts)
         new_files.update(files)

@@ -418,9 +418,8 @@ def test_ima_adpcm_decode_is_real():
 
     import numpy as np
 
-    from herodb_spark.operators.jpegcodec import (
-        decode_ima_adpcm_block, encode_ima_adpcm, wrap_wav_ima,
-    )
+    from herodb_spark.operators.jpegcodec import decode_ima_adpcm_block
+    from tests.audio_fixtures import encode_ima_adpcm, wrap_wav_ima
 
     n = 2000
     sig = (12000 * np.sin(2 * np.pi * np.arange(n) / 64)).astype(int).tolist()

@@ -925,167 +925,6 @@ query (k, v) :- T@0(k, v);
         hql2.run("update schema M (a = a);")
 
 
-def test_observed_partition_stats_match_readback(spark, tmp_path):
-    """r13 optimization: partitioned mutations compute per-partition
-    zone maps with observe() aggregates riding the write job instead
-    of a stats read-back scan. The observed stats must be value- and
-    shape-identical to what reading the written files back produces —
-    including the edge where a delete empties a touched partition
-    (no directory written → no stats entry, exactly like read-back)."""
-    from pyspark.sql import functions as F
-
-    from herodb_spark.sources.snapshot import SnapshotTable
-
-    rows = [(10 * g + i, g, f"r{g}_{i}") for g in range(3) for i in range(4)]
-    df = spark.createDataFrame(rows, "id long, grp int, s string")
-    t = SnapshotTable.create(
-        spark, str(tmp_path / "obs"), df, ["id"], partition_col="grp"
-    )
-    # merge touching two partitions: observed stats (v1)
-    t.merge_upsert(
-        spark.createDataFrame([(5, 0, "x"), (199, 1, "y")], "id long, grp int, s string")
-    )
-    m = t._load()
-    st = m["versions"]["1"]["stats"]
-    # read-back ground truth over the same freshly written dirs
-    rb = t._partition_stats(
-        m["versions"]["1"]["partitions"], t._schema_at(m, 1),
-        t._stat_cols(df, ["id"], "grp"),
-    )
-    touched = {
-        pv for pv, rel in m["versions"]["1"]["partitions"].items()
-        if rel.startswith("data/v=1-")
-    }
-    assert touched == {"0", "1"}
-    for pv in touched:
-        assert st[pv] == rb[pv], (pv, st[pv], rb[pv])
-    assert st["1"]["id"] == [10, 199]
-    # delete that EMPTIES partition 2 entirely: no dir → no stats row
-    t.delete_where(F.col("grp") == 2)
-    m2 = t._load()
-    v2 = m2["versions"]["2"]
-    assert "2" not in v2["partitions"] and "2" not in v2["stats"]
-    # fallback path above the fan-out cap produces the same stats
-    t3 = SnapshotTable.create(
-        spark, str(tmp_path / "obs_fb"), df, ["id"], partition_col="grp"
-    )
-    prev_cap = SnapshotTable._OBSERVED_STATS_MAX_PARTS
-    SnapshotTable._OBSERVED_STATS_MAX_PARTS = 0  # force read-back
-    try:
-        t3.merge_upsert(
-            spark.createDataFrame(
-                [(5, 0, "x"), (199, 1, "y")], "id long, grp int, s string"
-            )
-        )
-    finally:
-        SnapshotTable._OBSERVED_STATS_MAX_PARTS = prev_cap
-    assert t3._load()["versions"]["1"]["stats"] == {
-        pv: st[pv] for pv in t3._load()["versions"]["1"]["stats"]
-    }
-    for pv in touched:
-        assert t3._load()["versions"]["1"]["stats"][pv] == st[pv]
-
-
-def test_footer_stats_match_scan(spark, tmp_path):
-    """r13 optimization: partitioned create (and the large-merge
-    fallback) read zone maps from the written parquet FOOTERS instead
-    of launching a stats read-back scan. Footer stats must be value-
-    and shape-identical to the scan job's — including NULL handling —
-    and every exactness gate must fall back rather than record an
-    inexact bound."""
-    from pyspark.sql import functions as F
-
-    from herodb_spark.sources.snapshot import SnapshotTable
-
-    rows = []
-    for g in range(3):
-        for i in range(5):
-            rows.append(
-                (
-                    10 * g + i,
-                    g,
-                    (f"name_{g}_{i}" if i % 4 else None) if g < 2 else None,
-                    float(10 * g + i) / 8 + 1.0,
-                )
-            )
-    df = spark.createDataFrame(rows, "id long, grp int, s string, v double")
-    t = SnapshotTable.create(
-        spark, str(tmp_path / "ft"), df, ["id", "s", "v"], partition_col="grp"
-    )
-    m = t._load()
-    parts = m["versions"]["0"]["partitions"]
-    cols = t._stat_cols(df, ["id", "s", "v"], "grp")
-    schema = t._schema_at(m, 0)
-    footer = t._footer_stats(parts, schema, cols)
-    assert footer is not None
-    # scan-job ground truth (force the fallback)
-    orig = SnapshotTable._footer_stats
-    SnapshotTable._footer_stats = lambda self, *a, **k: None
-    try:
-        scan = t._partition_stats(parts, schema, cols)
-    finally:
-        SnapshotTable._footer_stats = orig
-    assert footer == scan, (footer, scan)
-    # the committed manifest carries exactly these stats
-    assert m["versions"]["0"]["stats"] == footer
-    # grp=2 has an all-NULL string column: [None, None] like F.min/max
-    assert footer["2"]["s"] == [None, None]
-    # gate: a double bound equal to 0.0 is sign-ambiguous -> fallback
-    df0 = spark.createDataFrame([(1, 0, 0.0), (2, 0, 3.5)], "id long, grp int, v double")
-    t0 = SnapshotTable.create(
-        spark, str(tmp_path / "ft0"), df0, ["id", "v"], partition_col="grp"
-    )
-    m0 = t0._load()
-    assert (
-        t0._footer_stats(
-            m0["versions"]["0"]["partitions"], t0._schema_at(m0, 0), ["id", "v", "grp"]
-        )
-        is None
-    )
-    # ... but the committed stats (scan fallback) are still exact
-    assert m0["versions"]["0"]["stats"]["0"]["v"] == [0.0, 3.5]
-    # gate: NaN-bearing doubles -> writers withhold min/max -> fallback
-    dfn = spark.createDataFrame(
-        [(1, 0, float("nan")), (2, 0, 3.5)], "id long, grp int, v double"
-    )
-    tn = SnapshotTable.create(
-        spark, str(tmp_path / "ftn"), dfn, ["id", "v"], partition_col="grp"
-    )
-    mn_ = tn._load()
-    assert (
-        tn._footer_stats(
-            mn_["versions"]["0"]["partitions"], tn._schema_at(mn_, 0), ["id", "v", "grp"]
-        )
-        is None
-    )
-    # gate: strings at/over the trust cap could have been truncated
-    dfl = spark.createDataFrame(
-        [(1, 0, "x" * SnapshotTable._FOOTER_STR_MAX)], "id long, grp int, s string"
-    )
-    tl = SnapshotTable.create(
-        spark, str(tmp_path / "ftl"), dfl, ["id", "s"], partition_col="grp"
-    )
-    ml = tl._load()
-    assert (
-        tl._footer_stats(
-            ml["versions"]["0"]["partitions"], tl._schema_at(ml, 0), ["id", "s", "grp"]
-        )
-        is None
-    )
-    assert ml["versions"]["0"]["stats"]["0"]["s"] == [
-        "x" * SnapshotTable._FOOTER_STR_MAX
-    ] * 2
-    # file-level twin (cluster()'s per-file zone maps): footer == scan
-    ffiles = t._file_stats(parts, schema, cols)
-    orig_f = SnapshotTable._footer_file_minmax
-    SnapshotTable._footer_file_minmax = lambda self, *a, **k: None
-    try:
-        fscan = t._file_stats(parts, schema, cols)
-    finally:
-        SnapshotTable._footer_file_minmax = orig_f
-    assert ffiles == fscan, (ffiles, fscan)
-
-
 def test_insert_only_literal_hulls_match_scan(spark, tmp_path):
     """r14 optimization: a merge_upsert whose updates are a literal
     LocalRelation and whose keys the zone maps prove absent everywhere
@@ -1229,10 +1068,11 @@ def test_date_timestamp_zone_maps(spark, tmp_path):
     maps, recorded as fixed-width ISO strings whose lexicographic
     order equals temporal order (`_enc_stat`). Date stats come from
     the parquet footers when provably exact; timestamp stats always
-    take the scan/observed paths (INT96 default + timezone adjustment
-    make footer bounds unprovable). Decimal stays un-stat-ed: no
+    take the scan fallback (INT96 default + timezone adjustment make
+    footer bounds unprovable). Decimal stays un-stat-ed: no
     order-preserving JSON encoding survives the consumers' duck-typed
-    comparisons."""
+    comparisons. The stats equal a brute-force scan for every commit
+    op (tests/test_zone_maps.py)."""
     import datetime as dt
 
     from herodb_spark.sources.snapshot import SnapshotTable, _enc_stat
@@ -1255,29 +1095,6 @@ def test_date_timestamp_zone_maps(spark, tmp_path):
     assert st["0"]["d"] == ["2024-03-05", "2024-03-08"]
     assert st["0"]["ts"][0] == "2024-03-05 12:30:45.000001"
     assert st["2"]["d"] == ["2024-05-04", "2024-05-07"]
-    # ts (not footer-provable) forces the scan fallback for the whole
-    # stat set; date ALONE is footer-provable — parity vs forced scan
-    cols_d = ["id", "d", "grp"]
-    schema = t._schema_at(m, 0)
-    parts = m["versions"]["0"]["partitions"]
-    footer = t._footer_stats(parts, schema, cols_d)
-    assert footer is not None
-    orig = SnapshotTable._footer_stats
-    SnapshotTable._footer_stats = lambda self, *a, **k: None
-    try:
-        scan = t._partition_stats(parts, schema, cols_d)
-    finally:
-        SnapshotTable._footer_stats = orig
-    assert footer == scan, (footer, scan)
-    # ...and the ts-including set is footer-rejected (falls back)
-    assert t._footer_stats(parts, schema, ["id", "d", "ts"]) is None
-    # gate: declared `date` over a chunk whose stats are NOT decoded
-    # as dates (an int32 column shares the physical type) -> reject
-    some_dir = os.path.join(t.path, next(iter(parts.values())))
-    fpath = os.path.join(
-        some_dir, next(f for f in os.listdir(some_dir) if f.endswith(".parquet"))
-    )
-    assert t._footer_file_minmax(fpath, {"grp": "date"}) is None
     # read-side pruning: date range bounds encode to the manifest form
     lo, hi = dt.date(2024, 3, 1), dt.date(2024, 3, 31)
     assert not SnapshotTable._skippable(st["0"], {"d": (lo, hi)})
@@ -1292,7 +1109,7 @@ def test_date_timestamp_zone_maps(spark, tmp_path):
     assert SnapshotTable._skippable(
         st["2"], {"ts": (t0, t0 + dt.timedelta(minutes=3))}
     )
-    # unpartitioned create: the observed-stats path encodes too
+    # unpartitioned create encodes too
     tu = SnapshotTable.create(
         spark, str(tmp_path / "dtu"), df, ["id", "d", "ts"]
     )
