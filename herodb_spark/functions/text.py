@@ -37,13 +37,6 @@ def stopword_count(col: Column | str) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(STOPWORDS_EN)))
 
 
-def avg_token_len(col: Column | str) -> Column:
-    """Average token length, 6-dp rounded double."""
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return F.round(total.cast("double") / F.size(toks), 6)
-
-
 def quality_score(col: Column | str) -> Column:
     """Heuristic document quality in [0,1]: rewards moderate length,
     low punctuation density, presence of stopwords (prose-likeness).

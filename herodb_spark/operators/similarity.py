@@ -263,11 +263,6 @@ def _sig_from_projs(p: F.Column) -> F.Column:
     return out
 
 
-def _hyperplane_sig(emb_col: F.Column) -> F.Column:
-    """LSH signature: bit j = sign of dot(v, plane_j)."""
-    return _sig_from_projs(_hyperplane_projs(emb_col))
-
-
 #: buckets probed per query by the query-directed multi-probe (of the
 #: 2^N_PLANES = 64): base bucket + the lowest-penalty single/double bit
 #: flips. 18/64 ≈ 28% of the corpus scanned vs 100% for brute force

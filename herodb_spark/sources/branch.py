@@ -239,24 +239,17 @@ class DatabaseBranch:
                 break
         if js is None:
             js = pm.get("schema")
-        entry0 = {
-            "op": f"branch_base:v{base_v}",
-            "partitions": rel_parts,
-            "files": dict(ventry.get("files", {})),
-            "stats": dict(ventry.get("stats", {})),
-        }
-        if js is not None:
-            entry0["schema"] = js
         lm = {
             "key_cols": pm["key_cols"],
             "partition_col": pm["partition_col"],
-            "current": 0,
-            "versions": {"0": entry0},
+            "current": -1,
+            "versions": {},
         }
-        if js is not None:
-            lm["schema"] = js
         t = SnapshotTable(self.spark, local)
-        t._commit(lm)
+        t._publish(
+            lm, f"branch_base:v{base_v}", rel_parts, ventry.get("files", {}),
+            stats=ventry.get("stats", {}), **({"schema": js} if js is not None else {}),
+        )
         return t
 
     def _advance(self, m: dict, op: str, tables: dict,
@@ -589,20 +582,12 @@ class DatabaseBranch:
                     else:
                         # parent-reaching carry-forward: back to parent coords
                         new_map[pv] = os.path.relpath(src_abs, pt.path)
-                entry = {
-                    "op": f"merge_branch:{self.name}",
-                    "partitions": new_map,
-                    "files": files,
-                    "stats": stats,
-                }
-                if br_hulls:
-                    entry["key_ranges"] = {
+                pt._publish(
+                    ptm, f"merge_branch:{self.name}", new_map, files, stats=stats,
+                    key_ranges={
                         pv: kr for pv, kr in br_hulls.items() if pv in br_parts
-                    }
-                prv, prs = ptm["current"], pt._seq(ptm)
-                ptm["versions"][str(next_v)] = entry
-                ptm["current"] = next_v
-                pt._commit(ptm, expected_current=prv, expected_seq=prs)
+                    } if br_hulls else None,
+                )
                 table_undo.append((pt, prev_cur))
                 new_pins[name] = next_v
                 report[name] = kind

@@ -793,25 +793,18 @@ class SnapshotDatabase:
                 e["program"] for e in bundle.get("program_log", [])
                 if e["table"] == name
             ]
-            entry = {
-                "op": "import_bundle",
-                "partitions": parts,
-                "files": dict(spec.get("files", {})),
-                "stats": dict(spec.get("stats", {})),
-            }
-            if spec.get("schema"):
-                entry["schema"] = spec["schema"]
-            if progs:
-                entry["program"] = "\n".join(progs)
             tman = {
                 "key_cols": list(spec["key_cols"]),
                 "partition_col": spec["partition_col"],
-                "current": 0,
-                "versions": {"0": entry},
+                "current": -1,
+                "versions": {},
             }
-            if spec.get("schema"):
-                tman["schema"] = spec["schema"]
-            SnapshotTable(spark, tdir)._commit(tman)
+            SnapshotTable(spark, tdir)._publish(
+                tman, "import_bundle", parts, spec.get("files", {}),
+                stats=spec.get("stats", {}),
+                program="\n".join(progs) if progs else None,
+                **({"schema": spec["schema"]} if spec.get("schema") else {}),
+            )
             pins[name] = 0
         version = rv + 1
         m["versions"][str(version)] = {"op": "import_bundle", "tables": pins}

@@ -31,11 +31,8 @@ Scale notes:
   versions are immutable.
 
 Semantics (documented deltas from `SnapshotTable.read_changes`, which
-remains the JVM-side batch CDC joiner):
-- a key whose PARTITION COLUMN value changes between commits surfaces
-  as delete (old partition) + insert (new partition) instead of
-  update_pre/update_post — a valid CDC encoding of the same
-  transition; within one partition value updates keep pre/post form.
+remains the JVM-side batch CDC joiner; for one commit the two feeds
+agree row for row, a partition move included):
 - the stream's schema is fixed at query start (the version-`current`
   schema). Columns added later by `add_columns` appear after a
   restart, matching lakehouse CDF streaming behavior.
@@ -357,14 +354,18 @@ def _changed_partition_values(m: dict, v_from: int, v_to: int, path: str) -> dic
 
 
 def _plan_change_partitions(
-    m: dict, path: str, v_from: int, v_to: int, keys: list[str], schema_json: str
+    m: dict, path: str, v_from: int, v_to: int, schema_json: str
 ) -> list["_ChangesPartition"]:
     """One task per (commit, changed partition value) over the window
     (v_from, v_to] — shared by the batch CDC reader and the stream
     reader so the planning rules (per-commit stepping, vacuumed-
-    version errors) cannot diverge."""
+    version errors, the key set each commit diffs on, refused across
+    a key-set migration like `read_changes`) cannot diverge."""
+    from herodb_spark.sources.snapshot import SnapshotTable
+
     out: list[_ChangesPartition] = []
     for v in range(v_from + 1, v_to + 1):
+        keys = SnapshotTable._window_keys(m, v - 1, v, path)
         for pv, (od, nd) in _changed_partition_values(m, v - 1, v, path).items():
             out.append(
                 _ChangesPartition(
@@ -499,12 +500,11 @@ class _ChangesReader(DataSourceReader):
         m = self._m = _load_manifest(path)
         self.v_from = v_from
         self.v_to = v_to
-        self.keys = m["key_cols"]
         self.schema_json = _schema_at(m, self.v_to).json()
 
     def partitions(self) -> Sequence[InputPartition]:
         return _plan_change_partitions(
-            self._m, self.path, self.v_from, self.v_to, self.keys, self.schema_json
+            self._m, self.path, self.v_from, self.v_to, self.schema_json
         )
 
     def read(self, partition: _ChangesPartition) -> Iterator:
@@ -518,7 +518,6 @@ class _ChangesStreamReader(DataSourceStreamReader):
     def __init__(self, path: str, starting: str | None):
         self.path = path
         m = _load_manifest(path)
-        self.keys = m["key_cols"]
         self.schema_json = _schema_at(m, m["current"]).json()
         # offsets are LAST-CONSUMED manifest versions: a batch (start, end]
         # delivers the commits start+1..end. startingVersion=N is INCLUSIVE
@@ -546,7 +545,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
         if v1 <= v0:
             return []
         m = _load_manifest(self.path)
-        return _plan_change_partitions(m, self.path, v0, v1, self.keys, self.schema_json)
+        return _plan_change_partitions(m, self.path, v0, v1, self.schema_json)
 
     def read(self, partition: _ChangesPartition) -> Iterator:
         yield from _diff_batches(partition)
@@ -561,7 +560,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
 # -- batch overwrite writer -------------------------------------------------
 class _OverwriteCommit(WriterCommitMessage):
     def __init__(self, files: dict):
-        #: {pv: [(file_name, n_rows, {col: [mn, mx]})]}
+        #: {pv: n_files_written}
         self.files = files
 
 
@@ -569,14 +568,21 @@ class _OverwriteWriter(DataSourceWriter):
     """`df.write.format("herodb").mode("overwrite")` — INSERT
     OVERWRITE as a two-phase commit, the shape the writer API was
     built for: executors stage parquet files into a writer-unique
-    version directory (one file per (task, partition value), each
-    carrying its own zone-map stats computed worker-side), the driver
-    assembles the manifest entry from the collected commit messages
-    and publishes with the SAME OCC validate-then-swap every other
-    mutation uses — a table that advanced mid-job raises
+    version directory (one file per (task, partition value)), and the
+    driver-side commit publishes them through the same version-entry
+    builder and OCC validate-then-swap as every native mutation
+    (`SnapshotTable._publish`) — a table that advanced mid-job raises
     ConcurrentWriteError and the staged files are unreferenced
     garbage for the next vacuum's orphan sweep (identical contract to
     an aborted merge).
+
+    Zone maps come from the staged files' footers at commit. The
+    commit runs in a Python worker without a SparkSession, so a
+    partition whose footers cannot prove its bounds records no stats
+    and is always scanned. Float/double columns are written WITHOUT
+    parquet statistics: pyarrow's min/max ignore NaN, which Spark
+    orders above every double, so those bounds would let both
+    Spark's parquet pushdown and the zone maps drop NaN rows.
 
     Append mode is refused: snapshot tables are keyed, and a blind
     file append cannot honor merge-by-key semantics — use
@@ -612,7 +618,7 @@ class _OverwriteWriter(DataSourceWriter):
             # 'true', a double '1e-07' vs '1.0E-7', silently forking
             # the partition under later merges. Refuse the rest; the
             # native overwrite() API handles any partition type.
-            ptype = {f.name: f.dataType.simpleString() for f in table_schema.fields}[self.pcol]
+            ptype = want[self.pcol].simpleString()
             if ptype not in ("tinyint", "smallint", "int", "bigint", "string"):
                 raise ValueError(
                     f"{path}: the herodb writer supports integer/string partition "
@@ -623,36 +629,20 @@ class _OverwriteWriter(DataSourceWriter):
         # OCC expectations captured BEFORE any data moves
         self._read_version = m["current"]
         self._read_seq = int(m.get("seq", m["current"]))
-        version = max(int(v) for v in m["versions"]) + 1
-        self.version = version
-        self.vdir = f"data/v={version}-{uuid.uuid4().hex[:8]}"
-        types = {f.name: f.dataType.simpleString() for f in table_schema.fields}
-        # date joined in r14 alongside SnapshotTable._STAT_TYPES (its
-        # pyarrow min/max is exact and tz-free; commit() encodes it to
-        # the manifest's fixed-width ISO form). timestamp stays out of
-        # the WRITER-side stats: the pyarrow naive-datetime bounds are
-        # not provably the session-timezone values the engine's scan
-        # paths record, and a wrong-but-plausible bound would mis-skip.
-        stat_types = (
-            "int", "bigint", "smallint", "tinyint", "float", "double",
-            "string", "date",
-        )
-        want_stats = list(m["key_cols"]) + ([self.pcol] if self.pcol else [])
-        self.stat_cols = [c for c in dict.fromkeys(want_stats) if types.get(c) in stat_types]
+        self.vdir = f"data/v={m['current'] + 1}-{uuid.uuid4().hex[:8]}"
 
     # executor side ---------------------------------------------------------
     def write(self, iterator) -> _OverwriteCommit:
         import uuid
 
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         target = _arrow_schema(self.schema_json)
+        with_stats = [f.name for f in target if not pa.types.is_floating(f.type)]
         files: dict = {}
 
         def flush(pv: str, rows: list) -> None:
-            tbl = pa.Table.from_pylist(rows, schema=target)
             if pv == "__HERODB_NULL__":
                 raise ValueError(
                     f"{self.path}: NULL or empty-string {self.pcol!r} values are not "
@@ -661,12 +651,9 @@ class _OverwriteWriter(DataSourceWriter):
             d = os.path.join(self.path, self.vdir, "__p=" + urllib.parse.quote(pv, safe=""))
             os.makedirs(d, exist_ok=True)
             name = f"part-{uuid.uuid4().hex[:12]}.parquet"
-            pq.write_table(tbl, os.path.join(d, name))
-            stats = {}
-            for c in self.stat_cols:
-                mm = pc.min_max(tbl.column(c))
-                stats[c] = [mm["min"].as_py(), mm["max"].as_py()]
-            files.setdefault(pv, []).append((name, tbl.num_rows, stats))
+            tbl = pa.Table.from_pylist(rows, schema=target)
+            pq.write_table(tbl, os.path.join(d, name), write_statistics=with_stats)
+            files[pv] = files.get(pv, 0) + 1
 
         buf: dict[str, list] = {}
         n_buf = 0
@@ -689,52 +676,21 @@ class _OverwriteWriter(DataSourceWriter):
 
     # driver side -----------------------------------------------------------
     def commit(self, messages) -> None:
-        from herodb_spark.sources.snapshot import SnapshotTable, _enc_stat
+        from herodb_spark.sources.snapshot import SnapshotTable
 
         parts: dict = {}
         nfiles: dict = {}
-        stats: dict = {}
-        file_stats: dict = {}
-
-        def merge(a, b):
-            if a is None:
-                return b
-            if b is None:
-                return a
-            return [
-                a[0] if (b[0] is None or (a[0] is not None and a[0] <= b[0])) else b[0],
-                a[1] if (b[1] is None or (a[1] is not None and a[1] >= b[1])) else b[1],
-            ]
-
         for msg in messages:
             if msg is None:
                 continue
-            for pv, flist in msg.files.items():
-                rel = f"{self.vdir}/__p=" + urllib.parse.quote(pv, safe="")
-                parts[pv] = rel
-                nfiles[pv] = nfiles.get(pv, 0) + len(flist)
-                for name, _n, st in flist:
-                    file_stats.setdefault(rel, {})[name] = {
-                        c: [_enc_stat(b[0]), _enc_stat(b[1])] for c, b in st.items()
-                    }
-                    cur = stats.setdefault(pv, {})
-                    for c, b in st.items():
-                        cur[c] = merge(cur.get(c), list(b))
-        t = SnapshotTable(None, self.path)  # _commit is pure manifest I/O
-        m = t._load()
-        for d in stats.values():  # canonical manifest encoding (dates)
-            for c, b in d.items():
-                d[c] = [_enc_stat(b[0]), _enc_stat(b[1])]
-        m["versions"][str(self.version)] = {
-            "op": "overwrite",
-            "partitions": parts,
-            "files": nfiles,
-            "stats": stats,
-        }
-        m["current"] = self.version
-        if file_stats:
-            m.setdefault("file_stats", {}).update(file_stats)
-        t._commit(m, expected_current=self._read_version, expected_seq=self._read_seq)
+            for pv, n in msg.files.items():
+                parts[pv] = f"{self.vdir}/__p=" + urllib.parse.quote(pv, safe="")
+                nfiles[pv] = nfiles.get(pv, 0) + n
+        t = SnapshotTable(None, self.path)  # no session: footer zone maps only
+        t._publish(
+            t._load(), "overwrite", parts, nfiles,
+            expect=(self._read_version, self._read_seq),
+        )
 
     def abort(self, messages) -> None:
         import shutil

@@ -244,29 +244,11 @@ class SnapshotTable:
         t = cls(spark, path)
         os.makedirs(path, exist_ok=True)
         parts, files = t._write_partitions(df, 0, partition_col)
-        stats, _ = t._zone_maps(
-            parts, df.schema, t._stat_cols(df, key_cols, partition_col)
-        )
-        t._commit(
-            {
-                "key_cols": key_cols,
-                "partition_col": partition_col,
-                "current": 0,
-                # schema is MANIFEST metadata (like real table formats):
-                # reads of an all-partitions-deleted version and schema
-                # checks never need to open a data file
-                "schema": df.schema.json(),
-                "versions": {
-                    "0": {
-                        "op": "create",
-                        "partitions": parts,
-                        "files": files,
-                        "stats": stats,
-                        "schema": df.schema.json(),
-                    }
-                },
-            }
-        )
+        m = {"key_cols": key_cols, "partition_col": partition_col, "current": -1, "versions": {}}
+        # schema is MANIFEST metadata (like real table formats): reads
+        # of an all-partitions-deleted version and schema checks never
+        # need to open a data file
+        t._publish(m, "create", parts, files, schema=df.schema.json())
         return t
 
     #: parquet row-group (block) size for snapshot data files. 16 MB
@@ -318,15 +300,10 @@ class SnapshotTable:
         on object storage). `only` restricts the write to those
         partition values."""
         vdir = f"v={version}-{uuid.uuid4().hex[:8]}"
-
-        def _count(reldir: str) -> int:
-            d = os.path.join(self.path, reldir)
-            return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-
         if partition_col is None:
             rel = f"data/{vdir}/{_UNPARTITIONED}"
             self._writer(df).parquet(os.path.join(self.path, rel))
-            return {_UNPARTITIONED: rel}, {_UNPARTITIONED: _count(rel)}
+            return {_UNPARTITIONED: rel}, {_UNPARTITIONED: self._n_files(rel)}
         pstr = F.col(partition_col).cast("string")
         if only is not None:
             df = df.where(pstr.isin(*only) if only else F.lit(False))
@@ -348,8 +325,13 @@ class SnapshotTable:
                     "layout cannot represent them distinctly)"
                 )
             out[val] = f"data/{vdir}/{d}"
-            nfiles[val] = _count(out[val])
+            nfiles[val] = self._n_files(out[val])
         return out, nfiles
+
+    def _n_files(self, rel: str) -> int:
+        """Parquet data files in one table-relative directory."""
+        d = os.path.join(self.path, rel)
+        return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
 
     # zone-map stat columns: scalar types with a JSON-safe,
     # order-isomorphic manifest encoding (`_enc_stat`). date/timestamp
@@ -361,14 +343,16 @@ class SnapshotTable:
     )
 
     def _stat_cols(
-        self, df: DataFrame, cols: list[str], partition_col: str | None = None
+        self, schema, cols: list[str], partition_col: str | None = None
     ) -> list[str]:
         """Key columns + the partition column (whose per-partition
         min == max == the value, giving typed equality/range pruning
         through the same zone-map path the directory layout can't
         offer for non-string comparisons), filtered to stat-able
-        types."""
-        dtypes = dict(df.dtypes)
+        types of `schema` (none for a manifest without schemas)."""
+        if schema is None:
+            return []
+        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         want = list(cols)
         if partition_col and partition_col not in want:
             want.append(partition_col)
@@ -680,45 +664,52 @@ class SnapshotTable:
 
         Per-file bounds come from the parquet FOOTERS — pure driver
         file I/O, NO Spark job (guide §1.2 "remove passes" / §6: trust
-        the file metadata lakehouse formats trust) — when every cell is
-        provably exact (see `_footer_file_minmax` for the gates);
-        otherwise from ONE column-pruned scan of `cols`, grouped by
-        input_file_name. A row-less file gets no file entry. Partition
-        stats are the driver-side fold of their files' bounds in
-        Spark's order (NaN above every double), so a row-less directory
-        folds to [None, None] — what F.min/F.max return over no rows.
-        Read-side: `read(ranges=...)` skips partitions (and, for
-        cluster's manifest-level file stats, files) whose interval
-        cannot intersect the predicate."""
+        the file metadata lakehouse formats trust) — for every
+        directory whose cells are all provably exact (see
+        `_footer_file_minmax` for the gates). The other directories
+        take ONE column-pruned scan of `cols`, grouped by
+        input_file_name; a handle with no session (the connector's
+        commit runs in a Python worker) cannot scan, so their
+        partitions get NO stats entry and are always read. A row-less
+        file gets no file entry. Partition stats are the driver-side
+        fold of their files' bounds in Spark's order (NaN above every
+        double), so a row-less directory folds to [None, None] — what
+        F.min/F.max return over no rows. Read-side: `read(ranges=...)`
+        skips partitions (and, for cluster's manifest-level file
+        stats, files) whose interval cannot intersect the predicate."""
         if not cols or not parts:
             return {}, {}
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         want = {c: dtypes[c] for c in cols}
 
-        def footers():
+        def footers(rel):
             out: dict = {}
-            for rel in parts.values():
-                d = os.path.join(self.path, rel)
-                for name in sorted(os.listdir(d)):
-                    if not name.endswith(".parquet"):
-                        continue
-                    got = self._footer_file_minmax(os.path.join(d, name), want)
-                    if got is None:
-                        return None
-                    if got[1]:
-                        out.setdefault(rel, {})[name] = {
-                            c: list(b) for c, b in got[0].items()
-                        }
+            d = os.path.join(self.path, rel)
+            for name in sorted(os.listdir(d)):
+                if not name.endswith(".parquet"):
+                    continue
+                got = self._footer_file_minmax(os.path.join(d, name), want)
+                if got is None:
+                    return None
+                if got[1]:
+                    out[name] = {c: list(b) for c, b in got[0].items()}
             return out
 
-        try:
-            files = footers()
-        except (OSError, ValueError):
-            files = None
-        if files is None:
+        files: dict = {}
+        unproven: dict = {}
+        for pv, rel in parts.items():
+            try:
+                got = footers(rel)
+            except (OSError, ValueError):
+                got = None
+            if got is None:
+                unproven[pv] = rel
+            elif got:
+                files[rel] = got
+        if unproven and self.spark is not None:
             by_dir = {
                 os.path.abspath(os.path.join(self.path, rel)): rel
-                for rel in parts.values()
+                for rel in unproven.values()
             }
             aggs = []
             for c in cols:
@@ -732,7 +723,6 @@ class SnapshotTable:
                 .agg(*aggs)
                 .collect()
             )
-            files = {}
             for r in rows:
                 # the scan reports a URI (file:/..., percent-encoded)
                 f = urllib.parse.unquote(urllib.parse.urlparse(r["_f"]).path)
@@ -741,12 +731,15 @@ class SnapshotTable:
                     c: [_enc_stat(r[f"mn_{c}"]), _enc_stat(r[f"mx_{c}"])]
                     for c in cols
                 }
+            unproven = {}  # scanned: every partition has exact bounds
 
         def order(v):
             return (1, 0.0) if isinstance(v, float) and math.isnan(v) else (0, v)
 
         stats: dict = {}
         for pv, rel in parts.items():
+            if pv in unproven:
+                continue  # unprovable and unscannable: no entry, never skipped
             per_file = list(files.get(rel, {}).values())
             stats[pv] = {}
             for c in cols:
@@ -981,17 +974,14 @@ class SnapshotTable:
         {compacted: [partition values], files_before, files_after}."""
         m = self._load()
         read_version = m["current"]
-        read_seq = self._seq(m)
         pcol = m["partition_col"]
         entry0 = m["versions"][str(read_version)]
         cur = entry0["partitions"]
         known = entry0.get("files", {})
 
         def _n_files(pv: str) -> int:
-            if pv in known:
-                return int(known[pv])
-            d = os.path.join(self.path, cur[pv])  # legacy manifest fallback
-            return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+            # listing only for legacy manifests without file counts
+            return int(known[pv]) if pv in known else self._n_files(cur[pv])
 
         frag = {pv: rel for pv, rel in cur.items() if _n_files(pv) > max_files_per_partition}
         if not frag:
@@ -1010,19 +1000,9 @@ class SnapshotTable:
         parts, files = self._write_partitions(to_write, version, pcol, only=set(frag))
         # compaction is content-identical: the rewritten partitions'
         # zone maps carry over from the current entry unchanged
-        cur_stats = entry0.get("stats", {})
-        new_parts, new_files, new_stats = self._carry_forward(m, set(frag))
-        new_parts.update(parts)
-        new_files.update(files)
-        new_stats.update({pv: cur_stats[pv] for pv in frag if pv in cur_stats})
-        m["versions"][str(version)] = {
-            "op": "compact",
-            "partitions": new_parts,
-            "files": new_files,
-            "stats": new_stats,
-        }
-        m["current"] = version
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
+        self._publish(
+            m, "compact", parts, files, stats=entry0.get("stats", {}), touched=set(frag)
+        )
         return {
             "compacted": sorted(frag),
             "files_before": files_before,
@@ -1068,7 +1048,6 @@ class SnapshotTable:
         Returns {files: {pv: n}, cutpoints: {col: [...]}}."""
         m = self._load()
         read_version = m["current"]
-        read_seq = self._seq(m)
         pcol = m["partition_col"]
         entry0 = m["versions"][str(read_version)]
         parts0 = entry0["partitions"]
@@ -1123,25 +1102,15 @@ class SnapshotTable:
         )
         version = self._next(m)
         parts, files = self._write_partitions(to_write, version, pcol)
-        stat_cols = self._stat_cols(df, list(dict.fromkeys(m["key_cols"] + cluster_by)), pcol)
+        stat_cols = self._stat_cols(schema, list(dict.fromkeys(m["key_cols"] + cluster_by)), pcol)
         _, fstats = self._zone_maps(parts, schema, stat_cols)
-        new_parts, new_files, new_stats = self._carry_forward(m, set(parts0))
-        new_parts.update(parts)
-        new_files.update(files)
+        m.setdefault("file_stats", {}).update(fstats)
         # a reorder is content-identical per partition value: carry the
         # partition-level zone maps for every partition that persists
-        cur_stats = entry0.get("stats", {})
-        new_stats.update({pv: cur_stats[pv] for pv in parts if pv in cur_stats})
-        m["versions"][str(version)] = {
-            "op": "cluster",
-            "partitions": new_parts,
-            "files": new_files,
-            "stats": new_stats,
-            "cluster_by": list(cluster_by),
-        }
-        m["current"] = version
-        m.setdefault("file_stats", {}).update(fstats)
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
+        self._publish(
+            m, "cluster", parts, files, stats=entry0.get("stats", {}),
+            cluster_by=list(cluster_by),
+        )
         return {"files": files, "cutpoints": cutpoints}
 
     def add_columns(self, new_cols: dict[str, str]) -> int:
@@ -1161,9 +1130,7 @@ class SnapshotTable:
         from pyspark.sql import types as T
 
         m = self._load()
-        read_version = m["current"]
-        read_seq = self._seq(m)
-        schema = self._schema_at(m, read_version)
+        schema = self._schema_at(m, m["current"])
         if schema is None:
             raise ValueError(f"{self.path}: pre-schema manifest cannot evolve")
         existing = {f.name for f in schema.fields}
@@ -1178,19 +1145,7 @@ class SnapshotTable:
             for name, typ in new_cols.items()
         ]
         new_schema = T.StructType(fields)
-        version = self._next(m)
-        carried_parts, carried_files, carried_stats = self._carry_forward(m, set())
-        m["versions"][str(version)] = {
-            "op": "add_columns",
-            "partitions": carried_parts,
-            "files": carried_files,
-            "stats": carried_stats,
-            "schema": new_schema.json(),
-        }
-        m["current"] = version
-        m["schema"] = new_schema.json()
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
-        return version
+        return self._publish(m, "add_columns", {}, {}, touched=set(), schema=new_schema.json())
 
     def migrate(
         self,
@@ -1224,8 +1179,6 @@ class SnapshotTable:
         default to the surviving old ones (a dropped partition column
         leaves the table unpartitioned)."""
         m = self._load()
-        read_version = m["current"]
-        read_seq = self._seq(m)
         if not columns:
             raise ValueError(f"{self.path}: migrate needs at least one column")
         cur = self.read()
@@ -1254,18 +1207,6 @@ class SnapshotTable:
             raise ValueError(f"{self.path}: partition column {pc!r} not in the new schema")
         version = self._next(m)
         parts, files = self._write_partitions(out, version, pc)
-        stats, _ = self._zone_maps(parts, out.schema, self._stat_cols(out, new_keys, pc))
-        entry = {
-            "op": "migrate",
-            "partitions": parts,
-            "files": files,
-            "stats": stats,
-            "schema": out.schema.json(),
-            "key_cols": list(new_keys),
-            "partition_col": pc,
-        }
-        if program is not None:
-            entry["program"] = program
         if new_keys != list(m["key_cols"]) and "key_cols_v0" not in m:
             # preserve the pre-migration key set for _keys_at's default
             # (versions older than the first key-changing migrate)
@@ -1274,13 +1215,10 @@ class SnapshotTable:
             # same preservation for _pcol_at (export of a pre-migration
             # database pin needs the partitioning in effect AT the pin)
             m["partition_col_v0"] = m["partition_col"]
-        m["versions"][str(version)] = entry
-        m["current"] = version
-        m["schema"] = out.schema.json()
-        m["key_cols"] = list(new_keys)
-        m["partition_col"] = pc
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
-        return version
+        return self._publish(
+            m, "migrate", parts, files, program=program, schema=out.schema.json(),
+            key_cols=list(new_keys), partition_col=pc,
+        )
 
     @staticmethod
     def _keys_at(m: dict, v: int) -> list:
@@ -1304,31 +1242,50 @@ class SnapshotTable:
                 return m["versions"][str(vv)]["partition_col"]
         return m.get("partition_col_v0", m["partition_col"])
 
+    @staticmethod
+    def _window_keys(m: dict, v_from: int, v_to: int, path: str) -> list:
+        """Key columns a change-feed window v_from -> v_to joins on:
+        both feeds (`read_changes` and the connector's per-commit
+        diffs) refuse a window across a key-set migration, where row
+        identity itself was redefined."""
+        k_from = SnapshotTable._keys_at(m, v_from)
+        k_to = SnapshotTable._keys_at(m, v_to)
+        if k_from != k_to:
+            raise ValueError(
+                f"{path}: change feed across a key-set migration "
+                f"({k_from} -> {k_to}) is undefined — row identity was "
+                "redefined; read each side at matched versions instead"
+            )
+        return k_to
+
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change data feed between two snapshots: one row per changed
         key with `_change` ∈ {insert, delete, update_pre, update_post}
         — the CDC surface lakehouse formats expose, derived from the
         versions themselves (no log replay needed because versions are
         immutable). Implementation is a single full-outer join on the
-        key columns, but ONLY over partitions whose directories differ
-        between the two manifests — the copy-on-write layout makes
-        unchanged partitions free to skip, so the diff costs ∝ changed
-        data, not table size."""
+        key columns plus the partition column, but ONLY over
+        partitions whose directories differ between the two manifests
+        — the copy-on-write layout makes unchanged partitions free to
+        skip, so the diff costs ∝ changed data, not table size.
+
+        A key that moves partition is a delete (old partition) plus an
+        insert (new partition) — the same encoding as the connector's
+        per-(commit, partition value) feed, so for one commit the two
+        agree row for row. Across a migrate that changes the partition
+        column the join is on the keys alone. A window across a
+        key-set migration raises ValueError."""
         m = self._load()
         to_version = m["current"] if to_version is None else to_version
         for v in (from_version, to_version):
             if str(v) not in m["versions"]:
                 raise ValueError(f"{self.path}: no version {v}"
                                  + (" (vacuumed)" if v < m["current"] else ""))
-        k_from = self._keys_at(m, from_version)
-        k_to = self._keys_at(m, to_version)
-        if k_from != k_to:
-            raise ValueError(
-                f"{self.path}: change feed across a key-set migration "
-                f"({k_from} -> {k_to}) is undefined — row identity was "
-                "redefined; read each side at matched versions instead"
-            )
-        keys = k_to
+        keys = self._window_keys(m, from_version, to_version, self.path)
+        pcol = self._pcol_at(m, to_version)
+        on = list(keys)
+        if pcol is not None and pcol == self._pcol_at(m, from_version) and pcol not in on:
+            on.append(pcol)
         p_from = m["versions"][str(from_version)]["partitions"]
         p_to = m["versions"][str(to_version)]["partitions"]
         # partition pruning from the manifests: identical directory ⇒
@@ -1371,15 +1328,15 @@ class SnapshotTable:
 
         old = _side(p_from, from_version)
         new = _side(p_to, to_version)
-        data_cols = [c for c in old.columns if c not in keys]
-        o = old.select(*keys, F.struct(*data_cols).alias("_old"))
-        n = new.select(*keys, F.struct(*data_cols).alias("_new"))
-        j = o.join(n, keys, "full_outer")
+        data_cols = [c for c in old.columns if c not in on]
+        o = old.select(*on, F.struct(*data_cols).alias("_old"))
+        n = new.select(*on, F.struct(*data_cols).alias("_new"))
+        j = o.join(n, on, "full_outer")
         inserted = j.where(F.col("_old").isNull()).select(
-            *keys, F.col("_new").alias("_row"), F.lit("insert").alias("_change")
+            *on, F.col("_new").alias("_row"), F.lit("insert").alias("_change")
         )
         deleted = j.where(F.col("_new").isNull()).select(
-            *keys, F.col("_old").alias("_row"), F.lit("delete").alias("_change")
+            *on, F.col("_old").alias("_row"), F.lit("delete").alias("_change")
         )
         # eqNullSafe: plain struct != returns NULL when a field is NULL
         # on both sides, silently dropping real updates
@@ -1388,10 +1345,13 @@ class SnapshotTable:
             & F.col("_new").isNotNull()
             & ~F.col("_old").eqNullSafe(F.col("_new"))
         )
-        pre = upd.select(*keys, F.col("_old").alias("_row"), F.lit("update_pre").alias("_change"))
-        post = upd.select(*keys, F.col("_new").alias("_row"), F.lit("update_post").alias("_change"))
+        pre = upd.select(*on, F.col("_old").alias("_row"), F.lit("update_pre").alias("_change"))
+        post = upd.select(*on, F.col("_new").alias("_row"), F.lit("update_post").alias("_change"))
         flat = inserted.unionByName(deleted).unionByName(pre).unionByName(post)
-        return flat.select(*keys, *[F.col(f"_row.{c}").alias(c) for c in data_cols], "_change")
+        out = keys + [c for c in old.columns if c not in keys]
+        return flat.select(
+            *[F.col(c) if c in on else F.col(f"_row.{c}").alias(c) for c in out], "_change"
+        )
 
     def history(self) -> list[dict]:
         """Version log incl. the persisted mutation program (the
@@ -1413,34 +1373,71 @@ class SnapshotTable:
     def _next(self, m: dict) -> int:
         return m["current"] + 1
 
-    def _carry_forward(self, m: dict, touched: set) -> tuple[dict, dict, dict]:
-        """Re-link every untouched partition of the current version —
-        the file-reuse half of copy-on-write. Returns (partitions,
-        file_counts, zone_map_stats); counts for manifests that
-        pre-date file tracking are backfilled by one listing (legacy
-        upgrade path only), stats only carry where recorded (pruning
-        treats missing stats as unskippable, so legacy partitions stay
-        correct)."""
-        entry = m["versions"][str(m["current"])]
-        cur = entry["partitions"]
-        known = entry.get("files", {})
-        known_stats = entry.get("stats", {})
-        parts = {pv: rel for pv, rel in cur.items() if pv not in touched}
-        files = {
-            pv: int(
-                known.get(
-                    pv,
-                    sum(
-                        1
-                        for f in os.listdir(os.path.join(self.path, rel))
-                        if f.endswith(".parquet")
-                    ),
-                )
+    def _publish(
+        self, m: dict, op: str, parts: dict, files: dict, stats: dict | None = None,
+        touched: set | None = None, expect: tuple | None = None,
+        program: str | None = None, key_ranges: dict | None = None, **extra,
+    ) -> int:
+        """The one version-entry builder: every commit — each native
+        mutation, the connector's overwrite (pyds._OverwriteWriter), a
+        branch merge and the version 0 of a branch base or imported
+        bundle — records its `{op, partitions, files, stats, ...}`
+        entry as version `current + 1` of `m` and publishes it.
+
+        - `parts`/`files`: the directories this commit wrote
+          ({pv: rel_dir}, {pv: n_parquet_files}).
+        - `touched`: None replaces the partition set; a set re-links
+          every current partition outside it with its file count and
+          zone maps — the file-reuse half of copy-on-write. Counts of
+          manifests that pre-date file tracking are backfilled by one
+          listing.
+        - `stats`: None reads the written directories' zone maps
+          (`_zone_maps`) over the key and partition columns in effect
+          at the new version; content-identical rewrites (compact,
+          cluster) pass the current entry's. Only partitions the
+          version holds keep stats.
+        - `extra` is recorded verbatim, and a recorded schema,
+          key_cols or partition_col becomes the manifest's current
+          one; `program` and `key_ranges` are recorded when given.
+        - `expect`: the (version, seq) the OCC commit fences on —
+          default `m`'s own; version 0 of a new table has nothing to
+          fence against.
+        Returns the new version."""
+        version = self._next(m)
+        if expect is None:
+            expect = (m["current"], self._seq(m)) if m["versions"] else (None, None)
+        entry = {"op": op, "partitions": dict(parts), "files": dict(files), **extra}
+        carried: dict = {}
+        if touched is not None:
+            prev = m["versions"][str(m["current"])]
+            known = prev.get("files", {})
+            for pv, rel in prev["partitions"].items():
+                if pv in touched:
+                    continue
+                entry["partitions"].setdefault(pv, rel)
+                n = known[pv] if pv in known else self._n_files(rel)
+                entry["files"].setdefault(pv, int(n))
+                if pv in prev.get("stats", {}):
+                    carried[pv] = prev["stats"][pv]
+        m["versions"][str(version)] = entry
+        for k in ("schema", "key_cols", "partition_col"):
+            if k in extra:
+                m[k] = extra[k]
+        if stats is None:
+            schema = self._schema_at(m, version)
+            stats, _ = self._zone_maps(
+                parts, schema, self._stat_cols(schema, m["key_cols"], m["partition_col"])
             )
-            for pv, rel in parts.items()
+        entry["stats"] = {
+            pv: st for pv, st in {**carried, **stats}.items() if pv in entry["partitions"]
         }
-        stats = {pv: known_stats[pv] for pv in parts if pv in known_stats}
-        return parts, files, stats
+        if program is not None:
+            entry["program"] = program
+        if key_ranges is not None:
+            entry["key_ranges"] = key_ranges
+        m["current"] = version
+        self._commit(m, expected_current=expect[0], expected_seq=expect[1])
+        return version
 
     def last_txn(self, sink_id: str) -> int:
         """Highest batch id committed by `sink_id`, or -1. The txn
@@ -1498,7 +1495,7 @@ class SnapshotTable:
         # produced partition set IS `touched`, and an empty result IS
         # the empty-updates fast path. The new version's zone maps come
         # from the written files' footers afterwards (`_zone_maps`).
-        stat_keys = self._stat_cols(updates, keys)
+        stat_keys = self._stat_cols(updates.schema, keys)
         version = self._next(m)
         if pcol is None:
             # unpartitioned: ONE Spark job (r13) — the write observes
@@ -1551,29 +1548,12 @@ class SnapshotTable:
                 updates.select(*keys), keys, "left_anti"
             ).unionByName(updates)
             parts, files = self._write_partitions(merged, version, pcol)
-        stats, _ = self._zone_maps(
-            parts, target.schema, self._stat_cols(target, keys, pcol)
-        )
-        new_parts, new_files, new_stats = self._carry_forward(m, touched)
-        new_parts.update(parts)
-        new_files.update(files)
-        new_stats.update(stats)
-        entry = {
-            "op": "merge_upsert",
-            "partitions": new_parts,
-            "files": new_files,
-            "stats": new_stats,
-        }
-        if stat_keys:
-            entry["key_ranges"] = key_ranges
-        if program is not None:
-            entry["program"] = program
-        m["versions"][str(version)] = entry
-        m["current"] = version
         if txn is not None:
             m.setdefault("txns", {})[txn[0]] = int(txn[1])
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
-        return version
+        return self._publish(
+            m, "merge_upsert", parts, files, touched=touched, program=program,
+            key_ranges=key_ranges if stat_keys else None,
+        )
 
     def overwrite(self, df: DataFrame, program: str | None = None) -> int:
         """Replace the whole table content in ONE commit (INSERT
@@ -1585,9 +1565,7 @@ class SnapshotTable:
         action-dialect programs (whole-frame rewrites by construction)
         commit through here so durability is never silently dropped."""
         m = self._load()
-        read_version = m["current"]
-        read_seq = self._seq(m)
-        schema = self._schema_at(m, read_version)
+        schema = self._schema_at(m, m["current"])
         if schema is not None:
             want = {f.name: f.dataType for f in schema.fields}
             got = {f.name: f.dataType for f in df.schema.fields}
@@ -1604,18 +1582,8 @@ class SnapshotTable:
                     f"{self.path}: overwrite column type mismatch for {bad}: "
                     + ", ".join(f"{n}: {got[n].simpleString()}!={want[n].simpleString()}" for n in bad)
                 )
-        version = self._next(m)
-        parts, files = self._write_partitions(df, version, m["partition_col"])
-        stats, _ = self._zone_maps(
-            parts, df.schema, self._stat_cols(df, m["key_cols"], m["partition_col"])
-        )
-        entry = {"op": "overwrite", "partitions": parts, "files": files, "stats": stats}
-        if program is not None:
-            entry["program"] = program
-        m["versions"][str(version)] = entry
-        m["current"] = version
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
-        return version
+        parts, files = self._write_partitions(df, self._next(m), m["partition_col"])
+        return self._publish(m, "overwrite", parts, files, program=program)
 
     def update_where(
         self,
@@ -1692,11 +1660,9 @@ class SnapshotTable:
         column moves rows between partitions and both ends must
         rewrite) and the write. Either way the new version's zone maps
         come from the written files' footers (`_zone_maps`)."""
-        read_version = m["current"]
-        read_seq = self._seq(m)
         pcol = m["partition_col"]
         keys = m["key_cols"]
-        stat_keys = self._stat_cols(target, keys)
+        stat_keys = self._stat_cols(target.schema, keys)
         version = self._next(m)
         t2 = target.withColumn("_m", matched)
         if pcol is None:
@@ -1719,19 +1685,7 @@ class SnapshotTable:
                 return m["current"]
             touched = set(key_ranges)
             parts, files = self._write_partitions(result, version, pcol, only=touched)
-        stats, _ = self._zone_maps(
-            parts, target.schema, self._stat_cols(target, keys, pcol)
+        return self._publish(
+            m, op, parts, files, touched=touched, program=program,
+            key_ranges=key_ranges if stat_keys else None,
         )
-        new_parts, new_files, new_stats = self._carry_forward(m, touched)
-        new_parts.update(parts)
-        new_files.update(files)
-        new_stats.update(stats)
-        entry = {"op": op, "partitions": new_parts, "files": new_files, "stats": new_stats}
-        if stat_keys:
-            entry["key_ranges"] = key_ranges
-        if program is not None:
-            entry["program"] = program
-        m["versions"][str(version)] = entry
-        m["current"] = version
-        self._commit(m, expected_current=read_version, expected_seq=read_seq)
-        return version

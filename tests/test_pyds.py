@@ -329,13 +329,72 @@ def test_writer_overwrite_roundtrip_and_time_travel(spark, tmp_path):
     # connector read agrees; version 0 still time travels
     assert _rows(spark.read.format("herodb").option("path", t.path).load()) == _rows(new)
     assert len(t.read(version=0).collect()) == 3
-    # partition + FILE zone maps recorded by the writer (worker-side)
+    # partition zone maps read from the staged files' footers at
+    # commit; file-level stats are cluster()'s alone
     assert m["versions"]["1"]["stats"]["30"]["k"] == [9, 9]
-    assert set(m["file_stats"]) >= set(m["versions"]["1"]["partitions"].values())
-    # file-granular skipping works on writer-produced stats
+    assert not set(m.get("file_stats", {})) & set(m["versions"]["1"]["partitions"].values())
+    # partition-level skipping works on the committed stats
     pr = t.read(ranges={"k": (9, 9)})
     assert len(pr.inputFiles()) < len(t.read().inputFiles())
     assert [r.k for r in pr.where("k = 9").collect()] == [9]
+
+
+def test_writer_nan_double_key_is_never_skipped(spark, tmp_path):
+    """Spark orders NaN above every double, so `k >= 3.0` holds for a
+    NaN key. Rows written through format("herodb") must stay reachable
+    on every read path: pyarrow's NaN-blind parquet min/max may feed
+    neither Spark's parquet pushdown (plain read) nor the zone maps
+    (ranges read, connector pushdown). An all-NaN write records no
+    inverted [inf, -inf] bound."""
+    import math
+
+    schema = "k double, v long"
+    t = SnapshotTable.create(
+        spark, os.path.join(str(tmp_path), "t"),
+        spark.createDataFrame([(0.5, 0)], schema), key_cols=["k"],
+    )
+
+    def overwrite(rows):  # one write task: one file holds every row
+        spark.createDataFrame(rows, schema).coalesce(1).write.format("herodb").option(
+            "path", t.path
+        ).mode("overwrite").save()
+
+    def hits(df):
+        return sorted(r.v for r in df.where("k >= 3.0").collect())
+
+    overwrite([(1.0, 1), (2.0, 2), (float("nan"), 3)])
+    assert hits(t.read()) == [3]
+    assert hits(t.read(ranges={"k": (3.0, None)})) == [3]
+    assert hits(spark.read.format("herodb").option("path", t.path).load()) == [3]
+    overwrite([(float("nan"), 4)])
+    stats = t._load()["versions"]["2"]["stats"]
+    assert all(st.get("k") != [math.inf, -math.inf] for st in stats.values()), stats
+    assert hits(t.read(ranges={"k": (3.0, None)})) == [4]
+
+
+def test_changes_refuse_key_set_migration(spark, tmp_path):
+    """The connector's change feed diffs each commit on the key set in
+    effect at it; like read_changes, it refuses a window across a
+    key-set migration instead of diffing old files on a key column
+    they lack. Windows on one side of the migration still read."""
+    t = _mk(spark, tmp_path)
+    v1 = t.migrate(
+        {"kk": "CAST(k AS STRING)", "s": "s", "x": "x", "g": "g"}, key_cols=["kk"]
+    )
+    t.merge_upsert(
+        spark.createDataFrame([("9", "z", 9.0, 10)], "kk string, s string, x double, g long")
+    )
+
+    def changes(v_from):
+        return (
+            spark.read.format("herodb").option("path", t.path)
+            .option("mode", "changes").option("changesFrom", str(v_from))
+            .load().collect()
+        )
+
+    with pytest.raises(Exception, match="key-set migration"):
+        changes(0)
+    assert [(r.kk, r._change) for r in changes(v1)] == [("9", "insert")]
 
 
 def test_writer_feeds_normal_mutations_and_cdc(spark, tmp_path):
@@ -491,7 +550,8 @@ def test_cdc_fold_reproduces_final_state_random_histories(spark, tmp_path):
     per-commit change feed (insert/update_post apply, delete removes;
     update_pre is the audit image) over the empty state reproduces the
     final table exactly — including partition-moving keys, which
-    arrive as delete+insert."""
+    arrive as delete+insert. For every commit v, the feed's rows equal
+    read_changes(v - 1, v) row for row."""
     import random
 
     rng = random.Random(7)
@@ -534,6 +594,14 @@ def test_cdc_fold_reproduces_final_state_random_histories(spark, tmp_path):
             state.pop(r.k, None)
     final = {r.k: (r.v, r.g) for r in t.read().collect()}
     assert state == final
+    moves = 0
+    for v in range(1, t._load()["current"] + 1):
+        ours = sorted((r.k, r.v, r.g, r._change) for r in feed if r._commit_version == v)
+        native = sorted(tuple(r) for r in t.read_changes(v - 1, v).collect())
+        assert ours == native, (v, ours, native)
+        deleted = {r[0] for r in ours if r[3] == "delete"}
+        moves += sum(1 for r in ours if r[3] == "insert" and r[0] in deleted)
+    assert moves, "the history must move a key between partitions"
 
 
 def test_cdc_with_array_payload_uses_fallback_diff(spark, tmp_path):

@@ -489,6 +489,28 @@ def test_snapshot_read_changes_cdc(spark, tmp_path):
     assert t.read_changes(2, 2).count() == 0
 
 
+def test_read_changes_partition_move_is_delete_plus_insert(spark, tmp_path):
+    """A key whose partition-column value changes is a delete from its
+    old partition plus an insert into the new one — the encoding the
+    connector's per-partition feed produces. A same-partition change
+    keeps the update_pre/update_post pair."""
+    from herodb_spark.sources.snapshot import SnapshotTable
+
+    df = spark.createDataFrame([(1, 0, 1.0), (2, 0, 2.0)], "id long, grp int, v double")
+    t = SnapshotTable.create(spark, str(tmp_path / "mv"), df, ["id"], partition_col="grp")
+    t.merge_upsert(
+        spark.createDataFrame([(1, 1, 1.0), (2, 0, 5.0)], "id long, grp int, v double")
+    )
+    ch = t.read_changes(0, 1)
+    assert ch.columns == ["id", "grp", "v", "_change"]
+    assert sorted(tuple(r) for r in ch.collect()) == [
+        (1, 0, 1.0, "delete"),
+        (1, 1, 1.0, "insert"),
+        (2, 0, 2.0, "update_pre"),
+        (2, 0, 5.0, "update_post"),
+    ]
+
+
 def test_vacuum_seq_fences_stale_writers_and_sweeps_orphans(spark, tmp_path):
     """Round-5 review findings: (1) vacuum bumps the commit seq, so a
     mutation that read the manifest BEFORE the vacuum cannot commit a
