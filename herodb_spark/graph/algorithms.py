@@ -34,83 +34,105 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from herodb_spark.session import ckpt_count
+
 MAX_ITERS = 30
 
 
-# the shared observe-on-checkpoint probe lives in session.py (public,
-# one definition — r13 ADVICE); kept under the old name for this
-# module's call sites
-from herodb_spark.session import ckpt_count as _ckpt_count  # noqa: E402
+def _subtract(new: DataFrame, state: DataFrame, key: list[str]) -> DataFrame:
+    """`new` minus the rows whose `key` is in `state`, NULL matching
+    NULL: `exceptAll` when the key is the whole row, else a null-safe
+    left-anti join on the key."""
+    if set(key) == set(new.columns):
+        return new.exceptAll(state.select(*new.columns))
+    seen = state.select(*[F.col(k).alias(f"_seen_{i}") for i, k in enumerate(key)])
+    cond = [F.col(k).eqNullSafe(F.col(f"_seen_{i}")) for i, k in enumerate(key)]
+    return new.join(seen, cond, "left_anti")
 
 
-def closure(step, init: DataFrame, key: list[str], max_iters: int = MAX_ITERS,
-            probe_every: int | None = 1, dedup_new: bool = True,
-            subtract_state: bool = True) -> DataFrame:
-    """General bounded recursion, accumulate form — the reusable
-    operator behind the reference's parameterized recursive rules
-    (Kernel/Drafts/draft:77-89 `func Fib(...); case ... :- Fib(a-1,x),
-    Fib(a-2,y)`): semi-naive datalog evaluation.
+def seminaive(seeds: dict, derive, keys: dict, max_iters: int = MAX_ITERS) -> dict:
+    """Semi-naive evaluation of mutually recursive relations, the one
+    round loop behind `closure` and HeroQL's recursive SCCs (the
+    reference's recursive rules, Kernel/Drafts/draft:77-89 `case ... :-
+    Fib(a-1,x), Fib(a-2,y)`):
 
-        state₀ = init;  Δ₀ = init
-        Δᵢ₊₁  = step(Δᵢ) \\ state (on `key`);  state += Δᵢ₊₁
+        stateₙ = Δₙ = seedₙ  (None: no base case)
+        Δₙ' = dropDuplicates(deriveₙ(state, Δ)) ∖ stateₙ, both on keysₙ
+        stateₙ += Δₙ' for every n; stop when every Δₙ' is empty
 
-    `step` sees only the latest delta, so per-iteration work scales
-    with the frontier, not the accumulated state — the property that
-    makes closure viable on 100-TB fact tables. `step` must emit at
-    most one row per `key` within an iteration (BFS frontiers, tree
-    expansion, and linear recurrences all satisfy this).
+    `derive(state, delta)` returns {name: candidate rows or None} from
+    the previous round's delta (None: that relation gained nothing), so
+    per-round work scales with the frontier, not the state. A fact first
+    derivable in a round uses a fact of the previous round, so
+    substituting the delta into each recursive position in turn is
+    complete. The subtraction is NULL-safe (`_subtract`); a key that is
+    a strict subset of the columns keeps each key's first discovery
+    (BFS: the minimum hop count).
 
-    With the anti-join on (the general case — cyclic or re-deriving
-    rules), every delta AND the state are localCheckpoint'ed per
-    iteration: the anti-join references the state, so unmaterialized
-    lineage would nest the whole history into each plan (exponential
-    blowup). Two blocking jobs per shuffle round — the right trade
-    when a step moves real data.
+    Seeds, deltas and grown states are localCheckpoint'ed eagerly (the
+    subtraction references the state; lazy lineage would nest the whole
+    history into each plan), and the delta's emptiness probe rides its
+    checkpoint job. Deltas merge behind one round barrier, so each round
+    reads the previous round's state and round arithmetic (the draft's
+    Fib round k) is deterministic."""
+    state = {n: None if s is None else s.localCheckpoint(eager=True) for n, s in seeds.items()}
+    delta = dict(state)
+    for _ in range(max_iters):
+        new_delta = {}
+        for n, rows in derive(state, delta).items():
+            if rows is not None:
+                rows = rows.dropDuplicates(keys[n])
+                if state[n] is not None:
+                    rows = _subtract(rows, state[n], keys[n])
+                rows, n_new = ckpt_count(rows)
+                if n_new == 0:
+                    rows = None
+            new_delta[n] = rows
+        if all(d is None for d in new_delta.values()):
+            break
+        for n, d in new_delta.items():
+            if d is not None:
+                state[n] = d if state[n] is None else state[n].unionByName(d).localCheckpoint(eager=True)
+        delta = new_delta
+    return state
 
-    `subtract_state=False` declares the rule MONOTONE-ACYCLIC (a step
-    never re-derives a key from an earlier iteration — linear
-    recurrences, tree expansion); the anti-join is then skipped, which
-    breaks the delta's dependence on the accumulated state and lets
-    `probe_every` batch several steps into one blocking job (40 tiny
-    steps shouldn't cost 40 job launches; segment lineage truncates at
-    each probe's checkpoint, and overshooting past the fixpoint is
-    harmless — empty frontiers derive nothing). probe_every=None runs
-    all max_iters steps in one fully-lazy plan — right when the
-    iteration count is statically known. `dedup_new=False`
-    additionally declares a step emits unique keys, skipping the
-    per-step shuffle. Keep tiny inits on ONE partition (coalesce):
-    every delta inherits the init's partitioning, and a 1-row
-    recurrence spread over 8 partitions turns the final union into
-    hundreds of empty tasks."""
+
+def closure(step, init: DataFrame, key: list[str], max_iters: int = MAX_ITERS) -> DataFrame:
+    """`seminaive` on one relation: Δᵢ₊₁ = step(Δᵢ) minus the state on
+    `key`. Use it for cyclic or re-deriving rules; `step` sees only the
+    latest delta."""
+    return seminaive({"r": init}, lambda state, delta: {"r": step(delta["r"])},
+                     {"r": key}, max_iters)["r"]
+
+
+def unroll(step, init: DataFrame, max_iters: int = MAX_ITERS,
+           probe_every: int | None = 1) -> DataFrame:
+    """Bounded recursion for MONOTONE-ACYCLIC rules (a step emits each
+    fact once and never one of an earlier step: linear recurrences, tree
+    and chain walks): init ∪ step(init) ∪ step²(init) ∪ … with no dedup
+    and no subtraction, so the steps chain lazily.
+
+    Every `probe_every` steps one checkpoint job materializes the
+    segment and probes it for emptiness (lineage truncates there;
+    overshooting the fixpoint is harmless). None runs all `max_iters`
+    steps as one lazy plan, for statically known step counts. Keep tiny
+    inits on ONE partition (coalesce): every delta inherits the init's
+    partitioning, and a 1-row recurrence over 8 partitions turns the
+    final union into hundreds of empty tasks."""
     state = init.localCheckpoint(eager=True)
     frontier = state
     for i in range(1, max_iters + 1):
         new = step(frontier)
-        if dedup_new:
-            new = new.dropDuplicates(key)
-        if subtract_state:
-            new = new.join(state.select(*key), key, "left_anti")
-            # the emptiness probe rides the checkpoint job (r13 opt:
-            # no separate isEmpty job per iteration)
-            new, n_new = _ckpt_count(new)
-            if n_new == 0:
-                break
-            state = state.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
-        else:
-            probe = probe_every is not None and (i % probe_every == 0 or i == max_iters)
-            if probe:
-                # checkpoint the delta BEFORE unioning it into the
-                # state: the state then references the materialized
-                # segment instead of holding a lazy twin of the plan
-                # the probe already computed (which would re-run every
-                # segment once more at final evaluation); the
-                # emptiness probe rides the checkpoint job (r13 opt)
-                new, n_new = _ckpt_count(new)
-            state = state.unionByName(new)
-            frontier = new
-            if probe and n_new == 0:
-                break
+        probe = probe_every is not None and (i % probe_every == 0 or i == max_iters)
+        if probe:
+            # checkpoint the delta BEFORE unioning it into the state:
+            # the state then references the materialized segment
+            # instead of a lazy twin of the plan the probe computed
+            new, n_new = ckpt_count(new)
+        state = state.unionByName(new)
+        frontier = new
+        if probe and n_new == 0:
+            break
     return state
 
 
@@ -141,9 +163,9 @@ def fixpoint(step, init: DataFrame, max_iters: int = MAX_ITERS,
         for _ in range(max_iters):
             state = step(state).localCheckpoint(eager=True)
         return state
-    state, n_state = _ckpt_count(init)
+    state, n_state = ckpt_count(init)
     for _ in range(max_iters):
-        new, n_new = _ckpt_count(step(state))
+        new, n_new = ckpt_count(step(state))
         changed = n_new != n_state or not new.exceptAll(state).isEmpty()
         state, n_state = new, n_new
         if not changed:
@@ -299,7 +321,7 @@ def connected_components_twophase(undirected: DataFrame, max_iters: int = MAX_IT
         .distinct()
         .localCheckpoint(eager=True)
     )
-    edges, n_edges = _ckpt_count(
+    edges, n_edges = ckpt_count(
         undirected.where(F.col("src") != F.col("dst"))
         .select(F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst"))
         .distinct()
@@ -342,7 +364,7 @@ def connected_components_twophase(undirected: DataFrame, max_iters: int = MAX_IT
         # job per round); set equality as |A| == |B| ∧ A ⊆ B (multiset
         # containment via exceptAll) — the exceptAll shuffle only runs
         # when the observed counts match
-        ss, n_ss = _ckpt_count(
+        ss, n_ss = ckpt_count(
             dirn.join(m2, "src")
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .unionByName(m2.select(F.col("src"), F.col("m").alias("dst")))

@@ -25,8 +25,8 @@ turns rule bodies into joins/filters/anti-joins over DataFrames —
 Spark-first, not an interpreter: a HeroQL program becomes ONE Catalyst
 plan per derived table, so pushdown, join reordering, broadcast and
 AQE all apply. Recursive rule sets evaluate bottom-up (inflationary
-semi-naive fixpoint) with per-round localCheckpoint, the same
-machinery as graph/algorithms.py.
+semi-naive fixpoint) through graph/algorithms.seminaive, the round
+loop `closure` also runs.
 """
 
 from herodb_spark.heroql.compiler import HeroQL, HeroQLError, RunResult

@@ -18,14 +18,14 @@ Semantics (bottom-up / safe Datalog):
   the mapping for those.
 - Recursive rule sets (draft:80-89) evaluate as a SEMI-NAIVE
   inflationary fixpoint per dependency-graph SCC, capped at
-  `max_iters` rounds: every round derives only from the previous
-  round's DELTAS (one Δ-substitution per positive recursive atom —
-  multi-table mutual recursion and non-linear rules included), new
-  facts are exceptAll'ed against the state, and each round's delta
-  and state are localCheckpoint'ed (bounded lineage — the
-  iterative-DataFrame trap). The draft's doubly-recursive Fib runs
-  verbatim: round k derives Fib(k+2), so `query (o) :- Fib(10, o)`
-  needs 8 rounds, each joining a 1-row delta, not the full state.
+  `max_iters` rounds, through graph/algorithms.seminaive: every round
+  derives only from the previous round's DELTAS (one Δ-substitution
+  per positive recursive atom — multi-table mutual recursion and
+  non-linear rules included); the kernel subtracts the state from the
+  new facts and checkpoints each round's delta and state. The draft's
+  doubly-recursive Fib runs verbatim: round k derives Fib(k+2), so
+  `query (o) :- Fib(10, o)` needs 8 rounds, each joining a 1-row
+  delta, not the full state.
 - Pattern arguments may be linear expressions of ONE unbound variable
   (`Fib(a-1, x)` binds a = i+1 from the matched row) — the inversion
   that makes the draft's recursive cases range-restricted.
@@ -40,23 +40,25 @@ Semantics (bottom-up / safe Datalog):
 
 Scale notes: a HeroQL program's non-recursive rules cost exactly what
 the equivalent hand-written DataFrame program costs — the compiler
-adds projections only. Recursive SCCs evaluate SEMI-NAIVELY
-(_eval_seminaive_scc): per-round join work scales with the frontier,
-not the accumulated state — the same shape as the dedicated
-closure()/fixpoint() operators in graph/algorithms.py, generalized
-to arbitrary Datalog SCCs. Mutations rewrite the table DataFrame
-lazily and localCheckpoint every few statements so statement loops
-don't accumulate unbounded lineage.
+adds projections only. Recursive SCCs run the same `seminaive` round
+loop as graph/algorithms.closure (its one-relation case): per-round
+join work scales with the frontier, not the accumulated state. The
+compiler only supplies each SCC's seeds and its Δ-substituting
+derivation (_eval_seminaive_scc). Mutations rewrite the table
+DataFrame lazily and localCheckpoint every few statements so statement
+loops don't accumulate unbounded lineage.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from herodb_spark.graph.algorithms import seminaive
 from herodb_spark.heroql import parser as P
 from herodb_spark.session import literal_df
 
@@ -1439,93 +1441,42 @@ class HeroQL:
         return pos, neg
 
     def _eval_seminaive_scc(self, scc_names: list[str]) -> dict:
-        """SEMI-NAIVE fixpoint over one recursive SCC — every
-        recursive component evaluates this way (multi-table mutual
-        recursion and non-linear rules included), the same frontier
-        shape as graph/algorithms.closure generalized to Datalog:
-
-        - seed each table's state with its non-recursive rules;
-        - each round, for every recursive rule and every positive
-          recursive atom in it, derive with THAT atom reading the
-          previous round's DELTA and every other atom the full
-          accumulated state (the standard Δ-rule decomposition: a
-          fact first derivable this round must use at least one
-          last-round fact, so substituting Δ in each position in turn
-          is complete; everything substituted is derived, so it is
-          sound);
-        - new = distinct − state (exceptAll, null-safe), both delta
-          and state localCheckpoint'ed per round to bound lineage;
-        - stop when every table's round delta is empty.
-
-        Per-round join work scales with the FRONTIER, not the
-        accumulated state — on a deep recursion at 100 TB this is the
-        difference between O(rounds × frontier) and the naive
-        O(rounds × full-state) re-derivation."""
+        """One recursive SCC through the `seminaive` kernel: each
+        table's seed is its non-recursive rules, and each round every
+        recursive rule derives once per positive recursive atom, with
+        THAT atom reading the previous round's delta and every other
+        atom the accumulated state. Whole rows are the key (set
+        semantics)."""
         scc = set(scc_names)
+        seeds: dict[str, DataFrame | None] = {}
         rec: dict[str, list] = {}
-        state: dict[str, DataFrame | None] = {}
         for n in scc_names:
             rules = self.rules.get(n, ())
-            base_rules = [r for r in rules if not self._scc_atoms(r, scc)[0]]
             rec[n] = [r for r in rules if self._scc_atoms(r, scc)[0]]
-            seed = self._derive_rules(n, base_rules, {})
-            state[n] = (
-                None if seed is None else seed.distinct().localCheckpoint(eager=True)
-            )
-        delta = dict(state)
-        for _ in range(self.max_iters):
-            new_delta: dict[str, DataFrame | None] = {}
+            base = [r for r in rules if not self._scc_atoms(r, scc)[0]]
+            seed = self._derive_rules(n, base, {})
+            seeds[n] = None if seed is None else seed.distinct()
+        keys = {n: self._def(n).fields for n in scc_names}
+
+        def derive(state: dict, delta: dict) -> dict:
+            out: dict[str, DataFrame | None] = {}
             for n in scc_names:
-                d = self._def(n)
-                outs: list[DataFrame] = []
+                parts: list[DataFrame] = []
                 for rule in rec[n]:
-                    pos, _ = self._scc_atoms(rule, scc)
-                    for atom in pos:
-                        dd = delta.get(atom.name)
-                        if dd is None:
+                    for atom in self._scc_atoms(rule, scc)[0]:
+                        if delta.get(atom.name) is None:
                             continue  # that table gained nothing last round
                         try:
                             frame = self._compile_body(
-                                rule.body, state, overrides={id(atom): dd}
+                                rule.body, state, overrides={id(atom): delta[atom.name]}
                             )
                         except _SkipRule:
                             continue
-                        outs.append(self._project_head(rule.head, frame, d.fields))
-                if not outs:
-                    new_delta[n] = None
-                    continue
-                new = outs[0]
-                for p in outs[1:]:
-                    new = new.unionByName(p)
-                new = new.distinct()
-                if state[n] is not None:
-                    new = new.exceptAll(state[n])
-                # the emptiness probe rides the checkpoint job
-                # (r13 opt — was a separate isEmpty job per table
-                # per round)
-                from herodb_spark.session import ckpt_count
+                        parts.append(self._project_head(rule.head, frame, keys[n]))
+                out[n] = reduce(DataFrame.unionByName, parts) if parts else None
+            return out
 
-                new, n_new = ckpt_count(new)
-                new_delta[n] = None if n_new == 0 else new
-            if not any(dd is not None for dd in new_delta.values()):
-                break
-            # round barrier: merge every table's delta only after all
-            # derivations ran, so each round observes the previous
-            # round's state (the inflationary fixpoint is the same
-            # minimal model either way; the barrier makes round
-            # arithmetic — e.g. the draft's Fib round-k shape —
-            # deterministic)
-            for n in scc_names:
-                dd = new_delta[n]
-                if dd is None:
-                    continue
-                state[n] = (
-                    dd
-                    if state[n] is None
-                    else state[n].unionByName(dd).localCheckpoint(eager=True)
-                )
-            delta = new_delta
-        return state
+        return seminaive(seeds, derive, keys, self.max_iters)
 
     def _eval_idb(self, name: str) -> None:
         scc = self._scc_of(name)

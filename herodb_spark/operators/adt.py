@@ -7,8 +7,8 @@ testdata:
 1. `adt_list_ops` — draft_type:5-15: ``data List a = List a | Empty``
    with recursive ``reverse`` / ``concat``. A tagged-union TERM TABLE
    holds the cons cells (kind-tagged rows with a next-pointer); the
-   recursive traversal runs through the general `closure` operator
-   (the same semi-naive machinery as Fib/BFS), and the accumulator
+   recursive traversal runs through the `unroll` recursion operator
+   (the same machinery as the Fib recurrence), and the accumulator
    recursions become position arithmetic over the flattened lists —
    the Spark-first re-expression: recursion extracts the ORDER, the
    list-algebra (reverse, append) is then pure Catalyst column math
@@ -16,7 +16,7 @@ testdata:
 
 2. `class_hierarchy` — draft_type:19-110 (``namespace ast``): a class
    inheritance table (``class Type : Node``, ``class RefType : Type``,
-   …), its subtype transitive closure computed with `closure`, and a
+   …), its subtype transitive closure computed with `unroll`, and a
    kind-tagged shared-prefix instance relation dispatched by subtype
    membership — "all concrete subtypes of Expression" with per-class
    field aggregates.
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from herodb_spark.catalog import load_table
-from herodb_spark.graph.algorithms import closure
+from herodb_spark.graph.algorithms import unroll
 from herodb_spark.session import literal_df
 
 MAX_LIST_LEN = 30
@@ -75,7 +75,7 @@ def list_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _flatten_lists(terms: DataFrame) -> DataFrame:
-    """Recursive traversal of the cons chains via `closure` — the
+    """Recursive traversal of the cons chains via `unroll` — the
     ``switch a (Empty : …, List c d : …)`` dispatch (draft_type:7-10)
     is the tag filter in the step join; the frontier follows one
     pointer per list per round, so rounds = longest list."""
@@ -104,10 +104,7 @@ def _flatten_lists(terms: DataFrame) -> DataFrame:
 
     # a cons chain is monotone-acyclic with unique (region, pos) per
     # step: no anti-join, no per-step dedup
-    flat = closure(
-        step, heads, key=["region", "pos"], max_iters=MAX_LIST_LEN,
-        probe_every=8, dedup_new=False, subtract_state=False,
-    )
+    flat = unroll(step, heads, max_iters=MAX_LIST_LEN, probe_every=8)
     return flat.select("region", "pos", "value")
 
 
@@ -228,7 +225,7 @@ def _hierarchy_height() -> int:
 
 def subtype_closure(spark: SparkSession, root: str) -> DataFrame:
     """(cls, depth) for every transitive subtype of `root`, computed
-    with the general `closure` operator over the inheritance edges —
+    with the `unroll` recursion operator over the inheritance edges —
     the draft's implicit "a RefType IS a Type IS a Node" dispatch
     relation, materialized."""
     # distinct column name (`child`): the frontier shares lineage with
@@ -243,10 +240,7 @@ def subtype_closure(spark: SparkSession, root: str) -> DataFrame:
 
     # the hierarchy is a tree: monotone-acyclic, unique classes per
     # step, statically bounded → one fully-lazy plan, no probes
-    return closure(
-        step, init, key=["cls"], max_iters=_hierarchy_height(), probe_every=None,
-        dedup_new=False, subtract_state=False,
-    )
+    return unroll(step, init, max_iters=_hierarchy_height(), probe_every=None)
 
 
 def ast_instances(spark: SparkSession, sf_dir: str) -> DataFrame:

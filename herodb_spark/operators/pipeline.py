@@ -24,14 +24,14 @@ FIB_N = 40
 
 def recursive_fib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fib(1..40) — the reference's recursive function example run
-    through the general `closure` operator (draft:88-100 `case
+    through the `unroll` recursion operator (draft:88-100 `case
     Fib(a,b) :- Fib(a-1,x), Fib(a-2,y), b=x+y`): the linear recurrence
     is a one-row frontier carrying (n, fib, prev); each step derives
     the next term until the n < 40 guard stops producing rows. The
     driver loop holds no values — all arithmetic happens in the
     DataFrame plan, exactly like a user-defined recursive rule
     would."""
-    from herodb_spark.graph.algorithms import closure
+    from herodb_spark.graph.algorithms import unroll
 
     init = literal_df(spark, [(1, 1, 0)], "n int, fib bigint, prev bigint")
 
@@ -46,10 +46,7 @@ def recursive_fib(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anti-join, no per-step dedup; 8 steps batch per blocking probe
     # (deeper lazy chains shift the cost into O(depth²) Catalyst
     # analysis — measured sweet spot for a 40-term recurrence)
-    return closure(
-        step, init, key=["n"], max_iters=FIB_N - 1, probe_every=8,
-        dedup_new=False, subtract_state=False,
-    ).select("n", "fib").orderBy("n")
+    return unroll(step, init, max_iters=FIB_N - 1, probe_every=8).select("n", "fib").orderBy("n")
 
 
 RECURSIVE_FIB_SQL = f"""

@@ -1,7 +1,7 @@
 """Parameterized recursion applied to a non-graph rule — the missing
 general-recursion surface from the reference (Kernel/Drafts/
 draft:77-89: `func Fib(in i, out o); case ... :- Fib(a-1,x),
-Fib(a-2,y)`). `graph.algorithms.closure` is the reusable operator;
+Fib(a-2,y)`). `graph.algorithms.unroll` is the reusable operator;
 this module applies it to a bill-of-materials-style rule over the
 `part` table:
 
@@ -13,7 +13,7 @@ The assembly edge table is a deterministic 4-ary tree over part keys
 `part` table. The rollup aggregates each top-level assembly's full
 component subtree — count and total retail value.
 
-Scale design: closure per-iteration work is frontier ⋈ assembly (one
+Scale design: per-iteration work is frontier ⋈ assembly (one
 shuffle on the parent key); depth is log₄(n) so a 100-TB parts table
 converges in ~20 rounds, each touching only the new frontier. The
 final rollup is one hash aggregation keyed by assembly.
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from herodb_spark.catalog import load_table
-from herodb_spark.graph.algorithms import closure
+from herodb_spark.graph.algorithms import unroll
 
 FANOUT = 4
 N_ROOTS = 4  # top-level assemblies: parts 1..4 (children of virtual root 0)
@@ -62,10 +62,7 @@ def recursive_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a tree is monotone-acyclic (every child has exactly one parent,
     # so a (assembly, node) fact derives exactly once): skip the
     # anti-join and per-step dedup, batch 3 levels per blocking probe
-    comp = closure(
-        step, init, key=["assembly", "node"], probe_every=3,
-        dedup_new=False, subtract_state=False,
-    )
+    comp = unroll(step, init, probe_every=3)
     value = F.sum(F.col("p_retailprice").cast("decimal(18,4)"))
     return (
         comp.join(part, comp.node == part.p_partkey)

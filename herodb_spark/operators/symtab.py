@@ -27,7 +27,7 @@ The `symbol` namespace declares (draft_type:115-180):
 Spark-first re-expression: the scope tree, symbol set and reference
 set are DERIVED relations over the testdata (region → nation →
 customer gives a real 4-level scope tree whose width scales with the
-corpus); the scope-chain walk is the general `closure` operator over
+corpus); the scope-chain walk is the `unroll` recursion operator over
 parent edges (max rounds = tree height, a STATIC bound → one lazy
 plan, no probes); first-wins uniqueness is `min_by` over the creation
 order; resolution is ancestors ⋈ winners with an innermost-wins
@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from herodb_spark.catalog import load_table
-from herodb_spark.graph.algorithms import closure
+from herodb_spark.graph.algorithms import closure, unroll
 
 # scope-id encoding: the tree levels live in disjoint id ranges so the
 # derivation needs no global id allocator (global=0, region=1+r,
@@ -87,7 +87,7 @@ def scope_ancestors(scopes: DataFrame, height: int = _SCOPE_HEIGHT) -> DataFrame
     """(scope, anc, up): every ancestor-or-self of every scope with its
     hop distance — the materialized scope-chain walk ``Symbols``
     resolution performs through the parent index (draft_type:163-172).
-    `closure` over parent edges; the tree height is a static property
+    `unroll` over parent edges; the tree height is a static property
     of the derivation, so the whole walk is ONE lazy plan."""
     edges = scopes.where(F.col("parent").isNotNull()).select(
         F.col("scope").alias("e_child"), F.col("parent").alias("e_parent")
@@ -101,10 +101,7 @@ def scope_ancestors(scopes: DataFrame, height: int = _SCOPE_HEIGHT) -> DataFrame
 
     # a tree walk is monotone-acyclic and emits unique (scope, up)
     # rows per step — fully lazy, no probes, no dedup
-    return closure(
-        step, init, key=["scope", "anc"], max_iters=height, probe_every=None,
-        dedup_new=False, subtract_state=False,
-    )
+    return unroll(step, init, max_iters=height, probe_every=None)
 
 
 def symbol_installs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -399,7 +396,7 @@ def symtab_apply_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion over FuncType, draft_type:249-253) and rebuild it with
     every LambdaArgumentType REPLACED by the argument iff it belongs
     to the applied lambda (draft_type:260-263) — beta-reduction as a
-    relational program. The walk is the `closure` operator following
+    relational program. The walk is the `unroll` operator following
     Func result pointers (rounds = deepest chain); the rebuild is pure
     column CASE logic, so the whole application is one lazy plan.
 
@@ -434,10 +431,7 @@ def symtab_apply_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_belongs").alias("belongs"),
         )
 
-    walk = closure(
-        step, heads, key=["region", "pos"], max_iters=30, probe_every=8,
-        dedup_new=False, subtract_state=False,
-    )
+    walk = unroll(step, heads, max_iters=30, probe_every=8)
     return walk.select(
         "region",
         "pos",

@@ -1,13 +1,15 @@
 #!/usr/bin/env python
-"""Deterministic job-count + wall profile of the fixture-heavy bench
-entries (r13 optimization evidence): runs the named query functions
-under a job group and reports how many Spark jobs the driver thread
-submitted plus the wall time of the full materialization. Job counts
+"""Deterministic job-count + wall profile of registry entries (by
+default the fixture-heavy bench entries): runs each named
+`__spark_entry__.queries()` key under its own job group and reports
+how many Spark jobs the driver thread submitted plus the wall time of
+the full materialization (a `noop` write). Job counts
 are immune to box noise and are the primary before/after signal for
 fixed-cost work (the guide's §1 "measure first" applied to fixtures
 whose cost is scheduler round-trips, not data volume).
 
-Usage: python scripts/profile_fixture.py [query ...]
+Usage: python scripts/profile_fixture.py [registry_key ...]
+The SF directory comes from SPARK_GRAFT_SF_DIR (default sf0.1).
 Note: Structured Streaming micro-batch jobs run on scheduler threads
 outside the job group and are NOT counted — by design; the counted
 jobs are the eager fixture legs the repo controls directly.
@@ -26,30 +28,26 @@ from herodb_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-
-def _queries():
-    from herodb_spark.operators import streamops as ST
-    from herodb_spark.operators import dedup as D
-    from herodb_spark.operators import graphops as G
-    from herodb_spark.operators.lifecycle import (
-        db_branch_merge,
-        snapshot_lifecycle,
-        snapshot_maintenance,
-    )
-
-    return {
-        "snapshot_lifecycle": snapshot_lifecycle,
-        "snapshot_maintenance": snapshot_maintenance,
-        "db_branch_merge": db_branch_merge,
-        "stream_window_aggs": ST.stream_window_aggs,
-        "dedup_cluster_canonical": D.dedup_cluster_canonical,
-        "graph_pagerank": G.graph_pagerank,
-    }
+#: profiled when no key is named: the fixture-heavy entries whose
+#: cost is eager jobs rather than data volume
+DEFAULT_KEYS = (
+    "snapshot_lifecycle",
+    "snapshot_maintenance",
+    "db_branch_merge",
+    "stream_window_aggs",
+    "dedup_cluster_canonical",
+    "graph_pagerank",
+)
 
 
 def main() -> None:
-    queries = _queries()
-    wanted = sys.argv[1:] or list(queries)
+    from __spark_entry__ import queries as registry
+
+    queries = registry()
+    wanted = sys.argv[1:] or list(DEFAULT_KEYS)
+    unknown = [k for k in wanted if k not in queries]
+    if unknown:
+        sys.exit(f"not registry keys: {', '.join(unknown)}")
     spark = get_spark("profile_fixture")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")

@@ -71,3 +71,27 @@ def test_fixpoint_converges_and_stops_early(spark):
 
     out = {r.node: r.lbl for r in fixpoint(step, init, max_iters=50).collect()}
     assert out == {0: 0, 1: 0, 2: 0}
+
+
+def test_closure_whole_row_key_subtracts_nulls(spark):
+    """Keyed on the whole row, a re-derived fact holding a NULL is not
+    new: each fact comes back once and the loop stops after one round."""
+    init = spark.createDataFrame([(1, None), (2, 5)], "a int, b int").coalesce(1)
+
+    def step(frontier):
+        return frontier.select("a", "b")
+
+    rows = [tuple(r) for r in closure(step, init, key=["a", "b"], max_iters=6).collect()]
+    assert sorted(rows, key=str) == sorted([(1, None), (2, 5)], key=str)
+
+
+def test_closure_subset_key_matches_null_key(spark):
+    """Keyed on a strict subset of the columns, a NULL key is matched
+    null-safely: the re-derived NULL node keeps its first discovery."""
+    init = spark.createDataFrame([(None, 0), (1, 0)], "node int, hops int").coalesce(1)
+
+    def step(frontier):
+        return frontier.select("node", (F.col("hops") + 1).alias("hops"))
+
+    rows = [tuple(r) for r in closure(step, init, key=["node"], max_iters=6).collect()]
+    assert sorted(rows, key=str) == sorted([(None, 0), (1, 0)], key=str)
