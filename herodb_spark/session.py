@@ -231,9 +231,8 @@ def ckpt_count(df: "DataFrame") -> tuple["DataFrame", int]:
     probes can't be corrupted (0 cannot inflate), but callers comparing
     counts for EQUALITY (fixpoint, connected_components' Σ probe) must
     fall back to an exact exceptAll/join probe if speculation is ever
-    enabled. Shared by graph.algorithms, graph.extra_algos and
-    heroql.compiler (r13 ADVICE: one public definition, no cross-layer
-    private import)."""
+    enabled. Shared by graph.algorithms and graph.extra_algos (r13
+    ADVICE: one public definition, no cross-layer private import)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
