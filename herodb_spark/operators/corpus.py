@@ -57,8 +57,9 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_sql(n: int) -> str:
-    """DuckDB n-gram fragment mirroring `dedup.shingle_rows` over a
-    `toks` list column."""
+    """DuckDB twin of dedup's shingle expression (`_grams_sql` under
+    `array_distinct`) over a `toks` list column: the distinct n-grams,
+    one per start position."""
     parts = " || ' ' || ".join(f"toks[i+{j}]" for j in range(n))
     return (
         f"list_distinct(list_transform(range(1, greatest(len(toks) - {n - 1}, 0) + 1), "

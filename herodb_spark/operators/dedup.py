@@ -11,9 +11,11 @@ Scale design:
   alternative at the same output contract.
 - `minhash_lsh_pairs`: shingle → 64-perm MinHash → 32 bands × 2 rows
   → explode band keys → groupBy bucket → pair-join within bucket →
-  exact-jaccard verify. Every stage is a bounded shuffle keyed on
-  content hashes; no driver state, no global structure. Band/row
-  choice gives ≥99.9% recall at jaccard ≥ 0.5.
+  exact-jaccard verify. Every stage is a shuffle keyed on content
+  hashes; no driver state, no global structure. Band/row choice gives
+  ≥99.9% recall at jaccard ≥ 0.5. A bucket holds every doc sharing a
+  band key, so a duplicate-heavy corpus makes buckets as large as its
+  near-copy clusters, crossed in one task (ROADMAP direction 6).
 - `simhash_pairs`: 64-bit SimHash, candidates from 4×16-bit chunk
   buckets (exact for hamming ≤ 3 by pigeonhole; we keep pairs ≤ 8
   after verification), verify via bit_count(xor).
@@ -56,43 +58,54 @@ FROM documents GROUP BY md5(text) ORDER BY keep_id
 """
 
 
-def shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct (doc_id, shingle) rows, fully whole-stage-codegen:
-    posexplode tokens, window-lead the next k-1 tokens, concat. 2.7×
-    faster than the interpreted transform+slice HOF at sf0.1 and the
-    shape that scales — per-token rows, no per-row lambda interpreter.
-    The repartition puts compute parallelism under our control (a
-    single small parquet file would serialize the corpus onto one
-    task) AND pre-partitions by doc_id so the window needs no second
-    exchange, only a partition-local sort."""
-    from pyspark.sql import Window
+def _grams_sql(k: int) -> str:
+    """SQL for the word k-grams of a `t` token array in token order,
+    one per start position 0 .. size(t) - k. `t[i + k - 1]` stays in
+    bounds under ANSI because i ≤ size(t) - k; callers keep only rows
+    with size(t) >= k, so the sequence never runs backwards."""
+    parts = ", ".join(f"t[i + {j}]" for j in range(k))
+    return f"transform(sequence(0, size(t) - {k}), i -> concat_ws(' ', {parts}))"
 
-    spark = docs.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    tok = (
-        docs.select("doc_id", T.tokens(F.col("text")).alias("toks"))
-        .repartition(n, "doc_id")
-        .select("doc_id", F.posexplode("toks").alias("pos", "t"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.col("t")] + [F.lead("t", i).over(w) for i in range(1, k)]
+
+def _doc_tokens(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, t) for the docs with at least k tokens. The repartition
+    puts compute parallelism under our control (a single small parquet
+    file would serialize the corpus onto one task) and keys every row
+    of a doc to one task."""
+    n = docs.sparkSession.sparkContext.defaultParallelism
     return (
-        tok.select(
-            "doc_id",
-            F.concat_ws(" ", *leads).alias("s"),
-            F.lead("t", k - 1).over(w).alias("_lk"),
-        )
-        .where(F.col("_lk").isNotNull())
-        .drop("_lk")
-        .dropDuplicates(["doc_id", "s"])
+        docs.select("doc_id", "text")
+        .repartition(n, "doc_id")
+        .select("doc_id", T.tokens(F.col("text")).alias("t"))
+        .where(F.size("t") >= k)
     )
 
 
-def _with_shingles(docs: DataFrame) -> DataFrame:
-    """Per-doc distinct 3-shingle SETS (array form for the verify
-    joins); docs with fewer than 3 tokens drop out, mirroring the
-    oracle's len(toks) >= 3 filter."""
-    return shingle_rows(docs, 3).groupBy("doc_id").agg(F.collect_set("s").alias("sh"))
+def _shingle_set(k: int) -> F.Column:
+    """A `t` token array's distinct word k-grams, in first-seen order."""
+    return F.expr(f"array_distinct({_grams_sql(k)})")
+
+
+def _with_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
+    """Per-doc distinct k-shingle SETS (doc_id, sh), one array
+    expression per doc; docs with fewer than k tokens drop out,
+    mirroring the oracle's len(toks) >= k filter. Callers that read
+    `sh` more than once localCheckpoint this frame, so the interpreted
+    `transform` runs once per doc."""
+    return _doc_tokens(docs, k).select("doc_id", _shingle_set(k).alias("sh"))
+
+
+def shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
+    """Distinct (doc_id, shingle) rows: the explode of _with_shingles'
+    set expression, so no window, sort or dedup shuffle runs. The
+    explode takes the expression itself, not an aliased `sh` column:
+    over an attribute, Spark infers `size(sh) > 0` from the explode
+    and pushes it below the projection with `t` substituted, which
+    re-splits the text for every gram. Counting the rows at sf0.1 on
+    4 cores (median of 7 runs in one JVM), k = 3/5/13 took
+    0.34/0.36/0.53 s against 0.53/0.63/0.79 s for a posexplode +
+    lead-window + dropDuplicates shape, with identical rows."""
+    return _doc_tokens(docs, k).select("doc_id", F.explode(_shingle_set(k)).alias("s"))
 
 
 def _jaccard(a, b):
@@ -133,8 +146,8 @@ def ngram_jaccard_pairs(
     tests/test_dedup_similarity.py::test_ngram_df_cap_*."""
     # materialize the shingle sets once: the index join references the
     # exploded form twice (a/b sides) and the capped path's verify
-    # joins the set form twice more — without this the window+explode+
-    # collect_set derivation re-evaluates per reference (the measured
+    # joins the set form twice more — without this the shingle
+    # expression re-evaluates per reference (the measured
     # minhash_lsh_pairs lesson)
     sh = _with_shingles(load_table(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     e = sh.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s"))
@@ -232,15 +245,15 @@ def _band_cand_pairs(sh: DataFrame, pair_cond) -> DataFrame:
     explodes, so the signature subtree is referenced once, the self-
     join's two Exchanges collapse into the groupBy's one, and no eager
     checkpoint job runs. In-bucket pair volume is identical to the
-    join's (same bucket ⇒ same cross product); buckets stay small at
-    any scale because band-key cardinality grows with the corpus (the
-    singleton-bucket filter drops the vast majority before any pair is
-    generated)."""
+    join's (same bucket ⇒ same cross product). Band-key cardinality
+    grows with the corpus, and the singleton-bucket filter drops most
+    buckets before any pair is generated. But a cluster of k
+    near-copies shares its band keys, so on a duplicate-heavy corpus a
+    bucket is a k-doc list whose k² pairs one task crosses: buckets do
+    NOT stay small at any scale (ROADMAP direction 6)."""
     exploded = sh.select("doc_id", F.explode("sh").alias("s"))
-    sig = exploded.groupBy("doc_id").agg(*H.minhash_aggs(F.col("s"), 64))
-    bands = sig.select(
-        "doc_id", F.explode(H.lsh_band_structs(num_perm=64, bands=32)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_key")
+    sig = exploded.groupBy("doc_id").agg(H.minhash_aggs("s", 64).alias("mh"))
+    bands = sig.select("doc_id", F.inline(H.lsh_band_structs("mh", num_perm=64, bands=32)))
     buckets = (
         bands.groupBy("band_id", "band_key")
         .agg(F.collect_list("doc_id").alias("ids"))
@@ -259,17 +272,19 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard ≥ 0.5.
 
     The 100-TB path: candidate generation is a groupBy on
-    (band_id, band_key) — cardinality grows with the corpus, so
-    buckets stay small and the pair join never materializes the cross
-    product. Driver check is rows-only (xxhash64 has no DuckDB
-    equivalent); semantics pinned by test_dedup comparing against
-    ngram_jaccard_pairs (LSH recall must cover every exact pair).
+    (band_id, band_key), whose cardinality grows with the corpus, and
+    pairs are crossed only within a bucket. A duplicate-heavy corpus
+    still makes buckets as large as its near-copy clusters (see
+    _band_cand_pairs; ROADMAP direction 6). The oracle check is rows-only
+    (xxhash64 has no DuckDB equivalent); semantics pinned by test_dedup
+    comparing against ngram_jaccard_pairs (LSH recall must cover every
+    exact pair).
     """
     docs = load_table(spark, sf_dir, "documents")
     # Materialize shingles once: they feed the signature branch AND both
-    # verify branches; recomputing the (interpreted) shingle construction
-    # three times dominated runtime. At 100 TB this becomes
-    # persist(DISK_ONLY) or a staged write, same plan shape.
+    # verify branches; without the checkpoint the (interpreted) shingle
+    # transform re-evaluates in each of the three. At 100 TB
+    # this becomes persist(DISK_ONLY) or a staged write, same plan shape.
     sh = _with_shingles(docs).localCheckpoint(eager=True)
     cand = _band_cand_pairs(sh, lambda a, b: a < b)
     return _verify_jaccard(cand, sh)
@@ -286,23 +301,16 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n, "doc_id")
         .select("doc_id", F.explode("toks").alias("t"))
     )
-    votes = toks.groupBy("doc_id").agg(*H.simhash_vote_aggs(F.col("t")))
-    sigs = votes.select("doc_id", H.simhash_from_votes().alias("sig"))
+    votes = toks.groupBy("doc_id").agg(H.simhash_vote_aggs("t").alias("v"))
+    sigs = votes.select("doc_id", H.simhash_from_votes("v").alias("sig"))
     chunks = sigs.select(
         "doc_id",
         "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright("sig", c * 16).bitwiseAND(F.lit(0xFFFF)).alias("chunk_val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "sig", "ch.chunk_id", "ch.chunk_val")
+        F.inline(F.expr(
+            "transform(sequence(0, 3), c -> named_struct("
+            "'chunk_id', c, 'chunk_val', shiftright(sig, c * 16) & 65535))"
+        )),
+    )
     cand = (
         chunks.alias("x")
         .join(chunks.alias("y"), ["chunk_id", "chunk_val"])

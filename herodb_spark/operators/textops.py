@@ -505,7 +505,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan (all Catalyst, 100-TB shape):
     - positions = one posexplode; the bigram stream is a doc-keyed
-      lead() window over it (same shape as positional_shingles).
+      lead() window over it.
       The positioned token frame is localCheckpoint'ed once and feeds
       the bigram model, the context counts, and the scoring join —
       one corpus tokenization total (the unigram op's r7 contract).

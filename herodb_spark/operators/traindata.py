@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from herodb_spark.catalog import load_table
 from herodb_spark.functions import text as T
 from herodb_spark.operators.corpus import _shingle_sql
-from herodb_spark.operators.dedup import shingle_rows
+from herodb_spark.operators.dedup import _doc_tokens, _grams_sql, shingle_rows
 
 SPAN_N = 10  # exact-dup span length (word n-gram), Lee-et-al-style
 SPAN_TAU = 0.2  # drop docs with > 20% duplicated spans
@@ -150,27 +150,11 @@ ORDER BY d.doc_id
 
 def positional_shingles(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, pos, g): the word n-gram starting at 0-based token
-    position `pos` — `shingle_rows`'s codegen'd lead-window shape,
-    keeping positions and in-doc multiplicity (maximal-span detection
-    needs both)."""
-    spark = docs.sparkSession
-    p = spark.sparkContext.defaultParallelism
-    tok = (
-        docs.select("doc_id", T.tokens(F.col("text")).alias("toks"))
-        .repartition(p, "doc_id")
-        .select("doc_id", F.posexplode("toks").alias("pos", "t"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.col("t")] + [F.lead("t", i).over(w) for i in range(1, n)]
-    return (
-        tok.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", *leads).alias("g"),
-            F.lead("t", n - 1).over(w).alias("_lk"),
-        )
-        .where(F.col("_lk").isNotNull())
-        .drop("_lk")
+    position `pos` — the posexplode of `shingle_rows`' gram
+    expression before its array_distinct, so positions and in-doc
+    multiplicity (which maximal-span detection needs) survive."""
+    return _doc_tokens(docs, n).select(
+        "doc_id", F.posexplode(F.expr(_grams_sql(n))).alias("pos", "g")
     )
 
 

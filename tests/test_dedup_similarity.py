@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -565,12 +567,10 @@ def test_band_cand_pairs_equals_bucket_self_join(spark):
     sig = (
         sh.select("doc_id", F.explode("sh").alias("s"))
         .groupBy("doc_id")
-        .agg(*H.minhash_aggs(F.col("s"), 64))
+        .agg(H.minhash_aggs("s", 64).alias("mh"))
         .localCheckpoint(eager=True)
     )
-    bands = sig.select(
-        "doc_id", F.explode(H.lsh_band_structs(num_perm=64, bands=32)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_key")
+    bands = sig.select("doc_id", F.inline(H.lsh_band_structs("mh", num_perm=64, bands=32)))
 
     is_new = F.col("doc_id") % D.INCR_NEW_MOD == 0
     is_val = sample_hash_keep(F.col("doc_id"), D.LEAK_VAL_FRAC)
@@ -605,3 +605,49 @@ def test_band_cand_pairs_equals_bucket_self_join(spark):
         got = {(r.doc_a, r.doc_b) for r in D._band_cand_pairs(sh, cond).collect()}
         assert want, f"{name}: self-join control produced no candidates"
         assert got == want, (name, sorted(got - want)[:5], sorted(want - got)[:5])
+
+
+# one literal corpus for the shingle expression's edge cases: fewer
+# than k tokens, a repeated n-gram, runs of spaces (trimmed) and tabs /
+# newlines at the ends (not trimmed: trim strips spaces only, so they
+# split off empty tokens), empty text and NULL text
+SHINGLE_DOCS = [
+    (1, "a b"),
+    (2, "x y z x y z x y z w"),
+    (3, "  lead   and  trail spaces with   many gaps  "),
+    (4, "\tone two three four five six\n"),
+    (5, ""),
+    (6, None),
+    (7, "p q r s t"),
+]
+
+
+def _ref_grams(text, k):
+    """Pure-Python word k-grams at every start position, in order."""
+    if text is None:
+        return []
+    t = re.split(r"\s+", text.strip(" "))
+    return [" ".join(t[i:i + k]) for i in range(len(t) - k + 1)]
+
+
+@pytest.mark.parametrize("k", [3, 5])
+def test_shingle_expression_matches_python_reference(spark, k):
+    """_with_shingles' sets, shingle_rows' rows and
+    positional_shingles' (pos, g) rows all come from one gram
+    expression; each must equal the pure-Python reference, with docs
+    of fewer than k tokens (and NULL text) dropped."""
+    from herodb_spark.operators.traindata import positional_shingles
+
+    docs = spark.createDataFrame(SHINGLE_DOCS, "doc_id bigint, text string")
+    ref = {d: g for d, tx in SHINGLE_DOCS if (g := _ref_grams(tx, k))}
+    assert any(len(g) > len(set(g)) for g in ref.values())  # the repeat is exercised
+
+    sets = {r.doc_id: r.sh for r in D._with_shingles(docs, k).collect()}
+    assert {d: sorted(sh) for d, sh in sets.items()} == {d: sorted(set(g)) for d, g in ref.items()}
+    assert all(len(sh) == len(set(sh)) for sh in sets.values())
+
+    rows = sorted((r.doc_id, r.s) for r in D.shingle_rows(docs, k).collect())
+    assert rows == sorted((d, s) for d, g in ref.items() for s in set(g))
+
+    pos = sorted((r.doc_id, r.pos, r.g) for r in positional_shingles(docs, k).collect())
+    assert pos == [(d, i, s) for d, g in sorted(ref.items()) for i, s in enumerate(g)]
