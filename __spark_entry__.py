@@ -55,8 +55,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # Ordering contract: the round driver grades the FIRST 50 registry
 # entries — all 50 are oracle-backed (near-duplicate operators merge
 # into tag-union queries; the merged function's docstring names its
-# constituents, and every constituent keeps its own function/oracle
-# below slot 50 and in unit tests). The rows-only queries (no
+# constituents, and only a constituent registered below slot 50
+# keeps a function and oracle of its own — the others exist only as
+# legs of their union). The rows-only queries (no
 # DuckDB-expressible oracle: simhash/LSH/IVF/PQ ANN, sketch_profile,
 # semantic clusters) produce no hash signal, so they must sit BEYOND
 # slot 50 — position among the ungraded entries is otherwise free.
@@ -65,11 +66,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_scan_filter_project": R.scan_filter_project,
     "rel_datalog_selfjoin": R.datalog_selfjoin,
     "rel_multiway_join": R.multiway_join,
-    "rel_semi_anti_join": R.semi_anti_join,  # merges semijoin_exists + antijoin_not
+    "rel_semi_anti_join": R.semi_anti_join,  # `exists` semi join + `not` anti join
     "rel_union_cases": R.union_cases,  # union of rule cases + Datalog DISTINCT set semantics
     "rel_pattern_match": R.pattern_match,  # union-type dispatch + if-then-else tiering
     # B. aggregation pipeline
-    "agg_group_having": A.group_having,  # merges group_by_agg + having_filter + percentiles
+    "agg_group_having": A.group_having,  # group_by + HAVING + exact percentiles
     # merges agg_partition_topk + agg_topk_then_avg (round-10
     # pair-merge that freed the graded slot for snapshot_maintenance)
     "agg_topk_suite": A.agg_topk_suite,
@@ -147,7 +148,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # scrub_spans + contamination_score + (r11) corpus_profile +
     # corpus_domain_cap
     "corpus_ops": CO.corpus_ops,
-    # H. text analysis (merges token_count/quality/lang_id/fingerprint)
+    # H. text analysis (token counts, quality, language guess and
+    # fingerprint in one scan)
     "text_analysis": X.text_analysis,
     # extended text quality: merges repetition_pii + unigram-LM +
     # bigram-LM logprob (r8) + NB classifier (r9) + the FineWeb/Gopher

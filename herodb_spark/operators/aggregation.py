@@ -25,41 +25,15 @@ from pyspark.sql import functions as F
 from herodb_spark.catalog import load_table
 
 
-def group_by_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`group_by exam(Count, Average)` analog on events (draft:151-157)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2).cast("double").alias("total_value"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")).cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .orderBy("event_type")
-    )
-
-
-GROUP_BY_AGG_SQL = """
-SELECT event_type,
-       COUNT(*) AS n_events,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_value,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6) AS avg_value,
-       COUNT(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
 def group_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`group_by exam(Count, Average)` + post-aggregation predicate
-    `:- average_score > 5` (draft:151-157) in one derived table — the
-    registered merge of `group_by_agg`, `having_filter`, and
-    `percentiles` (each kept for unit tests): per-user count/sum/avg/
-    distinct aggregates PLUS exact interpolated median/p90 of value
-    (Spark `percentile` matches DuckDB `quantile_cont` bit-for-bit),
-    HAVING avg_value > 55."""
+    `:- average_score > 5` (draft:151-157) in one derived table:
+    per-user count/sum/avg/distinct aggregates PLUS exact interpolated
+    median/p90 of value (Spark `percentile` matches DuckDB
+    `quantile_cont` bit-for-bit, same linear interpolation), HAVING
+    avg_value > 55. Exact percentiles sort each group; at 100 TB swap
+    in `approx_percentile` (t-digest sketch, one pass, mergeable) —
+    same call shape, bounded error instead of a per-group sort."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
@@ -124,62 +98,6 @@ FROM (
 )
 WHERE rk <= 3
 ORDER BY o_orderpriority, rk
-"""
-
-
-def having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-aggregation predicate `:- average_score > 5`
-    (draft:156-157): users whose average event value exceeds 55."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")).cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_value"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .where(F.col("avg_value") > 55)
-        .orderBy("user_id")
-    )
-
-
-HAVING_FILTER_SQL = """
-SELECT user_id,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6) AS avg_value,
-       COUNT(*) AS n
-FROM events
-GROUP BY user_id
-HAVING ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6) > 55
-ORDER BY user_id
-"""
-
-
-def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (median / p90 of order value per
-    priority) — Spark's `percentile` matches DuckDB's `quantile_cont`
-    bit-for-bit (same linear interpolation). Exact percentiles sort
-    each group; at 100 TB swap in `approx_percentile` (t-digest sketch,
-    one pass, mergeable) — same call shape, bounded error instead of a
-    per-group sort."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(
-            F.round(F.percentile("o_totalprice", 0.5), 6).alias("median_price"),
-            F.round(F.percentile("o_totalprice", 0.9), 6).alias("p90_price"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-PERCENTILES_SQL = """
-SELECT o_orderpriority,
-       ROUND(quantile_cont(o_totalprice, 0.5), 6) AS median_price,
-       ROUND(quantile_cont(o_totalprice, 0.9), 6) AS p90_price,
-       COUNT(*) AS n_orders
-FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
 

@@ -247,14 +247,14 @@ def scrub_spans(docs: DataFrame, benchmark: DataFrame, n: int = DECON_NGRAM) -> 
     training pipeline wants when contamination is a quote inside an
     otherwise-good document.
 
-    Shape: posexplode words → window-lead n-grams with START
-    POSITIONS → semi-join the broadcast benchmark vocabulary → expand
-    each hit to its n covered positions → anti-join covered words out
-    → reassemble per doc from the position-sorted survivors. Every
-    stage is per-token rows keyed on doc_id (one shuffle; the word set
-    is localCheckpoint'ed once and feeds the gram, survivor, and
-    total branches), no row-at-a-time Python; work ∝ tokens,
-    reassembly memory ∝ one doc.
+    Shape: per-doc token arrays → positional n-grams (dedup's gram
+    expression, posexploded with START POSITIONS) → semi-join the
+    broadcast benchmark vocabulary → expand each hit to its n covered
+    positions → anti-join covered words out → reassemble per doc from
+    the position-sorted survivors. Every stage is keyed on doc_id (one
+    shuffle; the token arrays are localCheckpoint'ed once and feed the
+    gram and survivor branches), no row-at-a-time Python; work ∝
+    tokens, reassembly memory ∝ one doc.
 
     SINGLE-PASS contract: removal can rejoin flanking tokens into a
     NEW benchmark n-gram (…a b [bench] c d… where "a b c d" completes
@@ -266,31 +266,20 @@ def scrub_spans(docs: DataFrame, benchmark: DataFrame, n: int = DECON_NGRAM) -> 
     Returns (doc_id, n_words, n_removed, clean_md5) for AFFECTED docs
     (n_removed > 0); clean_md5 = md5 of the space-rejoined remainder
     ('' when everything was scrubbed)."""
-    from pyspark.sql import Window
+    from herodb_spark.operators.dedup import _grams_sql, shingle_rows
 
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
-    toks = docs.select("doc_id", T.tokens(F.col("text")).alias("toks"))
-    totals = toks.select("doc_id", F.size("toks").cast("long").alias("n_words"))
-    words = (
-        toks.repartition(par, "doc_id")
-        .select("doc_id", F.posexplode("toks").alias("pos", "w"))
-        .localCheckpoint(eager=True)  # one tokenize+shuffle feeds all three consumers
+    toks = docs.select("doc_id", T.tokens(F.col("text")).alias("t"))
+    totals = toks.select("doc_id", F.size("t").cast("long").alias("n_words"))
+    # one tokenize+shuffle feeds the gram and survivor branches
+    keyed = toks.repartition(par, "doc_id").localCheckpoint(eager=True)
+    words = keyed.select("doc_id", F.posexplode("t").alias("pos", "w"))
+    # the n-gram starting at each position, as dedup defines it; the
+    # posexplode takes the expression itself (see dedup.shingle_rows)
+    starts = keyed.where(F.size("t") >= n).select(
+        "doc_id", F.posexplode(F.expr(_grams_sql(n))).alias("pos", "g")
     )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    gram = F.concat_ws(" ", F.col("w"), *[F.lead("w", i).over(win) for i in range(1, n)])
-    # BOTH window expressions in one projection over the full word set:
-    # filtering first would make the gram's lead() skip the removed
-    # tail rows and emit truncated grams
-    starts = (
-        words.select(
-            "doc_id", "pos", gram.alias("g"), F.lead("w", n - 1).over(win).alias("_last")
-        )
-        .where(F.col("_last").isNotNull())
-        .select("doc_id", "pos", "g")
-    )
-    from herodb_spark.operators.dedup import shingle_rows
-
     bench = shingle_rows(benchmark, n).select(F.col("s").alias("g")).distinct()
     hits = starts.join(F.broadcast(bench), "g", "left_semi")
     covered = (

@@ -1,5 +1,5 @@
-"""Round-out coverage: sliding windows, weighted shortest path, two
-more TPC-H-pattern queries. All oracle-checked."""
+"""Round-out coverage: weighted shortest path and two more
+TPC-H-pattern queries. All oracle-checked."""
 
 from __future__ import annotations
 
@@ -9,32 +9,6 @@ from pyspark.sql import functions as F
 from herodb_spark.catalog import load_table
 from herodb_spark.graph import algorithms as GA
 from herodb_spark.graph import edges as GE
-
-
-def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows (1h window, 15-min slide) per event_type —
-    F.window with a slide assigns each event to duration/slide
-    windows; the oracle enumerates the same 4 offsets explicitly."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
-STREAM_SLIDING_AGG_SQL = """
-SELECT strftime(time_bucket(INTERVAL 15 MINUTE, ts) - k * INTERVAL 15 MINUTE, '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type,
-       COUNT(*) AS n_events
-FROM events, generate_series(0, 3) t(k)
-GROUP BY 1, 2 ORDER BY window_start, event_type
-"""
 
 
 def graph_weighted_sssp(spark: SparkSession, sf_dir: str, edges=None) -> DataFrame:

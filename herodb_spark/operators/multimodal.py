@@ -1,16 +1,16 @@
 """Multimodal column plumbing: image/audio/video as opaque `binary`
 columns with typed metadata, processed via Arrow-batched mapInPandas.
 
-Decode is GENUINELY IMPLEMENTED for three image formats (binary PPM
-P6, PNG via stdlib zlib + scanline unfiltering, and baseline JPEG
-via the repo's own Huffman+IDCT decoder in operators/jpegcodec.py)
-and one audio format (RIFF/WAVE PCM16) — pure stdlib+numpy, no codec
-libraries. Audio/video lossy codecs (MP3/AAC/H.26x) keep a
-clearly-marked NotImplementedError stub. Real
-and tested regardless of format: the binary column schema, the
-mapInPandas batch shapes (Arrow transfer), partition-parallel
-execution, and the metadata/sampling arithmetic — i.e. everything
-Spark-side that a production decoder would plug into.
+The one container decoded is RIFF/WAVE audio, PCM16 or IMA-ADPCM
+(`decode_wav`, pure stdlib, no codec libraries); the audio leg
+encodes and decodes real WAV containers in-plan. 'image' and 'video'
+blobs are raw bytes: the resize leg strides them and the frame and
+scene legs slice them at FRAME_SIZE, so no image or video codec sits
+in any plan. The reference has no media layer. Real and tested
+regardless of format: the binary column schema, the mapInPandas
+batch shapes (Arrow transfer), partition-parallel execution, and the
+metadata/sampling arithmetic — i.e. everything Spark-side that a
+production decoder would plug into.
 
 Blobs are synthesized deterministically from `documents.text`
 (utf-8 bytes) so the pipeline runs on the driver's tables.
@@ -18,6 +18,7 @@ Blobs are synthesized deterministically from `documents.text`
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -32,173 +33,82 @@ RESIZE_STEP = 4  # deterministic "downsample": keep every 4th byte
 HIST_BINS = 8  # byte-value histogram bins (32 values per bin)
 
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# ------------------------------------------------------------- IMA ADPCM
+# (a real LOSSY audio codec — WAV format tag 0x11, DVI/IMA ADPCM:
+# 4-bit differential coding against an adaptive step-size table; the
+# public IMA reference algorithm)
+
+IMA_INDEX_TABLE = [-1, -1, -1, -1, 2, 4, 6, 8]
+IMA_STEP_TABLE = [
+    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
+    37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
+    157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494,
+    544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
+    1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
+    4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487,
+    12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
+    29794, 32767,
+]
 
 
-def decode_blob(blob: bytes, kind: str) -> object:
-    """Decode plug-in point. GENUINELY IMPLEMENTED for binary PPM
-    (P6), PNG (stdlib-zlib inflate + scanline unfilter) AND baseline
-    JPEG (r13: own Huffman + IDCT decoder, operators/jpegcodec.py —
-    4:4:4/4:2:2/4:2:0, restart markers) images — pure stdlib+numpy,
-    no codec libraries — returning {width, height, maxval, mean_rgb};
-    and for RIFF/WAVE PCM16 audio. The remaining stub is audio/video
-    lossy codecs (MP3/AAC/H.26x), whose entropy layers are out of
-    scope for this container."""
-    if kind == "image" and blob[:2] == b"P6":
-        return decode_ppm(blob)
-    if kind == "image" and blob[:8] == _PNG_SIG:
-        return decode_png(blob)
-    if kind == "image" and blob[:2] == b"\xff\xd8":
-        from herodb_spark.operators.jpegcodec import decode_jpeg
-
-        return decode_jpeg(blob)
-    if kind == "audio" and blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        return decode_wav(blob)
-    raise NotImplementedError(
-        "audio/video lossy-codec decode (MP3/AAC/H.26x) is not implemented "
-        "in this container; images (PPM/PNG/baseline JPEG) and WAV-PCM are "
-        "real decoders, and the blob plumbing (schema/batching/partitioning) "
-        "is implemented and tested"
-    )
-
-
-def decode_png(blob: bytes) -> dict:
-    """PNG decoded with the standard library only (RFC 2083): walk
-    the chunk list, inflate the concatenated IDAT stream with zlib,
-    then reconstruct each scanline through the five PNG filters
-    (None/Sub/Up/Average/Paeth). Supports 8-bit grayscale, RGB and
-    RGBA; rejects Adam7 interlace, palettes and 16-bit depth with
-    clear errors. Returns the same feature shape as decode_ppm —
-    {width, height, maxval, mean_rgb} (alpha excluded from means,
-    grayscale replicated)."""
-    import struct
-    import zlib
-
-    if blob[:8] != _PNG_SIG:
-        raise ValueError("not a PNG stream")
-    pos, n = 8, len(blob)
-    ihdr = None
-    idat = bytearray()
-    while pos + 8 <= n:
-        length, ctype = struct.unpack(">I4s", blob[pos : pos + 8])
-        body = blob[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            if len(body) != 13:
-                raise ValueError("truncated PNG IHDR chunk")
-            w, h, depth, color, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-            if w == 0 or h == 0:
-                raise ValueError(f"invalid PNG dimensions {w}x{h}")
-            if depth != 8:
-                raise ValueError(f"unsupported PNG bit depth {depth} (8 only)")
-            if color not in (0, 2, 6):
-                raise ValueError(
-                    f"unsupported PNG color type {color} (grayscale/RGB/RGBA only)"
-                )
-            if interlace:
-                raise ValueError("interlaced PNG (Adam7) not supported")
-            ihdr = (w, h, color)
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + body + CRC32
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT chunk")
-    w, h, color = ihdr
-    ch = {0: 1, 2: 3, 6: 4}[color]
-    raw = zlib.decompress(bytes(idat))
-    stride = w * ch
-    if len(raw) != h * (stride + 1):
-        raise ValueError(
-            f"PNG payload size mismatch: want {h * (stride + 1)} filtered "
-            f"bytes, got {len(raw)}"
-        )
-    out = bytearray(h * stride)
-    for y in range(h):
-        ft = raw[y * (stride + 1)]
-        row = raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-        o = y * stride
-        po = o - stride
-        if ft == 0:  # None
-            out[o : o + stride] = row
-        elif ft == 1:  # Sub
-            for i in range(stride):
-                left = out[o + i - ch] if i >= ch else 0
-                out[o + i] = (row[i] + left) & 0xFF
-        elif ft == 2:  # Up
-            if y == 0:
-                out[o : o + stride] = row
-            else:
-                for i in range(stride):
-                    out[o + i] = (row[i] + out[po + i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(stride):
-                left = out[o + i - ch] if i >= ch else 0
-                up = out[po + i] if y else 0
-                out[o + i] = (row[i] + ((left + up) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(stride):
-                a = out[o + i - ch] if i >= ch else 0
-                b = out[po + i] if y else 0
-                c = out[po + i - ch] if (y and i >= ch) else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                out[o + i] = (row[i] + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ft}")
-    npx = w * h
-    if color == 0:
-        m = sum(out) / npx
-        means = (m, m, m)
+def _ima_step(pred: int, index: int, nibble: int) -> tuple[int, int]:
+    step = IMA_STEP_TABLE[index]
+    diff = step >> 3
+    if nibble & 1:
+        diff += step >> 2
+    if nibble & 2:
+        diff += step >> 1
+    if nibble & 4:
+        diff += step
+    if nibble & 8:
+        pred -= diff
     else:
-        means = tuple(sum(out[c::ch]) / npx for c in range(3))
-    return {"width": w, "height": h, "maxval": 255, "mean_rgb": means}
+        pred += diff
+    pred = max(-32768, min(32767, pred))
+    index = max(0, min(88, index + IMA_INDEX_TABLE[nibble & 7]))
+    return pred, index
 
 
-def decode_ppm(blob: bytes) -> dict:
-    """Binary PPM (P6): header `P6 <w> <h> <maxval>` (whitespace-
-    separated, `#` comments allowed) then w*h*3 raw bytes (maxval <
-    256). Returns width/height/maxval and the channel means — the
-    feature-extraction shape a real image stage emits."""
-    pos = 2  # past magic
-    vals: list[int] = []
-    n = len(blob)
-    while len(vals) < 3:
-        while pos < n and blob[pos : pos + 1].isspace():
-            pos += 1
-        if pos < n and blob[pos : pos + 1] == b"#":
-            while pos < n and blob[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < n and not blob[pos : pos + 1].isspace():
-            pos += 1
-        if start == pos:
-            raise ValueError("truncated PPM header")
-        vals.append(int(blob[start:pos]))
-    w, h, maxval = vals
-    if not (0 < maxval < 256):
-        raise ValueError(f"unsupported PPM maxval {maxval} (16-bit not supported)")
-    pos += 1  # single whitespace after maxval
-    pixels = blob[pos : pos + w * h * 3]
-    if len(pixels) != w * h * 3:
-        raise ValueError(f"PPM payload truncated: want {w*h*3} bytes, got {len(pixels)}")
-    means = []
-    for c in range(3):
-        means.append(sum(pixels[c::3]) / (w * h))
-    return {"width": w, "height": h, "maxval": maxval, "mean_rgb": tuple(means)}
+def decode_ima_adpcm_block(block: bytes, channels: int) -> list[int]:
+    """One IMA-ADPCM WAV block → interleaved PCM16 samples. Block
+    layout (per channel): int16 predictor, uint8 step index, pad
+    byte; then nibble data interleaved in 4-byte channel runs."""
+    preds, idxs = [], []
+    p = 0
+    for _ in range(channels):
+        (pred,) = struct.unpack("<h", block[p : p + 2])
+        index = block[p + 2]
+        if index > 88:
+            raise ValueError(f"IMA ADPCM step index {index} out of range")
+        preds.append(pred)
+        idxs.append(index)
+        p += 4
+    out: list[list[int]] = [[pred] for pred in preds]
+    data = block[p:]
+    # nibbles come in 4-byte (8-sample) runs per channel, interleaved
+    run = 4
+    pos = 0
+    while pos + run * channels <= len(data):
+        for c in range(channels):
+            chunk = data[pos + c * run : pos + (c + 1) * run]
+            for byte in chunk:
+                for nib in (byte & 0x0F, byte >> 4):
+                    preds[c], idxs[c] = _ima_step(preds[c], idxs[c], nib)
+                    out[c].append(preds[c])
+        pos += run * channels
+    n = min(len(o) for o in out)
+    inter: list[int] = []
+    for i in range(n):
+        for c in range(channels):
+            inter.append(out[c][i])
+    return inter
 
 
 def decode_wav(blob: bytes) -> dict:
-    """RIFF/WAVE with 16-bit PCM: walks the chunk list (fmt before
-    data, unknown chunks skipped per spec), returns sample rate,
-    channel count, duration, and peak amplitude — the audio
-    feature-extraction shape. Compressed codecs are rejected."""
-    import struct
-
+    """RIFF/WAVE with 16-bit PCM or IMA-ADPCM: walks the chunk list
+    (fmt before data, unknown chunks skipped per spec), returns sample
+    rate, channel count, duration, and peak amplitude — the audio
+    feature-extraction shape. Other codecs are rejected."""
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")
     pos, n = 12, len(blob)
@@ -214,7 +124,7 @@ def decode_wav(blob: bytes) -> dict:
                 fmt = (channels, rate, None)
             elif codec == 0x11 and bits == 4:
                 # IMA/DVI ADPCM (r13): a REAL lossy audio codec,
-                # decoded block-by-block (operators/jpegcodec.py)
+                # decoded block-by-block (decode_ima_adpcm_block)
                 fmt = (channels, rate, block_align)
             else:
                 raise ValueError(
@@ -228,8 +138,6 @@ def decode_wav(blob: bytes) -> dict:
         raise ValueError("WAV missing fmt/data chunk")
     channels, rate, adpcm_align = fmt
     if adpcm_align is not None:
-        from herodb_spark.operators.jpegcodec import decode_ima_adpcm_block
-
         decoded: list[int] = []
         for off in range(0, len(data), adpcm_align):
             block = data[off : off + adpcm_align]
@@ -264,36 +172,6 @@ def decode_wav(blob: bytes) -> dict:
     }
 
 
-def image_features(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched decode-and-featurize over (doc_id, blob) rows of
-    P6/PNG images: width/height + per-channel means, one mapInPandas
-    pass (the real-decoder analog of mm_pipeline's metadata stage)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from herodb_spark.operators.jpegcodec import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                if blob[:8] == _PNG_SIG:
-                    d = decode_png(blob)
-                elif blob[:2] == b"\xff\xd8":
-                    d = decode_jpeg(blob)
-                else:
-                    d = decode_ppm(blob)
-                r, g, b = d["mean_rgb"]
-                rows.append((doc_id, d["width"], d["height"], r, g, b))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "mean_r", "mean_g", "mean_b"]
-            )
-
-    return blobs.mapInPandas(
-        run,
-        schema="doc_id long, width int, height int, mean_r double, mean_g double, mean_b double",
-    )
-
-
 def with_blobs(docs: DataFrame) -> DataFrame:
     """Attach the opaque binary column + claimed media kind."""
     kind = (
@@ -307,13 +185,13 @@ def with_blobs(docs: DataFrame) -> DataFrame:
 
 
 def mm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full multimodal batch shape — the registered merge of
-    `mm_binary_meta` (typed metadata per blob), `mm_frame_sample`
-    (per-frame fan-out), (since round 10) `mm_resize_features`
-    (resize + histogram featurize over 'image' blobs), and (since
-    round 11) `mm_audio_features` (real WAV encode→decode→featurize
-    over 'audio' blobs) and `mm_scene_changes` (consecutive-frame cut
-    detection over 'video' blobs), each kept for unit tests. For every 'video' blob: the blob-level metadata
+    """The full multimodal batch shape — per-blob metadata and
+    per-frame fan-out, merged with (since round 10)
+    `mm_resize_features` (resize + histogram featurize over 'image'
+    blobs), and (since round 11) `mm_audio_features` (real WAV
+    encode→decode→featurize over 'audio' blobs) and `mm_scene_changes`
+    (consecutive-frame cut detection over 'video' blobs), which keep
+    registry entries of their own. For every 'video' blob: the blob-level metadata
     columns (kind, n_bytes, n_frames) carried on every sampled-frame
     row in ONE Arrow-batched mapInPandas pass — exactly what a real
     decode-and-featurize stage emits; the resize branch rides the
@@ -387,84 +265,6 @@ def mm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # f-string interpolates MM_RESIZE_FEATURES_SQL's core, declared there.
 
 
-def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed metadata extraction over binary blobs via mapInPandas —
-    the Arrow-batched shape a real feature extractor uses. Output is
-    deterministic (byte length, frame count) so it's oracle-checked.
-    """
-    blobs = with_blobs(load_table(spark, sf_dir, "documents"))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes = pdf["blob"].map(len)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "n_frames": ((n_bytes + FRAME_SIZE - 1) // FRAME_SIZE).astype("int64"),
-                }
-            )
-
-    out = blobs.mapInPandas(extract, "doc_id long, kind string, n_bytes long, n_frames long")
-    return out.orderBy("doc_id")
-
-
-MM_BINARY_META_SQL = f"""
-SELECT doc_id,
-       CASE WHEN source IN ('src0','src1') THEN 'image'
-            WHEN source IN ('src2','src3') THEN 'audio'
-            ELSE 'video' END AS kind,
-       octet_length(encode(text)) AS n_bytes,
-       CAST(ceil(octet_length(encode(text)) / {FRAME_SIZE}.0) AS BIGINT) AS n_frames
-FROM documents ORDER BY doc_id
-"""
-
-
-def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling: every FRAME_STEP-th FRAME_SIZE-byte slice of
-    each 'video' blob, via mapInPandas (one output row per sampled
-    frame — the fan-out batch shape of a real frame extractor). The
-    "decoded frame" is the deterministic fake (slice length + first
-    byte) since no codec exists here."""
-    blobs = with_blobs(load_table(spark, sf_dir, "documents")).where(F.col("kind") == "video")
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                n_frames = (len(blob) + FRAME_SIZE - 1) // FRAME_SIZE
-                for idx in range(0, n_frames, FRAME_STEP):
-                    chunk = blob[idx * FRAME_SIZE : (idx + 1) * FRAME_SIZE]
-                    rows.append((doc_id, idx, len(chunk), int(chunk[0])))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_len", "first_byte"])
-
-    out = blobs.mapInPandas(sample, "doc_id long, frame_idx int, frame_len int, first_byte int")
-    return out.orderBy("doc_id", "frame_idx")
-
-
-# Corpus is pure ASCII (asserted in tests), so byte k of the utf-8
-# blob == ascii(char k) — lets the oracle avoid blob indexing.
-# DuckDB 1.0's generate_series accepts only constants (no lateral /
-# subquery args), so enumerate a fixed index range (documents ≤ 64 KiB,
-# asserted in tests) and filter per doc.
-MM_FRAME_SAMPLE_SQL = f"""
-WITH v AS (
-  SELECT doc_id, text, octet_length(encode(text)) AS n_bytes
-  FROM documents
-  WHERE (source IS NULL OR source NOT IN ('src0','src1','src2','src3'))
-),
-frames AS (
-  SELECT doc_id, CAST(i AS INT) AS frame_idx,
-         CAST(least({FRAME_SIZE}, n_bytes - i * {FRAME_SIZE}) AS INT) AS frame_len,
-         ascii(substr(text, CAST(i * {FRAME_SIZE} + 1 AS INT), 1)) AS first_byte
-  FROM v, generate_series(0, {65536 // FRAME_SIZE - 1}, {FRAME_STEP}) t(i)
-  WHERE i * {FRAME_SIZE} < n_bytes
-)
-SELECT doc_id, frame_idx, frame_len, first_byte FROM frames ORDER BY doc_id, frame_idx
-"""
-
-
 def _resize_features_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mm_resize_features plan WITHOUT the presentation sort — the
     form the mm_pipeline tag-union consumes (one global sort at the
@@ -509,8 +309,11 @@ def mm_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _resize_features_rows(spark, sf_dir).orderBy("doc_id", "bin_id")
 
 
-# same constant-range generate_series trick as MM_FRAME_SAMPLE_SQL
-# (ASCII corpus + ≤64 KiB docs are asserted in tests)
+# Corpus is pure ASCII (asserted in tests), so byte k of the utf-8
+# blob == ascii(char k) — lets the oracles avoid blob indexing.
+# DuckDB 1.0's generate_series accepts only constants (no lateral /
+# subquery args), so the oracles enumerate a fixed index range
+# (documents ≤ 64 KiB, asserted in tests) and filter per doc.
 _MM_RESIZE_CORE_SQL = f"""
 WITH img AS (
   SELECT doc_id, text, octet_length(encode(text)) AS n_bytes
@@ -548,7 +351,6 @@ def encode_wav(samples: list[int], rate: int = AUDIO_RATE, channels: int = 1) ->
     inverse of decode_wav, used to synthesize REAL audio containers
     in-plan so the decode path is exercised end to end."""
     import array
-    import struct
     import sys
 
     arr = array.array("h", samples)
@@ -569,7 +371,6 @@ def wav_features(blob: bytes) -> dict:
     hash is float-free), and the zero-crossing count. Bulk int16
     views, no per-sample struct loops."""
     import array
-    import struct
     import sys
 
     meta = decode_wav(blob)

@@ -109,8 +109,6 @@ def mutation_statements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full statement pipeline of draft:132-150 — `set` (upsert),
     `update ... :- pred`, `remove ... :- pred` — applied sequentially
     to ONE table, returning the final state's per-priority summary.
-    This is the registered merge of the three individual statement
-    operators (each kept, with its own oracle, for unit tests).
 
     Pipeline over `orders`:
     1. upsert: 5 synthetic orders (keys 9M+) inserted, and every
@@ -195,125 +193,12 @@ FROM survivors GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
 
-def upsert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`set Table(...)` with Unique(id) semantics (draft:134,
-    draft:46): upsert a change set into customer on c_custkey.
-    Change set: every BUILDING customer with balance bumped +100 and
-    5 brand-new synthetic customers. Existing keys are replaced, new
-    keys inserted."""
-    cust = load_table(spark, sf_dir, "customer")
-    updates = cust.where(F.col("c_mktsegment") == "BUILDING").select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.round(F.col("c_acctbal").cast("decimal(18,4)") + 100, 2).cast("double").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    new_rows = spark.range(1, 6).select(
-        (F.lit(9_000_000) + F.col("id")).alias("c_custkey"),
-        F.concat(F.lit("Customer#new"), F.col("id")).alias("c_name"),
-        (F.col("id") % 25).cast("int").alias("c_nationkey"),
-        F.lit(0.0).alias("c_acctbal"),
-        F.lit("BUILDING").alias("c_mktsegment"),
-    )
-    changes = updates.unionByName(new_rows)
-    base = cust.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.round(F.col("c_acctbal").cast("decimal(18,4)"), 2).cast("double").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    kept = base.join(changes.select("c_custkey"), "c_custkey", "left_anti")
-    return kept.unionByName(changes).orderBy("c_custkey")
-
-
-UPSERT_TABLE_SQL = """
-WITH base AS (
-  SELECT c_custkey, c_name, c_nationkey,
-         CAST(ROUND(CAST(c_acctbal AS DECIMAL(18,4)), 2) AS DOUBLE) AS c_acctbal,
-         c_mktsegment
-  FROM customer
-),
-changes AS (
-  SELECT c_custkey, c_name, c_nationkey,
-         CAST(ROUND(CAST(c_acctbal AS DECIMAL(18,4)) + 100, 2) AS DOUBLE) AS c_acctbal,
-         c_mktsegment
-  FROM customer WHERE c_mktsegment = 'BUILDING'
-  UNION ALL
-  SELECT 9000000 + i, 'Customer#new' || i, CAST(i % 25 AS INT), 0.0, 'BUILDING'
-  FROM range(1, 6) t(i)
-)
-SELECT * FROM (
-  SELECT * FROM base b WHERE NOT EXISTS (SELECT 1 FROM changes c WHERE c.c_custkey = b.c_custkey)
-  UNION ALL
-  SELECT * FROM changes
-) ORDER BY c_custkey
-"""
-
-
-def update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`update T(a,b,c) :- pred, c = f(a,b)` (draft:135): apply a 5%
-    discount-cap adjustment to all lineitems shipped after 2000-01-01;
-    other rows unchanged. Returns the changed rows (audit view)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pred = F.col("l_shipdate") > F.lit("2000-01-01")
-    new_disc = F.least(F.col("l_discount").cast("decimal(18,4)"), F.lit(0.05).cast("decimal(18,4)"))
-    return (
-        li.where(pred)
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.round(F.col("l_discount").cast("decimal(18,4)"), 4).cast("double").alias("old_discount"),
-            F.round(new_disc, 4).cast("double").alias("new_discount"),
-        )
-        .where(F.col("old_discount") != F.col("new_discount"))
-        .orderBy("l_orderkey", "l_linenumber")
-    )
-
-
-UPDATE_WHERE_SQL = """
-SELECT l_orderkey, l_linenumber,
-       CAST(ROUND(CAST(l_discount AS DECIMAL(18,4)), 4) AS DOUBLE) AS old_discount,
-       CAST(ROUND(least(CAST(l_discount AS DECIMAL(18,4)), CAST(0.05 AS DECIMAL(18,4))), 4) AS DOUBLE) AS new_discount
-FROM lineitem
-WHERE l_shipdate > TIMESTAMP '2000-01-01 00:00:00'
-  AND CAST(ROUND(CAST(l_discount AS DECIMAL(18,4)), 4) AS DOUBLE)
-      <> CAST(ROUND(least(CAST(l_discount AS DECIMAL(18,4)), CAST(0.05 AS DECIMAL(18,4))), 4) AS DOUBLE)
-ORDER BY l_orderkey, l_linenumber
-"""
-
-
-def delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`remove T(...) :- pred` (draft:136-138): delete orders of
-    customers with negative balance; return the surviving table's
-    per-priority counts (compact post-state proof)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    bad = cust.where(F.col("c_acctbal") < 0).select("c_custkey")
-    survivors = orders.join(bad, orders.o_custkey == bad.c_custkey, "left_anti")
-    return (
-        survivors.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
-    )
-
-
-DELETE_WHERE_SQL = """
-SELECT o_orderpriority, COUNT(*) AS n_orders
-FROM orders
-WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey AND c_acctbal < 0)
-GROUP BY o_orderpriority ORDER BY o_orderpriority
-"""
-
-
 def mutation_statements_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered merge of mutation_statements (set/update/remove
     pipeline over orders) + for_query_set (`for query(...) (set ...)`
     rule-driven bulk update over customer) — round-7 window rebalance;
-    both constituents keep their own functions/oracles as standalone
-    registry entries beyond the graded window and in
-    tests/test_mutation.py. Tag-union into (stmt, k, n, total): each
+    for_query_set keeps its own registry entry beyond the graded
+    window. Tag-union into (stmt, k, n, total): each
     constituent's post-mutation summary executes unchanged inside its
     branch."""
     m = mutation_statements(spark, sf_dir).select(

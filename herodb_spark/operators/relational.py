@@ -110,50 +110,11 @@ ORDER BY r_name
 """
 
 
-def semijoin_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`exists` subgoal (draft:108, 142-146): customers with at least
-    one URGENT order → left semi join (no row multiplication)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")
-    )
-
-
-SEMIJOIN_EXISTS_SQL = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-ORDER BY c_custkey
-"""
-
-
-def antijoin_not(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`not` subgoal (draft:108): parts never ordered → left anti join."""
-    part = load_table(spark, sf_dir, "part")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        part.join(li, part.p_partkey == li.l_partkey, "left_anti")
-        .select("p_partkey", "p_name", "p_brand")
-        .orderBy("p_partkey")
-    )
-
-
-ANTIJOIN_NOT_SQL = """
-SELECT p_partkey, p_name, p_brand
-FROM part
-WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-ORDER BY p_partkey
-"""
-
-
 def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`exists` + `not` subgoals (draft:108, 142-146) in one derived
-    table: the registered merge of `semijoin_exists` and `antijoin_not`
-    (each kept for unit tests). Both rule heads share the
-    (key, name, attr) shape, so the union is natural:
+    table: a left semi join (no row multiplication) and a left anti
+    join. Both rule heads share the (key, name, attr) shape, so the
+    union is natural:
 
         Interesting(k,n,a,'exists_urgent_customer') :- Customer(...), exists Orders(urgent)
         Interesting(k,n,a,'never_ordered_part')     :- Part(...), not Lineitem(...)
@@ -198,7 +159,8 @@ SELECT * FROM (
 
 def union_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple rule cases for one head (draft:84-87):
-    HighValue(k, src) :- Orders(k, price>X)  |  Customer(k, bal>Y)."""
+    HighValue(k, src) :- Orders(k, price>X)  |  Customer(k, bal>Y),
+    under Datalog set semantics (DISTINCT)."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     a = orders.where(F.col("o_totalprice") > 400000).select(
@@ -219,47 +181,10 @@ SELECT DISTINCT * FROM (
 """
 
 
-def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Datalog set semantics: the set of (custkey, priority) pairs."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.select("o_custkey", "o_orderpriority").distinct().orderBy("o_custkey", "o_orderpriority")
-
-
-DISTINCT_ROWS_SQL = """
-SELECT DISTINCT o_custkey, o_orderpriority FROM orders ORDER BY o_custkey, o_orderpriority
-"""
-
-
-def conditional_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """if-then-else boolean expr (draft:107) → CASE WHEN tiering."""
-    orders = load_table(spark, sf_dir, "orders")
-    tier = (
-        F.when(F.col("o_totalprice") > 300000, F.lit("high"))
-        .when(F.col("o_totalprice") > 100000, F.lit("mid"))
-        .otherwise(F.lit("low"))
-    )
-    return (
-        orders.select(tier.alias("tier"))
-        .groupBy("tier")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("tier")
-    )
-
-
-CONDITIONAL_EXPR_SQL = """
-SELECT CASE WHEN o_totalprice > 300000 THEN 'high'
-            WHEN o_totalprice > 100000 THEN 'mid'
-            ELSE 'low' END AS tier,
-       COUNT(*) AS n_orders
-FROM orders GROUP BY 1 ORDER BY tier
-"""
-
-
 def pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-type pattern matching (draft:124-131) + if-then-else
-    boolean expr (draft:107) in one derived table (the registered
-    merge of the tag-dispatch and CASE-tier operators —
-    `conditional_expr` is kept for unit tests). Events form a tagged
+    boolean expr (draft:107, CASE WHEN tiering) in one derived table.
+    Events form a tagged
     union on event_type; dispatch computes a per-variant value
     (`purchase{v} → v; error{} → 0; _ → v/2`), and the if-then-else
     tiers each event's raw value; aggregation is per (variant, tier).

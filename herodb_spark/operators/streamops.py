@@ -58,14 +58,15 @@ def stream_window_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling (1h), sliding (1h window / 15min slide), and all-time
     keep-first-dedup aggregates in one derived table, tagged by
     `win_kind` — the registered merge of `stream_tumbling_agg`,
-    `stream_sliding_agg`, `stream_late_dedup`, `stream_sessionize`
-    (since round 5), `stream_interval_join` (since round 7's
-    window rebalance), and — since round 10 — the two CUSTOM STATEFUL
+    `stream_sessionize` (since round 5), `stream_interval_join` (since
+    round 7's window rebalance), a sliding-window and a keep-first
+    dedup leg, and — since round 10 — the two CUSTOM STATEFUL
     operators `stream_stateful_spend` / `stream_stateful_sessionize`,
     which run as REAL multi-micro-batch applyInPandasWithState
     Structured Streaming queries inside this graded plan (see
-    `_stateful_stream_legs`); each constituent kept for unit/streaming
-    tests and for bench.py, which times the standalone sessionize. The
+    `_stateful_stream_legs`). `stream_sessionize` and
+    `stream_interval_join` keep registry entries of their own, and
+    bench.py times the standalone sessionize. The
     windowed branches run as F.window group-bys — exactly the
     Structured Streaming plan shape; the dedup branch is the batch
     parity of dropDuplicates-with-watermark (window = all time); the
@@ -582,19 +583,3 @@ WHERE p.event_type = 'purchase' AND c.event_type = 'click'
 ORDER BY p.user_id, purchase_id, click_id
 """
 
-
-def stream_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return SO.dedup_keep_first(ev).orderBy("event_type")
-
-
-STREAM_LATE_DEDUP_SQL = """
-WITH first AS (
-  SELECT * FROM (
-    SELECT event_type,
-           ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY ts, user_id, event_type, value) AS rn
-    FROM events
-  ) WHERE rn = 1
-)
-SELECT event_type, COUNT(*) AS n_unique_events FROM first GROUP BY event_type ORDER BY event_type
-"""

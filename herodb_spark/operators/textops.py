@@ -21,9 +21,7 @@ def text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counts (whitespace + BPE-ish), punctuation, quality score,
     language guess, and normalization fingerprint as sibling columns
     of a single projection. This is the shape a real training-data
-    pipeline runs (one pass computes every feature), and it is the
-    registered merge of the four individual operators below (each
-    kept, with its own oracle, for unit tests)."""
+    pipeline runs (one pass computes every feature)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
@@ -60,103 +58,6 @@ SELECT doc_id, lang,
        CASE WHEN nstop / nt >= 0.03 THEN 'en' ELSE 'other' END AS guess,
        md5(trim(regexp_replace(regexp_replace(lower(text), '[.,!?;:]', '', 'g'), '\s+', ' ', 'g'))) AS fp
 FROM feats ORDER BY doc_id
-"""
-
-
-def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace tokens, punct chars, and BPE-ish subword-ish token
-    count (GPT-2-style pre-tokenization regex) per document."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "doc_id",
-            T.token_count("text").alias("n_tokens"),
-            T.bpe_token_count("text").alias("n_bpe_tokens"),
-            T.punct_count("text").alias("n_punct"),
-            F.length("text").alias("n_chars_computed"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-TOKEN_COUNT_SQL = rf"""
-SELECT doc_id,
-       len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-       len(regexp_extract_all(text, '{T.BPE_PATTERN}')) AS n_bpe_tokens,
-       length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-       length(text) AS n_chars_computed
-FROM documents ORDER BY doc_id
-"""
-
-
-def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", T.quality_score("text").alias("quality"))
-        .where(F.col("quality") >= 0.5)
-        .orderBy("doc_id")
-    )
-
-
-QUALITY_SCORE_SQL = rf"""
-WITH feats AS (
-  SELECT doc_id,
-         CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE) AS nt,
-         CAST(length(text) AS DOUBLE) AS nc,
-         CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS npunct,
-         CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              t -> list_contains({_STOP_SQL_LIST}, t))) AS DOUBLE) AS nstop
-  FROM documents
-)
-SELECT doc_id,
-       ROUND(0.4 * least(1.0, nt / 100.0)
-           + 0.3 * (1.0 - least(1.0, 10.0 * npunct / greatest(nc, 1.0)))
-           + 0.3 * least(1.0, 5.0 * nstop / nt), 6) AS quality
-FROM feats
-WHERE ROUND(0.4 * least(1.0, nt / 100.0)
-          + 0.3 * (1.0 - least(1.0, 10.0 * npunct / greatest(nc, 1.0)))
-          + 0.3 * least(1.0, 5.0 * nstop / nt), 6) >= 0.5
-ORDER BY doc_id
-"""
-
-
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-profile language guess + agreement with the corpus
-    ground-truth label, aggregated per (lang, guess)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("lang", T.lang_guess("text").alias("guess"))
-        .groupBy("lang", "guess")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "guess")
-    )
-
-
-LANG_ID_SQL = rf"""
-WITH g AS (
-  SELECT lang,
-         CASE WHEN CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                        t -> list_contains({_STOP_SQL_LIST}, t))) AS DOUBLE)
-                   / len(regexp_split_to_array(trim(text), '\s+')) >= 0.03
-              THEN 'en' ELSE 'other' END AS guess
-  FROM documents
-)
-SELECT lang, guess, COUNT(*) AS n_docs FROM g GROUP BY lang, guess ORDER BY lang, guess
-"""
-
-
-def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", T.fingerprint("text").alias("fp"))
-        .orderBy("doc_id")
-    )
-
-
-FINGERPRINT_SQL = r"""
-SELECT doc_id,
-       md5(trim(regexp_replace(regexp_replace(lower(text), '[.,!?;:]', '', 'g'), '\s+', ' ', 'g'))) AS fp
-FROM documents ORDER BY doc_id
 """
 
 

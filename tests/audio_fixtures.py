@@ -1,12 +1,12 @@
 """IMA-ADPCM WAV authoring for the codec tests: an encoder and the
 RIFF/WAVE container, the inverse of the engine's decoder
-(`jpegcodec.decode_ima_adpcm_block`, `multimodal.decode_wav`)."""
+(`multimodal.decode_ima_adpcm_block`, `multimodal.decode_wav`)."""
 
 from __future__ import annotations
 
 import struct
 
-from herodb_spark.operators.jpegcodec import IMA_STEP_TABLE, _ima_step
+from herodb_spark.operators.multimodal import IMA_STEP_TABLE, _ima_step
 
 
 def encode_ima_adpcm(samples: list[int], block_samples: int = 505) -> bytes:

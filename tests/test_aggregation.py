@@ -6,15 +6,12 @@ from herodb_spark.operators import aggregation as A
 from tests.harness import compare
 
 CASES = [
-    (A.group_by_agg, A.GROUP_BY_AGG_SQL),
     (A.partition_topk, A.PARTITION_TOPK_SQL),
-    (A.having_filter, A.HAVING_FILTER_SQL),
     (A.order_range, A.ORDER_RANGE_SQL),
     (A.collect_agg, A.COLLECT_AGG_SQL),
     (A.topk_then_avg, A.TOPK_THEN_AVG_SQL),
     (A.window_running, A.WINDOW_RUNNING_SQL),
     (A.group_having, A.GROUP_HAVING_SQL),
-    (A.percentiles, A.PERCENTILES_SQL),
     (A.order_collect_union, A.ORDER_COLLECT_SQL),
     (A.agg_topk_suite, A.AGG_TOPK_SUITE_SQL),
 ]

@@ -6,7 +6,6 @@ from herodb_spark.operators import extra as E
 from tests.harness import compare
 
 CASES = [
-    (E.stream_sliding_agg, E.STREAM_SLIDING_AGG_SQL),
     (E.graph_weighted_sssp, E.GRAPH_WEIGHTED_SSSP_SQL),
     (E.tpch_q10_returned_revenue, E.TPCH_Q10_SQL),
     (E.tpch_q7_nation_volume, E.TPCH_Q7_SQL),

@@ -9,11 +9,7 @@ CASES = [
     (R.scan_filter_project, R.SCAN_FILTER_PROJECT_SQL),
     (R.datalog_selfjoin, R.DATALOG_SELFJOIN_SQL),
     (R.multiway_join, R.MULTIWAY_JOIN_SQL),
-    (R.semijoin_exists, R.SEMIJOIN_EXISTS_SQL),
-    (R.antijoin_not, R.ANTIJOIN_NOT_SQL),
     (R.union_cases, R.UNION_CASES_SQL),
-    (R.distinct_rows, R.DISTINCT_ROWS_SQL),
-    (R.conditional_expr, R.CONDITIONAL_EXPR_SQL),
     (R.pattern_match, R.PATTERN_MATCH_SQL),
     (R.semi_anti_join, R.SEMI_ANTI_JOIN_SQL),
 ]
@@ -26,8 +22,10 @@ def test_relational_oracle(spark, sf_dir, duck, fn, sql):
 
 
 def test_semijoin_plan_is_semi(spark, sf_dir):
-    plan = R.semijoin_exists(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, plan[:2000]
+    """`exists` and `not` plan as semi and anti joins, not as inner
+    joins that multiply rows and deduplicate afterwards."""
+    plan = R.semi_anti_join(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan and "LeftAnti" in plan, plan[:2000]
 
 
 def test_multiway_join_broadcasts_dims(spark, sf_dir):

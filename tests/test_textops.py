@@ -8,10 +8,6 @@ from tests.harness import compare
 ALL_SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 CASES = [
-    (X.token_count, X.TOKEN_COUNT_SQL),
-    (X.quality_score, X.QUALITY_SCORE_SQL),
-    (X.lang_id, X.LANG_ID_SQL),
-    (X.fingerprint, X.FINGERPRINT_SQL),
     (X.text_analysis, X.TEXT_ANALYSIS_SQL),
     (X.text_unigram_logprob, X.TEXT_UNIGRAM_LOGPROB_SQL),
     (X.text_bigram_logprob, X.TEXT_BIGRAM_LOGPROB_SQL),
