@@ -124,8 +124,8 @@ def graph_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     same undirected trade graph — the global triangle count, the
     per-pair common-neighbor counts, and the hub-discounted
     Adamic-Adar scores — so they share one graded slot; each
-    constituent keeps its own function and oracle for unit tests (and
-    its own registry entry past the graded window). The adamic_adar
+    constituent is its own function (and registry entry), a building
+    block the union calls. The adamic_adar
     branch carries its double score in the `s` column (NULL for the
     integer-only branches)."""
     from herodb_spark.operators.graphops import graph_triangles

@@ -158,8 +158,11 @@ class Frame:
 
 
 class _ExprCtx:
-    """Resolves variables for expression compilation. `extra` maps
-    atom-local binds (var -> Column over the atom's selection)."""
+    """The one name rule of every HeroQL body: a name is a local bind
+    in `extra` (var -> Column: an atom's own binds, an out-query's
+    arguments and `<-` locals, a mutation's pattern columns and `=`
+    locals), else a `frame` variable, else an enum member, else a
+    global."""
 
     def __init__(self, hql: "HeroQL", frame: Frame | None, extra: dict | None = None):
         self.hql = hql
@@ -1040,13 +1043,12 @@ class HeroQL:
                     f"bodies (@insert/@update/@remove) can be transactional "
                     f"— this body classifies as {kind}"
                 )
+            self._canon_body(item.body)
             if kind == "procedure":
-                self._canon_body(item.body)
                 self._check_procedure(item)
                 self.procs[name] = item
                 return
             if kind == "relational":
-                self._canon_body(item.body)
                 self._check_at_query(item)
                 fields = [n for n, _t in item.ins] + [n for n, _t in item.outs]
                 types = [t for _n, t in item.ins] + [t for _n, t in item.outs]
@@ -1302,10 +1304,7 @@ class HeroQL:
             batch = literal_df(self.spark, rows, self.tables[name].schema)
         else:
             raise HeroQLError(f"cannot infer schema for inserts into undeclared {name!r}")
-        if d is not None and d.where is not None:
-            bad = batch.where(~self._row_predicate(d, batch))
-            if not bad.isEmpty():
-                raise HeroQLError(f"set violates `where` constraint of {name!r}")
+        self._check_where(d, batch, "set")
         snap = self._snapshots.get(name)
         if snap is not None:
             # durable insert = MERGE on the table's key (draft `set`
@@ -1372,6 +1371,38 @@ class HeroQL:
         for i, f in enumerate(d.fields):
             frame.vars[f] = d.types[i] if d.types and d.types[i] in self.defs else None
         return self._expr(d.where, _ExprCtx(self, frame))
+
+    def _check_where(self, d: TableDef | None, rows: DataFrame, what: str) -> None:
+        """The declared `where` constraint (draft:48-52) guards every
+        insert and rewrite path: refuse `rows` if any row breaks it."""
+        if d is not None and d.where is not None \
+                and not rows.where(~self._row_predicate(d, rows)).isEmpty():
+            raise HeroQLError(f"{what} violates `where` constraint of {d.name!r}")
+
+    def _append_rows(self, name: str, rows: DataFrame, cur: DataFrame | None = None,
+                     anti_on: list | None = None, distinct: bool = False,
+                     rel: RelEntry | None = None) -> None:
+        """Install `cur ∪ rows` as table `name`, `rows` cast to `cur`'s
+        schema (`cur` defaults to the flushed current table). `anti_on`
+        drops rows whose key columns `cur` already holds, `distinct`
+        dedups the union, and `rel` validates the relation's
+        cardinality before anything is installed."""
+        if cur is None:
+            self._flush(name)
+            cur = self.table(name)
+        if not cur.columns:
+            out = rows
+        else:
+            rows = rows.select([rows[c].cast(cur.schema[c].dataType) for c in cur.columns])
+            if anti_on is not None:
+                rows = rows.join(cur.select(anti_on), anti_on, "left_anti")
+            out = cur.unionByName(rows)
+            if distinct:
+                out = out.distinct()
+        if rel is not None:
+            self._validate_card(rel, out)
+        self._install_table(name, out)
+        self._after_mutation(name)
 
     def _after_mutation(self, name: str) -> None:
         """Non-monotone mutation (update/remove/edge rewrite): every
@@ -1779,42 +1810,49 @@ class HeroQL:
             overrides = {**(overrides or {}), **zm}
         frame = Frame(self)
         for lit in body:
-            if isinstance(lit, P.Atom):
-                self._join_atom(lit, frame, "inner", state, overrides)
-            elif isinstance(lit, P.NotLit):
-                self._join_atom(lit.atom, frame, "left_anti", state, overrides)
-            elif isinstance(lit, P.ExistsLit):
-                self._join_atom(lit.atom, frame, "left_semi", state, overrides)
-            elif isinstance(lit, P.AssignLit):
-                self._force_derefs(lit.expr, frame)
-                ctx = _ExprCtx(self, frame)
-                val = self._expr(lit.expr, ctx)
-                if frame.has(lit.var):
-                    frame.df = frame.df.where(frame.col(lit.var) == val)
-                else:
-                    if frame.df is None:
-                        raise HeroQLError("`=` binding before any atom")
-                    frame.df = frame.df.withColumn(lit.var, val)
-                    frame.vars[lit.var] = None
-            elif isinstance(lit, P.CallLit):
-                self._inline_call(lit, frame)
-            elif isinstance(lit, P.CompareLit):
-                if frame.df is None:
-                    raise HeroQLError("comparison before any atom")
-                self._force_derefs(lit.expr, frame)
-                frame.df = frame.df.where(self._expr(lit.expr, _ExprCtx(self, frame)))
-            elif isinstance(lit, P.EnsureLit):
-                if frame.df is None:
-                    raise HeroQLError("`ensure` before any atom")
-                self._force_derefs(lit.expr, frame)
-                cond = self._expr(lit.expr, _ExprCtx(self, frame))
-                if not frame.df.where(~cond).isEmpty():
-                    raise HeroQLError("ensure violated (draft:111)")
-            else:
-                raise HeroQLError(f"unsupported literal {type(lit).__name__}")
+            self._compile_literal(lit, frame, state, overrides)
         if frame.df is None:
             raise HeroQLError("rule body binds no atoms")
         return frame
+
+    def _compile_literal(self, lit, frame: Frame, state: dict | None = None,
+                         overrides: dict | None = None) -> None:
+        """Apply one body literal (atom, not/exists, `=`, call,
+        comparison, ensure) to `frame` — the step rule bodies and
+        relational @-queries share."""
+        if isinstance(lit, P.Atom):
+            self._join_atom(lit, frame, "inner", state, overrides)
+        elif isinstance(lit, P.NotLit):
+            self._join_atom(lit.atom, frame, "left_anti", state, overrides)
+        elif isinstance(lit, P.ExistsLit):
+            self._join_atom(lit.atom, frame, "left_semi", state, overrides)
+        elif isinstance(lit, P.AssignLit):
+            self._force_derefs(lit.expr, frame)
+            ctx = _ExprCtx(self, frame)
+            val = self._expr(lit.expr, ctx)
+            if frame.has(lit.var):
+                frame.df = frame.df.where(frame.col(lit.var) == val)
+            else:
+                if frame.df is None:
+                    raise HeroQLError("`=` binding before any atom")
+                frame.df = frame.df.withColumn(lit.var, val)
+                frame.vars[lit.var] = None
+        elif isinstance(lit, P.CallLit):
+            self._inline_call(lit, frame)
+        elif isinstance(lit, P.CompareLit):
+            if frame.df is None:
+                raise HeroQLError("comparison before any atom")
+            self._force_derefs(lit.expr, frame)
+            frame.df = frame.df.where(self._expr(lit.expr, _ExprCtx(self, frame)))
+        elif isinstance(lit, P.EnsureLit):
+            if frame.df is None:
+                raise HeroQLError("`ensure` before any atom")
+            self._force_derefs(lit.expr, frame)
+            cond = self._expr(lit.expr, _ExprCtx(self, frame))
+            if not frame.df.where(~cond).isEmpty():
+                raise HeroQLError("ensure violated (draft:111)")
+        else:
+            raise HeroQLError(f"unsupported literal {type(lit).__name__}")
 
     def _atom_source(self, atom: P.Atom, frame: Frame, state: dict | None,
                      overrides: dict | None = None):
@@ -1958,41 +1996,21 @@ class HeroQL:
 
     # ---------------------------------------------- output-argument queries
 
-    def _expr_var_names(self, e, out: set) -> None:
-        """Collect variable references from an expression AST (enum
-        members excluded — they are constants)."""
-        if isinstance(e, P.Var):
-            if self._enum_member(e.name) is None:
-                out.add(e.name)
-            return
-        if isinstance(e, P.BinOp):
-            self._expr_var_names(e.left, out)
-            self._expr_var_names(e.right, out)
-        elif isinstance(e, P.UnaryOp):
-            self._expr_var_names(e.operand, out)
-        elif isinstance(e, P.IfExpr):
-            self._expr_var_names(e.cond, out)
-            self._expr_var_names(e.then, out)
-            if e.other is not None:
-                self._expr_var_names(e.other, out)
-        elif isinstance(e, P.FieldAccess):
-            self._expr_var_names(e.base, out)
-        elif isinstance(e, P.InterpString):
-            for p in e.parts:
-                if not isinstance(p, str):
-                    self._expr_var_names(p, out)
-
     def _check_out_query(self, q: "P.OutQueryDecl") -> None:
         """Forward-direction validation (Kernel/README.md "Output only
         argument": `<-` defines the execution direction, it cannot run
         backward; only out arguments / locals stand left of `<-`).
         Checked at DECLARATION time so a backward program errors
-        before any invocation."""
+        before any invocation. Globals count as bound."""
         ins = {n for n, _t in q.ins}
         outs = {n for n, _t in q.outs}
         if ins & outs:
             raise HeroQLError(f"query {q.name}: {sorted(ins & outs)} both in and out")
         bound = set(ins)
+
+        def free(e) -> list:
+            return sorted(self._var_names(e) - bound - self.globals.keys())
+
         for lit in q.body:
             if isinstance(lit, P.AssignLit):
                 if not lit.arrow:
@@ -2006,22 +2024,16 @@ class HeroQL:
                     )
                 if lit.var in bound:
                     raise HeroQLError(f"query {q.name}: {lit.var!r} bound twice")
-                refs: set = set()
-                self._expr_var_names(lit.expr, refs)
-                free = refs - bound
-                if free:
+                if free(lit.expr):
                     raise HeroQLError(
-                        f"query {q.name}: `<-` runs forward only — {sorted(free)} "
+                        f"query {q.name}: `<-` runs forward only — {free(lit.expr)} "
                         f"unbound when computing {lit.var!r}"
                     )
                 bound.add(lit.var)
             elif isinstance(lit, P.CompareLit):
-                refs = set()
-                self._expr_var_names(lit.expr, refs)
-                free = refs - bound
-                if free:
+                if free(lit.expr):
                     raise HeroQLError(
-                        f"query {q.name}: guard references unbound {sorted(free)}"
+                        f"query {q.name}: guard references unbound {free(lit.expr)}"
                     )
             elif isinstance(lit, P.CallLit):
                 callee = self.outqueries.get(self._resolve_ref(lit.name))
@@ -2040,12 +2052,10 @@ class HeroQL:
                         f"variable(s) but {lit.name} declares {len(callee.outs)}"
                     )
                 for a in lit.args:
-                    refs = set()
-                    self._expr_var_names(a, refs)
-                    if refs - bound:
+                    if free(a):
                         raise HeroQLError(
                             f"query {q.name}: call argument references unbound "
-                            f"{sorted(refs - bound)}"
+                            f"{free(a)}"
                         )
                 for v in lit.outs:
                     if v in ins:
@@ -2172,9 +2182,9 @@ class HeroQL:
     def _check_procedure(self, q: "P.OutQueryDecl") -> None:
         """Declaration-time validation of a mutation query (README
         AddExam/UpdateExam/RemoveExam): only @-commands in the body,
-        every referenced name a declared parameter (or enum member),
-        @-marks only in @update (at least one), no wildcard @insert
-        columns."""
+        every referenced name a declared parameter, enum member or
+        global (an @-marked name a parameter), @-marks only in @update
+        (at least one), no wildcard @insert columns."""
         params = {n for n, _t in q.ins}
         for lit in q.body:
             if not isinstance(lit, P.MutCmdLit):
@@ -2198,10 +2208,10 @@ class HeroQL:
                             f"query {q.name}: @insert needs a value for every column"
                         )
                     continue
-                refs: set = {a.name} if isinstance(a, P.AtMarked) else set()
-                if not refs:
-                    self._expr_var_names(a, refs)
-                free = refs - params
+                if isinstance(a, P.AtMarked):
+                    free = {a.name} - params
+                else:
+                    free = self._var_names(a) - params - self.globals.keys()
                 if free:
                     raise HeroQLError(
                         f"query {q.name}: {sorted(free)} not among the "
@@ -2220,7 +2230,7 @@ class HeroQL:
         for lit in q.body:
             if isinstance(lit, P.Atom):
                 for a in lit.args:
-                    self._expr_var_names(a, bound)
+                    self._var_names(a, bound)
             elif isinstance(lit, P.AssignLit):
                 bound.add(lit.var)
             elif isinstance(lit, P.OrderCmd):
@@ -2276,34 +2286,30 @@ class HeroQL:
         return bound if (bound is not None and bound > 0) else None
 
     def _lit_var_names(self, lit) -> set:
-        """Variable references of one body literal, any literal kind."""
+        """Variable references of one relational @-query literal."""
         out: set = set()
         if isinstance(lit, P.Atom):
             for a in lit.args:
-                self._expr_var_names(a, out)
+                self._var_names(a, out)
         elif isinstance(lit, (P.NotLit, P.ExistsLit)):
             out |= self._lit_var_names(lit.atom)
         elif isinstance(lit, (P.AssignLit, P.CompareLit, P.EnsureLit)):
-            self._expr_var_names(lit.expr, out)
+            self._var_names(lit.expr, out)
             if isinstance(lit, P.AssignLit):
                 out.add(lit.var)
         elif isinstance(lit, P.CallLit):
             for a in lit.args:
-                self._expr_var_names(a, out)
+                self._var_names(a, out)
             out.update(lit.outs)
         elif isinstance(lit, P.PartitionCmd):
             for k in lit.keys:
-                self._expr_var_names(k, out)
+                self._var_names(k, out)
         elif isinstance(lit, P.OrderCmd):
-            self._expr_var_names(lit.expr, out)
+            self._var_names(lit.expr, out)
             out.add(lit.var)
         elif isinstance(lit, P.AggregateCmd):
             for _fn, arg in lit.items:
-                self._expr_var_names(arg, out)
-        elif isinstance(lit, P.MutCmdLit):
-            for a in lit.atom.args:
-                if not isinstance(a, (P.Wildcard, P.AtMarked)):
-                    self._expr_var_names(a, out)
+                self._var_names(arg, out)
         return out
 
     def _at_agg(self, fn: str, col, dtype):
@@ -2348,13 +2354,7 @@ class HeroQL:
         frame = Frame(self)
         part_keys: list[str] = []
         for li, lit in enumerate(q.body):
-            if isinstance(lit, P.Atom):
-                self._join_atom(lit, frame, "inner", None, None)
-            elif isinstance(lit, P.NotLit):
-                self._join_atom(lit.atom, frame, "left_anti", None, None)
-            elif isinstance(lit, P.ExistsLit):
-                self._join_atom(lit.atom, frame, "left_semi", None, None)
-            elif isinstance(lit, P.PartitionCmd):
+            if isinstance(lit, P.PartitionCmd):
                 names = []
                 for k in lit.keys:
                     if not isinstance(k, P.Var) or not frame.has(k.name):
@@ -2427,30 +2427,8 @@ class HeroQL:
                 nf.vars = {k: frame.vars.get(k) for k in part_keys}
                 nf.vars.update({arg.name: None for _fn, arg in lit.items})
                 frame = nf
-            elif isinstance(lit, P.AssignLit):
-                self._force_derefs(lit.expr, frame)
-                val = self._expr(lit.expr, _ExprCtx(self, frame))
-                if frame.has(lit.var):
-                    frame.df = frame.df.where(frame.col(lit.var) == val)
-                else:
-                    frame.df = frame.df.withColumn(lit.var, val)
-                    frame.vars[lit.var] = None
-            elif isinstance(lit, P.CompareLit):
-                if frame.df is None:
-                    raise HeroQLError(f"query {q.name}: comparison before any atom")
-                self._force_derefs(lit.expr, frame)
-                frame.df = frame.df.where(self._expr(lit.expr, _ExprCtx(self, frame)))
-            elif isinstance(lit, P.CallLit):
-                self._inline_call(lit, frame)
-            elif isinstance(lit, P.EnsureLit):
-                self._force_derefs(lit.expr, frame)
-                cond = self._expr(lit.expr, _ExprCtx(self, frame))
-                if not frame.df.where(~cond).isEmpty():
-                    raise HeroQLError("ensure violated (draft:111)")
             else:
-                raise HeroQLError(
-                    f"query {q.name}: unsupported literal {type(lit).__name__}"
-                )
+                self._compile_literal(lit, frame)
         if frame.df is None:
             raise HeroQLError(f"query {q.name}: body binds no atoms")
         cols = []
@@ -2463,17 +2441,15 @@ class HeroQL:
     def _proc_value(self, a, env: dict, qname: str):
         """Constant-fold a procedure-body expression over the bound
         parameter environment (driver-side — procedure calls take
-        constant arguments)."""
-        if isinstance(a, P.Var):
-            if a.name in env:
-                return env[a.name]
-            m = self._enum_member(a.name)
-            if m is not None:
-                return m
-            raise HeroQLError(f"{qname}: unbound parameter {a.name!r}")
+        constant arguments); a name that is no parameter is an enum
+        member or a global."""
+        if isinstance(a, P.Var) and a.name in env:
+            return env[a.name]
         v = self._const_value(a)
         if v is not None or isinstance(a, P.Const):
             return v
+        if isinstance(a, P.Var):
+            raise HeroQLError(f"{qname}: unbound parameter {a.name!r}")
         if isinstance(a, P.BinOp):
             left = self._proc_value(a.left, env, qname)
             right = self._proc_value(a.right, env, qname)
@@ -2959,6 +2935,8 @@ class HeroQL:
         return "sel"
 
     def _var_names(self, e, out: set | None = None) -> set:
+        """Names expression `e` references, added to `out`; enum
+        members (`Member`, `Enum.Member`) are constants, not names."""
         out = set() if out is None else out
         if isinstance(e, P.Var):
             if self._enum_member(e.name) is None:
@@ -3323,79 +3301,45 @@ class HeroQL:
             consts.append(F.col(f) == F.lit(cv))
         return df, mapping, consts
 
-    def _mut_expr(self, e, mapping: dict, local: dict):
-        """Expression over a mutation's pattern variables (column refs
-        by field name) + local `=` bindings."""
-        if isinstance(e, P.Var):
-            if e.name in local:
-                return local[e.name]
-            if e.name in mapping:
-                return F.col(mapping[e.name])
-            m = self._enum_member(e.name)
-            if m is not None:
-                return F.lit(m)
-            raise _Unbound(e.name)
-        if isinstance(e, P.Const):
-            return F.lit(e.value)
-        if isinstance(e, P.FieldAccess):
-            if isinstance(e.base, P.Var) and e.base.name in self.enums:
-                if e.name not in self.enums[e.base.name]:
-                    raise HeroQLError(f"{e.base.name} has no member {e.name!r}")
-                return F.lit(e.name)
-            raise HeroQLError("field access is not supported in mutation bodies")
-        if isinstance(e, P.BinOp):
-            left = self._mut_expr(e.left, mapping, local)
-            right = self._mut_expr(e.right, mapping, local)
-            return {
-                "==": left == right, "!=": left != right, "<": left < right,
-                "<=": left <= right, ">": left > right, ">=": left >= right,
-                "+": left + right, "-": left - right, "*": left * right,
-                "/": left / right, "and": left & right, "or": left | right,
-            }[e.op]
-        if isinstance(e, P.UnaryOp):
-            op = self._mut_expr(e.operand, mapping, local)
-            return ~op if e.op == "not" else -op
-        if isinstance(e, P.IfExpr):
-            cond = self._mut_expr(e.cond, mapping, local)
-            then = self._mut_expr(e.then, mapping, local)
-            other = F.lit(True) if e.other is None else self._mut_expr(e.other, mapping, local)
-            return F.when(cond, then).otherwise(other)
-        raise HeroQLError(f"unsupported mutation expression {type(e).__name__}")
+    def _mut_cond(self, kind: str, body: list, mapping: dict, consts: list,
+                  updates: dict | None = None):
+        """Compile an update/remove body over the table's columns: each
+        pattern variable reads its column, and a later `=` local
+        shadows it. Comparisons AND onto `consts` into the returned row
+        condition; with `updates`, `=` to a pattern variable assigns
+        that column instead of binding a local."""
+        ctx = _ExprCtx(self, None, {v: F.col(f) for v, f in mapping.items()})
+        conds = list(consts)
+        for lit in body:
+            if isinstance(lit, P.CompareLit):
+                conds.append(self._expr(lit.expr, ctx))
+            elif isinstance(lit, P.AssignLit):
+                val = self._expr(lit.expr, ctx)
+                if updates is not None and lit.var in mapping:
+                    updates[mapping[lit.var]] = val
+                else:
+                    ctx.extra[lit.var] = val
+            else:
+                raise HeroQLError(f"{kind} bodies take comparisons and `=` only")
+        return self._and(conds) if conds else F.lit(True)
 
     def _exec_update(self, u: P.UpdateStmt) -> None:
         """`update T(a,b,c) :- a == b, c = a + b;` (draft:131): body
         comparisons select rows; `=` to a pattern variable sets its
         column SIMULTANEOUSLY from the old values."""
         df, mapping, consts = self._pattern_frame(u.name, u.patterns)
-        conds = list(consts)
-        local: dict = {}
         updates: dict[str, object] = {}
-        for lit in u.body:
-            if isinstance(lit, P.CompareLit):
-                conds.append(self._mut_expr(lit.expr, mapping, local))
-            elif isinstance(lit, P.AssignLit):
-                val = self._mut_expr(lit.expr, mapping, local)
-                if lit.var in mapping:
-                    updates[mapping[lit.var]] = val
-                else:
-                    local[lit.var] = val
-            else:
-                raise HeroQLError("update bodies take comparisons and `=` only")
+        cond = self._mut_cond("update", u.body, mapping, consts, updates)
         if not updates:
             raise HeroQLError("update assigns no pattern variable")
-        cond = self._and(conds) if conds else F.lit(True)
         out = df.select(
             *[
                 (F.when(cond, updates[c]).otherwise(F.col(c)).alias(c) if c in updates else F.col(c))
                 for c in df.columns
             ]
         )
-        # the declared `where` constraint guards updates exactly like
-        # inserts (draft:48-52) — a rewrite must not smuggle in rows
-        # that `set` would reject
-        d = self._def(u.name)
-        if d.where is not None and not out.where(~self._row_predicate(d, out)).isEmpty():
-            raise HeroQLError(f"update violates `where` constraint of {u.name!r}")
+        # a rewrite must not smuggle in rows that `set` would reject
+        self._check_where(self._def(u.name), out, "update")
         snap = self._snapshots.get(u.name)
         if snap is not None:
             keys = snap._load()["key_cols"]
@@ -3439,13 +3383,13 @@ class HeroQL:
         if name in self.rules:
             raise HeroQLError(f"{name!r} is rule-defined; migrate base tables only")
         self._flush(name)
-        mapping = {f: f for f in d.fields}
+        ctx = _ExprCtx(self, None, {f: F.col(f) for f in d.fields})
         cols: dict = {}
         for cname, expr in s.items:
             if cname in cols:
                 raise HeroQLError(f"update schema {name}: column {cname!r} repeated")
             self._canon_expr(expr)
-            cols[cname] = self._mut_expr(expr, mapping, {})
+            cols[cname] = self._expr(expr, ctx)
         self._commit_mutation(name, "migrate", cols, s.key_cols, s.partition)
         # the table's SHAPE changed: rebuild the session binding
         was_class = d.is_class
@@ -3467,16 +3411,7 @@ class HeroQL:
             self._after_mutation(r.name)
             return
         df, mapping, consts = self._pattern_frame(r.name, r.patterns)
-        conds = list(consts)
-        local: dict = {}
-        for lit in r.body:
-            if isinstance(lit, P.CompareLit):
-                conds.append(self._mut_expr(lit.expr, mapping, local))
-            elif isinstance(lit, P.AssignLit):
-                local[lit.var] = self._mut_expr(lit.expr, mapping, local)
-            else:
-                raise HeroQLError("remove bodies take comparisons and `=` only")
-        cond = self._and(conds) if conds else F.lit(True)
+        cond = self._mut_cond("remove", r.body, mapping, consts)
         if r.name in self._snapshots:
             self._commit_mutation(r.name, "delete_where", cond)
         else:
@@ -3624,17 +3559,8 @@ class HeroQL:
             else:
                 cols.append(F.lit(None).alias(f))
         rows = frame.df.select(cols)
-        # the declared `where` constraint guards construction exactly
-        # like every other insert path (draft:48-52)
-        if d.where is not None and not rows.where(~self._row_predicate(d, rows)).isEmpty():
-            raise HeroQLError(f"let {a.var} = {cname}{{...}} violates `where` constraint of {cname!r}")
-        if not cur.columns:
-            self._install_table(cname, rows)
-        else:
-            self._install_table(cname, cur.unionByName(
-                rows.select([rows[c].cast(cur.schema[c].dataType) for c in cur.columns])
-            ))
-        self._after_mutation(cname)
+        self._check_where(d, rows, f"let {a.var} = {cname}{{...}}")
+        self._append_rows(cname, rows, cur)
 
     def _atom_rows(self, frame: Frame, atom: P.Atom, tmp: bool = False):
         """Project the atom's argument expressions over the frame →
@@ -3666,14 +3592,8 @@ class HeroQL:
         d, rows = self._atom_rows(frame, atom)
         ucols = self._unique_cols(d) or list(d.fields)
         rows = rows.dropDuplicates(ucols)
-        if d.where is not None and not rows.where(~self._row_predicate(d, rows)).isEmpty():
-            raise HeroQLError(f"ensure set violates `where` constraint of {atom.name!r}")
-        self._flush(atom.name)
-        cur = self.table(atom.name)
-        cast_rows = rows.select([rows[c].cast(cur.schema[c].dataType) for c in cur.columns])
-        fresh = cast_rows.join(cur.select(ucols), ucols, "left_anti")
-        self._install_table(atom.name, cur.unionByName(fresh))
-        self._after_mutation(atom.name)
+        self._check_where(d, rows, "ensure set")
+        self._append_rows(atom.name, rows, anti_on=ucols)
 
     def _action_if_not_set(self, frame: Frame, a: P.IfNotSetAction) -> None:
         """`if not set T(args) then <actions>` (draft_type:203-205,
@@ -3704,12 +3624,8 @@ class HeroQL:
         winners = cand.where(F.col("__rk") == 1).join(existing, key_tmp, "left_anti")
         winners = winners.localCheckpoint(eager=True)  # one eval feeds insert + loser anti-join
         rows = winners.select([F.col(names[f]).alias(f) for f in d.fields])
-        if d.where is not None and not rows.where(~self._row_predicate(d, rows)).isEmpty():
-            raise HeroQLError(f"if-not-set insert violates `where` constraint of {atom.name!r}")
-        self._install_table(atom.name, cur.unionByName(
-            rows.select([rows[c].cast(cur.schema[c].dataType) for c in cur.columns])
-        ))
-        self._after_mutation(atom.name)
+        self._check_where(d, rows, "if-not-set insert")
+        self._append_rows(atom.name, rows, cur)
         losers = cand.join(winners.select("__ord"), "__ord", "left_anti")
         sub = Frame(self)
         sub.vars = dict(frame.vars)
@@ -3760,7 +3676,6 @@ class HeroQL:
             rel = self.relations.get((cls, atom.name))
             if rel is None:
                 raise HeroQLError(f"{cls} has no relation member {atom.name!r}")
-            edge_name = rel.edge
             ctx = _ExprCtx(self, frame)
             self._force_derefs(atom.args[0], frame)
             other = self._expr(atom.args[0], ctx)
@@ -3772,35 +3687,14 @@ class HeroQL:
                 # instead of doubling the edge
                 src, dst = F.least(src, dst), F.greatest(src, dst)
             rows = frame.df.select(src.alias("src"), dst.alias("dst")).distinct()
-            self._flush(edge_name)
-            cur = self.table(edge_name)
-            if not cur.columns:
-                candidate = rows
-            else:
-                candidate = cur.unionByName(
-                    rows.select([rows[c].cast(cur.schema[c].dataType) for c in cur.columns])
-                ).distinct()
-            # validate BEFORE committing — a violating insert
-            # must not leave the bad row behind (same contract
-            # as _flush's where-constraint check)
-            self._validate_card(rel, candidate)
-            self._install_table(edge_name, candidate)
-            self._after_mutation(edge_name)
+            # validated BEFORE committing — a violating insert must
+            # not leave the bad row behind
+            self._append_rows(rel.edge, rows, distinct=True, rel=rel)
             return
         d, rows = self._atom_rows(frame, atom)
         rows = rows.distinct()
-        if d.where is not None and not rows.where(
-            ~self._row_predicate(d, rows)
-        ).isEmpty():
-            raise HeroQLError(
-                f"for-query set violates `where` constraint of {atom.name!r}"
-            )
-        self._flush(atom.name)
-        cur = self.table(atom.name)
-        self._install_table(atom.name, cur.unionByName(
-            rows.select([rows[c].cast(cur.schema[c].dataType) for c in cur.columns])
-        ).distinct())
-        self._after_mutation(atom.name)
+        self._check_where(d, rows, "for-query set")
+        self._append_rows(atom.name, rows, distinct=True)
 
     def _action_remove(self, frame: Frame, action: P.RemoveStmt) -> None:
         d = self._def(action.name)

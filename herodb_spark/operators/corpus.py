@@ -162,8 +162,8 @@ def corpus_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered merge of corpus_decontaminate + stratified_sample +
     vocab_topk + (since round 7) corpus_scrub_spans + (since round 10)
     corpus_contamination_score + (since round 11) corpus_profile and
-    corpus_domain_cap — each kept as its own function/oracle for unit
-    tests: tag-unioned into one (op, k, v1, v2, v3) relation so all
+    corpus_domain_cap — the union's own building blocks, one function
+    each: tag-unioned into one (op, k, v1, v2, v3) relation so all
     seven corpus operators earn a driver-graded hash row in a single
     slot. Each constituent
     plan executes unchanged inside the union; the scrub branch carries

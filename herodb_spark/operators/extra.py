@@ -161,9 +161,9 @@ ORDER BY supp_nation, cust_nation, l_year
 
 def tpch_q7_q10_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered merge of tpch_q7 + tpch_q10 (same tag-union contract
-    as plans/tpch.py q4_q6_q12_union: both keep their own functions
-    and oracles for unit tests; the union earns both a driver-graded
-    hash row in one slot). Each constituent plan — Q7's two-nation
+    as plans/tpch.py q4_q6_q12_union: both are the union's own
+    building blocks, one function each; the union earns both a
+    driver-graded hash row in one slot). Each constituent plan — Q7's two-nation
     nation-join chain, Q10's returned-revenue top-20 — executes
     unchanged inside its union branch."""
     q7 = tpch_q7_nation_volume(spark, sf_dir).select(

@@ -211,8 +211,8 @@ GRAPH_PAGERANK_SQL = _pagerank_unrolled_sql()
 
 def graph_node_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered merge of graph_degree + graph_two_hop +
-    graph_connected_components + graph_kcore (each kept as its own
-    function/oracle for unit tests): one wide per-node metrics row so
+    graph_connected_components + graph_kcore (the union's own building
+    blocks, one function each): one wide per-node metrics row so
     all four per-node graph operators earn a driver-graded hash row in
     a single slot. Left joins from the degree node set (the full trade
     graph); nodes outside a constituent's domain carry NULLs on both
@@ -254,8 +254,8 @@ GRAPH_NODE_METRICS_SQL = _graph_node_metrics_sql()
 
 def graph_seed_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered merge of graph_shortest_hops + graph_weighted_sssp +
-    (since round 11) graph_personalized_pagerank (each kept for unit
-    tests): per reachable node from the seed, the unweighted hop
+    (since round 11) graph_personalized_pagerank (the union's own
+    building blocks): per reachable node from the seed, the unweighted hop
     count, the weighted shortest distance, and the personalized-
     PageRank proximity score in one row. Reachable sets coincide
     (same sparse edge set; PPR's nonzero support is the seed-reachable

@@ -122,8 +122,8 @@ def cube_pivot_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     same contract as tpch q4_q6_q12) + (since round 11)
     rel_range_join_bucketed (the coarse-bucket point-in-interval
     join): CUBE's grouping-set subtotals, the explicit-value pivot,
-    the window as-of join, and the range join each keep their own
-    function/oracle for unit tests and share one graded slot here.
+    the window as-of join, and the range join are the union's own
+    building blocks, one function each, and share one graded slot here.
     The range branch carries (tier in k1, n_events in v1, exact cents
     sum in v2 — integers carried losslessly in the double columns)."""
     nd = F.lit(None).cast("double")

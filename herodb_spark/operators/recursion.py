@@ -93,8 +93,8 @@ GROUP BY assembly ORDER BY assembly
 
 
 def recursive_programs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered merge of recursive_fib + recursive_bom_rollup (each
-    kept as its own function/oracle for unit tests): the two bounded
+    """Registered merge of recursive_fib + recursive_bom_rollup (the
+    union's own building blocks, one function each): the two bounded
     recursions tag-unioned into one (prog, k, v1, v2) relation so both
     earn a driver-graded hash row in a single slot. fib(40) and the
     counts fit a double exactly (< 2^53)."""

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from herodb_spark.catalog import load_table
 from herodb_spark.functions import text as T
+from herodb_spark.operators.dedup import _grams_sql
 
 _STOP_SQL_LIST = "['" + "','".join(T.STOPWORDS_EN) + "']"
 
@@ -93,7 +94,7 @@ def text_repetition_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        T.tokens("text").alias("w"),
+        T.tokens("text").alias("t"),
         F.when(
             F.col("doc_id") % 5 == 0,
             F.concat(
@@ -107,35 +108,25 @@ def text_repetition_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base feeds both gram branches AND the final join — a lazy local
     # checkpoint materializes the scan+split once instead of three times
     base = base.localCheckpoint(eager=False)
-    grams2 = base.select(
-        "doc_id",
-        F.explode(
-            # empty array for <2-token docs: sequence(0, -1) is a
-            # DESCENDING range under Spark 4 ANSI semantics and w[i+1]
-            # would throw INVALID_ARRAY_INDEX on a 1-token doc
-            F.expr(
-                "CASE WHEN size(w) >= 2 THEN "
-                "transform(sequence(0, size(w) - 2), i -> concat(w[i], ' ', w[i + 1])) "
-                "ELSE array() END"
-            )
-        ).alias("g"),
-    ).where(F.col("g").isNotNull())
+
+    def grams(k: int) -> DataFrame:
+        # empty array for docs under k tokens: dedup._grams_sql's
+        # sequence would run backwards there
+        return base.select(
+            "doc_id",
+            F.explode(
+                F.expr(f"CASE WHEN size(t) >= {k} THEN {_grams_sql(k)} ELSE array() END")
+            ).alias("g"),
+        ).where(F.col("g").isNotNull())
+
+    grams2 = grams(2)
     g2_stats = (
         grams2.groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")
         .agg(F.max("c").alias("max2"), F.sum("c").alias("tot2"))
     )
-    grams3 = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(w) >= 3 THEN "
-                "transform(sequence(0, size(w) - 3), i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2])) "
-                "ELSE array() END"
-            )
-        ).alias("g"),
-    ).where(F.col("g").isNotNull())
+    grams3 = grams(3)
     g3_stats = (
         grams3.groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -154,7 +145,7 @@ def text_repetition_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.round(
-                (F.size("w") - F.size(F.array_distinct("w"))).cast("double") / F.size("w"), 6
+                (F.size("t") - F.size(F.array_distinct("t"))).cast("double") / F.size("t"), 6
             ).alias("dup_word_frac"),
             F.round(F.col("max2").cast("double") / F.col("tot2"), 6).alias("top_bigram_frac"),
             F.round(F.col("dup3").cast("double") / F.col("tot3"), 6).alias("dup_trigram_frac"),

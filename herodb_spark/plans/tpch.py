@@ -308,8 +308,8 @@ GROUP BY 1 ORDER BY delay_class
 
 
 def q4_q6_q12_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered merge of tpch_q4 + tpch_q6 + tpch_q12 (each kept as
-    its own function/oracle for unit tests): the three results are
+    """Registered merge of tpch_q4 + tpch_q6 + tpch_q12 (the union's
+    own building blocks, one function each): the three results are
     tag-unioned into one (q, k, v1, v2) relation so all three earn a
     driver-graded hash row in a single slot. Counts cast to double
     exactly (far below 2^53); each constituent plan — Q4's semi-join

@@ -2338,6 +2338,63 @@ set Exams("bob", 90);
         hql.run("Bad <- unknown_thing.")
 
 
+_NAME_RULE_SETUP = """
+Limit <- 60.
+Base <- 100.
+enum Status = Ok | Bad;
+data Exams(student : string, score : int);
+set Exams("alice", 50);
+set Exams("bob", 90);
+data T(x : int);
+set T(-1);
+set T(5);
+set T(70);
+data Tagged(st : Status, v : int);
+"""
+
+_EXAMS = "query (s, sc) :- Exams(s, sc);"
+
+
+@pytest.mark.parametrize("program, query, expect", [
+    pytest.param("update Exams(s, sc) :- sc < Limit, sc = Limit;", _EXAMS,
+                 [("alice", 60), ("bob", 90)], id="update_global"),
+    pytest.param("remove Exams(s, sc) :- sc < Limit;", _EXAMS,
+                 [("bob", 90)], id="remove_global"),
+    pytest.param('update Exams(s, sc) :- s = $"$(s)!";', _EXAMS,
+                 [("alice!", 50), ("bob!", 90)], id="update_interp_string"),
+    pytest.param(
+        "query Tag(x: int) -> (t: string) :- "
+        "t <- if x > 0 then Status.Ok else Status.Bad;",
+        "query (x, t) :- T(x), t <- Tag(x);",
+        [(-1, "Bad"), (5, "Ok"), (70, "Ok")], id="out_query_enum_member"),
+    pytest.param("query Big(x: int) -> (y: int) :- x > Limit, y <- x;",
+                 "query (x, y) :- T(x), y <- Big(x);",
+                 [(70, 70)], id="out_query_guard_global"),
+    pytest.param("query Shift(x: int) -> (y: int) :- y <- x + Base;",
+                 "query (x, y) :- T(x), y <- Shift(x);",
+                 [(-1, 99), (5, 105), (70, 170)], id="out_query_binding_global"),
+    pytest.param('query AddPass(s: string) :- @insert Exams(s, Limit); AddPass("carol");',
+                 _EXAMS, [("alice", 50), ("bob", 90), ("carol", 60)],
+                 id="procedure_global"),
+    pytest.param("query AddOk(v: int) :- @insert Tagged(Status.Ok, v); AddOk(3);",
+                 "query (st, v) :- Tagged(st, v);", [("Ok", 3)],
+                 id="procedure_enum_member"),
+    # a pattern variable named like a global binds the column, not the
+    # global: with Limit = 60 both rows would become 61
+    pytest.param("update Exams(s, Limit) :- Limit < 80, Limit = Limit + 1;", _EXAMS,
+                 [("alice", 51), ("bob", 90)], id="pattern_var_shadows_global"),
+])
+def test_every_body_resolves_names_like_rules(spark, program, query, expect):
+    """Globals, `Enum.Member` and `$"…"` resolve the same way in
+    update/remove, out-query and procedure bodies as in rule bodies:
+    local binds, then the frame (pattern variables), then enum members,
+    then globals."""
+    hql = HeroQL(spark)
+    hql.run(_NAME_RULE_SETUP)
+    hql.run(program)
+    assert rows(hql.run(query).queries[0]) == expect
+
+
 def test_package_public_visibility(spark):
     """draft:190 'If a database references another database, all
     public symbol is usable' — a package's private members are
