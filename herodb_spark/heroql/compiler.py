@@ -161,13 +161,15 @@ class _ExprCtx:
     """The one name rule of every HeroQL body: a name is a local bind
     in `extra` (var -> Column: an atom's own binds, an out-query's
     arguments and `<-` locals, a mutation's pattern columns and `=`
-    locals), else a `frame` variable, else an enum member, else a
-    global."""
+    locals, a procedure's parameters), else a `frame` variable, else an
+    enum member, else a global. `classes` maps a local bind that holds
+    a class key to its class, so it dereferences without a frame."""
 
     def __init__(self, hql: "HeroQL", frame: Frame | None, extra: dict | None = None):
         self.hql = hql
         self.frame = frame
         self.extra = extra or {}
+        self.classes: dict[str, str] = {}
 
     def resolve(self, name: str):
         if name in self.extra:
@@ -731,18 +733,19 @@ class HeroQL:
     def _guess_key(cols: list[str]) -> str:
         return "id" if "id" in cols else cols[0]
 
-    @staticmethod
-    def _declared_unique_key(d: TableDef) -> str | None:
-        """The single-column key the program DECLARED unique
-        (`index Unique(k)`) — the tables whose `set` statements carry
-        replace-on-key semantics on both the in-memory and durable
-        paths. Multi-column Unique indexes and guessed keys don't
-        qualify (facts append; durable tables enforce their own
-        key_cols at merge time)."""
-        for ix in getattr(d, "indexes", None) or []:
+    def _key_cols(self, name: str) -> list[str]:
+        """The columns that identify a row of `name`, on which `set`
+        replaces and which `update` may not assign: a snapshot table's
+        key_cols, else the single column the program DECLARED unique
+        (`index Unique(k)`). Multi-column Unique indexes and guessed
+        keys don't qualify (facts append)."""
+        snap = self._snapshots.get(name)
+        if snap is not None:
+            return list(snap._load()["key_cols"])
+        for ix in getattr(self.defs.get(name), "indexes", None) or []:
             if "Unique" in ix.kinds and len(ix.cols) == 1 and "." not in ix.cols[0]:
-                return ix.cols[0]
-        return None
+                return [ix.cols[0]]
+        return []
 
     def _def(self, name: str) -> TableDef:
         if name not in self.defs:
@@ -960,13 +963,11 @@ class HeroQL:
             if isinstance(item.expr, P.NewExpr):
                 self._instantiate(item.name, item.expr, out)
             else:
-                # constant-fold over the existing globals, so
-                # `Two <- 2. Four <- Two * 2.` works (same folding
-                # procedure arguments use)
+                # fold over the existing globals, so
+                # `Two <- 2. Four <- Two * 2.` works (the value step
+                # `set` and procedure arguments use)
                 try:
-                    v = self._proc_value(
-                        item.expr, dict(self.globals), f"global {item.name}"
-                    )
+                    v = self._value(item.expr)
                 except HeroQLError:
                     raise HeroQLError(
                         f"global value {item.name!r} must be a constant "
@@ -1306,77 +1307,71 @@ class HeroQL:
             raise HeroQLError(f"cannot infer schema for inserts into undeclared {name!r}")
         self._check_where(d, batch, "set")
         snap = self._snapshots.get(name)
-        if snap is not None:
-            # durable insert = MERGE on the table's key (draft `set`
-            # restating an existing key replaces the row; within one
-            # batch the LAST statement wins, mirroring statement order)
-            keys = snap._load()["key_cols"]
-            kpos = [self.defs[name].fields.index(k) for k in keys]
-            last: dict = {}
-            for row in rows:
-                last[tuple(row[i] for i in kpos)] = row
-            self._commit_mutation(
-                name,
-                "merge_upsert",
-                literal_df(self.spark, list(last.values()), batch.schema),
-                # one commit may batch several `set` statements: log
-                # them all, in statement order
-                program="\n".join(srcs) if srcs else None,
-            )
-            # a replaced key makes this non-monotone: wipe memos
-            self._after_mutation(name)
-            return
-        uniq = self._declared_unique_key(d) if d is not None else None
-        if uniq is not None:
-            # in-memory `set` on a table DECLARED `index Unique(k)`
-            # follows the same replace-on-key semantics as the durable
-            # merge path (draft:46/134; round-6 advice — the two paths
-            # previously diverged): last statement wins within the
-            # batch, and a restated key replaces the existing row.
-            kpos = d.fields.index(uniq)
-            last: dict = {}
-            for row in rows:
-                last[row[kpos]] = row
-            batch = literal_df(self.spark, list(last.values()), batch.schema)
+        keys = self._key_cols(name)
+        if snap is None and not keys:
             if name in self.tables:
-                keep = self.tables[name].join(
-                    batch.select(F.col(uniq)), uniq, "left_anti"
-                )
-                self.tables[name] = keep.unionByName(batch)
+                self.tables[name] = self.tables[name].unionByName(batch)
             else:
                 self.tables[name] = batch
-            # a replaced key makes this non-monotone: wipe memos (the
-            # durable branch above does the same)
-            self._after_mutation(name)
+            # inserts without a declared unique key are MONOTONE facts:
+            # RULE memos stay valid modulo the delta log. The per-VALUE
+            # query cache has no incremental form (a pinned subset can't
+            # absorb deltas) — wipe it; the next covered submit
+            # recomputes. @-relational query memos are NON-monotone
+            # (ranks/aggregates shift under pure inserts) — drop them.
+            self._delta_log.append((name, batch))
+            self._qcache.clear()
+            for aq in self.atqueries:
+                self._memo.pop(aq, None)
+            self._bump_checkpoint(name)
             return
-        if name in self.tables:
-            self.tables[name] = self.tables[name].unionByName(batch)
+        # `set` restating an existing key replaces the row (draft:46/134),
+        # on the durable merge and in memory alike; within one batch the
+        # LAST statement wins, mirroring statement order
+        kpos = [d.fields.index(k) for k in keys]
+        last: dict = {}
+        for row in rows:
+            last[tuple(row[i] for i in kpos)] = row
+        batch = literal_df(self.spark, list(last.values()), batch.schema)
+        if snap is not None:
+            # one commit may batch several `set` statements: log them
+            # all, in statement order
+            self._commit_mutation(
+                name, "merge_upsert", batch, program="\n".join(srcs) if srcs else None
+            )
+        elif name in self.tables:
+            keep = self.tables[name].join(batch.select(*keys), keys, "left_anti")
+            self.tables[name] = keep.unionByName(batch)
         else:
             self.tables[name] = batch
-        # inserts without a declared unique key are MONOTONE facts:
-        # RULE memos stay valid modulo the delta log. The per-VALUE
-        # query cache has no incremental form (a pinned subset can't
-        # absorb deltas) — wipe it; the next covered submit
-        # recomputes. @-relational query memos are NON-monotone
-        # (ranks/aggregates shift under pure inserts) — drop them.
-        self._delta_log.append((name, batch))
-        self._qcache.clear()
-        for aq in self.atqueries:
-            self._memo.pop(aq, None)
-        self._bump_checkpoint(name)
+        # a replaced key makes this non-monotone: wipe memos
+        self._after_mutation(name)
 
-    def _row_predicate(self, d: TableDef, df: DataFrame):
-        frame = Frame(self)
-        frame.df = df
-        for i, f in enumerate(d.fields):
-            frame.vars[f] = d.types[i] if d.types and d.types[i] in self.defs else None
-        return self._expr(d.where, _ExprCtx(self, frame))
+    def _row_ctx(self, d: TableDef, names: list | None = None, env: dict | None = None) -> _ExprCtx:
+        """The one row context of mutations, migrations and `where`
+        constraints: name `names[i]` (default: the field's own name;
+        None binds nothing) reads column i of d's rows, next to the
+        procedure parameters `env` (name -> value). A class-typed column
+        dereferences through _deref_scalar, so every expression compiled
+        here stays a Column over the table's own rows."""
+        ctx = _ExprCtx(self, None, {k: F.lit(v) for k, v in (env or {}).items()})
+        for i, (f, n) in enumerate(zip(d.fields, names or d.fields)):
+            if n is None:
+                continue
+            ctx.extra[n] = F.col(f)
+            t = d.types[i] if d.types else None
+            if t in self.defs:
+                ctx.classes[n] = t
+        return ctx
+
+    def _row_predicate(self, d: TableDef):
+        return self._expr(d.where, self._row_ctx(d))
 
     def _check_where(self, d: TableDef | None, rows: DataFrame, what: str) -> None:
         """The declared `where` constraint (draft:48-52) guards every
         insert and rewrite path: refuse `rows` if any row breaks it."""
         if d is not None and d.where is not None \
-                and not rows.where(~self._row_predicate(d, rows)).isEmpty():
+                and not rows.where(~self._row_predicate(d)).isEmpty():
             raise HeroQLError(f"{what} violates `where` constraint of {d.name!r}")
 
     def _append_rows(self, name: str, rows: DataFrame, cur: DataFrame | None = None,
@@ -1615,7 +1610,7 @@ class HeroQL:
             fresh = fresh.unionByName(p)
         fresh = fresh.distinct()
         if d.where is not None:
-            fresh = fresh.where(self._row_predicate(d, fresh))
+            fresh = fresh.where(self._row_predicate(d))
         fresh = fresh.exceptAll(self._memo[name].select(d.fields))
         self._memo[name] = (
             self._memo[name].unionByName(fresh).localCheckpoint(eager=False)
@@ -1626,7 +1621,7 @@ class HeroQL:
     def _finalize(self, name: str, df: DataFrame) -> DataFrame:
         d = self._def(name)
         if d.where is not None:
-            df = df.where(self._row_predicate(d, df))
+            df = df.where(self._row_predicate(d))
         # declared Hash index → co-partition hint for downstream joins
         for ix in d.indexes:
             if "Hash" in ix.kinds and ix.cols and all("." not in c for c in ix.cols):
@@ -1688,6 +1683,23 @@ class HeroQL:
                 return m
             return self.globals.get(a.name)  # GLOBAL READONLY VALUE
         return None
+
+    def _value(self, a, env: dict | None = None):
+        """The one value step of `set`, `@insert`, call arguments and
+        global values. A plain constant (a literal, an enum member, a
+        global or a procedure parameter in `env`) folds on the driver;
+        any other expression compiles through _expr and is read off a
+        one-row literal projection. That costs no Spark job but about
+        0.1 s, so constants never take it."""
+        env = env or {}
+        if isinstance(a, P.Var) and a.name in env:
+            return env[a.name]
+        v = self._const_value(a)
+        if v is not None or isinstance(a, P.Const):
+            return v
+        ctx = _ExprCtx(self, None, {k: F.lit(x) for k, x in env.items()})
+        one = literal_df(self.spark, [(0,)], "_ int")
+        return one.select(self._expr(a, ctx)).first()[0]
 
     # ------------------------------------------------------------ body compilation
 
@@ -2182,15 +2194,22 @@ class HeroQL:
     def _check_procedure(self, q: "P.OutQueryDecl") -> None:
         """Declaration-time validation of a mutation query (README
         AddExam/UpdateExam/RemoveExam): only @-commands in the body,
-        every referenced name a declared parameter, enum member or
-        global (an @-marked name a parameter), @-marks only in @update
-        (at least one), no wildcard @insert columns."""
+        one argument per column of a declared target, every referenced
+        name a declared parameter, enum member or global (an @-marked
+        name a parameter), @-marks only in @update (at least one), no
+        wildcard @insert columns."""
         params = {n for n, _t in q.ins}
         for lit in q.body:
             if not isinstance(lit, P.MutCmdLit):
                 raise HeroQLError(
                     f"query {q.name}: procedure bodies take @insert/@update/"
                     "@remove commands only"
+                )
+            d = self.defs.get(lit.atom.name)
+            if d is not None and len(lit.atom.args) != len(d.fields):
+                raise HeroQLError(
+                    f"query {q.name}: @{lit.kind} {lit.atom.name} has "
+                    f"{len(lit.atom.args)} argument(s) for {len(d.fields)} column(s)"
                 )
             marked = [a for a in lit.atom.args if isinstance(a, P.AtMarked)]
             if lit.kind == "update" and not marked:
@@ -2438,43 +2457,14 @@ class HeroQL:
             cols.append(frame.col(n).alias(n))
         return frame.df.select(cols).distinct()
 
-    def _proc_value(self, a, env: dict, qname: str):
-        """Constant-fold a procedure-body expression over the bound
-        parameter environment (driver-side — procedure calls take
-        constant arguments); a name that is no parameter is an enum
-        member or a global."""
-        if isinstance(a, P.Var) and a.name in env:
-            return env[a.name]
-        v = self._const_value(a)
-        if v is not None or isinstance(a, P.Const):
-            return v
-        if isinstance(a, P.Var):
-            raise HeroQLError(f"{qname}: unbound parameter {a.name!r}")
-        if isinstance(a, P.BinOp):
-            left = self._proc_value(a.left, env, qname)
-            right = self._proc_value(a.right, env, qname)
-            ops = {
-                "+": lambda: left + right,
-                "-": lambda: left - right,
-                "*": lambda: left * right,
-                "/": lambda: left / right,
-            }
-            if a.op not in ops:
-                raise HeroQLError(
-                    f"{qname}: unsupported operator {a.op!r} in a procedure body"
-                )
-            return ops[a.op]()
-        raise HeroQLError(
-            f"{qname}: unsupported procedure expression {type(a).__name__}"
-        )
-
     def _exec_call(self, call: "P.CallStmt") -> None:
         """Invoke a declared procedure query (README UPDATE sections):
-        bind constant arguments to the parameters, then run each
-        @-command through the ordinary mutation executors — `@insert`
-        is a `set` (durable merge on snapshot tables), `@update` a
-        CASE-projection update_where matching the unmarked columns and
-        assigning the @-marked ones, `@remove` a delete_where."""
+        fold each argument through _value and bind it to its parameter,
+        then lower each @-command onto the ordinary statement, whose
+        expressions see the parameters as literals: `@insert T(..)` is
+        `set T(..)` (a durable merge on snapshot tables),
+        `@update T(k, @v)` is `update T(_c0, _c1) :- _c0 == k, _c1 = v;`
+        and `@remove T(k, _)` is `remove T(_c0, _) :- _c0 == k;`."""
         name = call.atom.name
         decl = self.procs.get(name)
         if decl is None:
@@ -2484,32 +2474,22 @@ class HeroQL:
                 f"{name}: {len(call.atom.args)} argument(s) != "
                 f"{len(decl.ins)} declared"
             )
-        env: dict = {}
-        for (pname, _t), a in zip(decl.ins, call.atom.args):
-            v = self._const_value(a)
-            if v is None and not isinstance(a, P.Const):
-                raise HeroQLError(f"{name}: procedure arguments must be constants")
-            env[pname] = v
+        env = {pname: self._value(a) for (pname, _t), a in zip(decl.ins, call.atom.args)}
         if getattr(decl, "transactional", False):
             # `transaction query` (Kernel/README.md TRANSACTION): the
             # whole mutation body runs atomically — one database
             # transaction (single pointer swap, full rollback) when a
             # database is bound, an O(1) session-state snapshot/restore
             # for in-memory tables (DataFrames are immutable refs)
-            self._run_atomic(name, decl, lambda: self._exec_proc_body(decl, env, name))
+            self._run_atomic(name, decl, lambda: self._exec_proc_body(decl, env))
             return
-        self._exec_proc_body(decl, env, name)
+        self._exec_proc_body(decl, env)
 
     def _run_atomic(self, name: str, decl, fn) -> None:
         if self._txn is not None:
             fn()  # already inside run_transactional's transaction
             return
-        touched = {
-            lit.atom.name
-            if lit.atom.name in self.defs or lit.atom.name in self.tables
-            else self._resolve_ref(lit.atom.name)
-            for lit in decl.body
-        }
+        touched = {self._cmd_target(lit) for lit in decl.body}
         if self._db is None and any(t in self._snapshots for t in touched):
             raise HeroQLError(
                 f"{name}: a transaction query over durable tables needs "
@@ -2568,55 +2548,34 @@ class HeroQL:
             _restore()
             raise
 
-    def _exec_proc_body(self, decl, env: dict, name: str) -> None:
+    def _cmd_target(self, lit: "P.MutCmdLit") -> str:
+        """The table an @-command mutates. Body atoms were canonicalized
+        (and visibility-checked) at DECLARATION; re-resolving here must
+        not re-apply the caller's visibility to the procedure's refs."""
+        n = lit.atom.name
+        return n if n in self.defs or n in self.tables else self._resolve_ref(n)
+
+    def _exec_proc_body(self, decl, env: dict) -> None:
         for lit in decl.body:
-            # body atoms were canonicalized (and visibility-checked) at
-            # DECLARATION; re-resolving here must not re-apply the
-            # caller's visibility to the procedure's internal refs
-            tname = (
-                lit.atom.name
-                if lit.atom.name in self.defs or lit.atom.name in self.tables
-                else self._resolve_ref(lit.atom.name)
-            )
+            tname = self._cmd_target(lit)
             if lit.kind == "insert":
-                self._exec_set(
-                    P.Atom(
-                        tname,
-                        [P.Const(self._proc_value(a, env, name)) for a in lit.atom.args],
-                    )
-                )
-            elif lit.kind == "update":
-                d = self._def(tname)
-                if len(lit.atom.args) != len(d.fields):
-                    raise HeroQLError(
-                        f"{name}: @update arity {len(lit.atom.args)} != "
-                        f"{len(d.fields)} columns of {tname}"
-                    )
-                pats: list = []
-                body: list = []
-                for i, a in enumerate(lit.atom.args):
-                    if isinstance(a, P.AtMarked):
-                        if a.name not in env:
-                            raise HeroQLError(
-                                f"{name}: @-marked assignment {a.name!r} is not "
-                                f"a declared parameter of {name}"
-                            )
-                        var = f"_c{i}"
-                        pats.append(P.Var(var))
-                        body.append(P.AssignLit(var, P.Const(env[a.name])))
-                    elif isinstance(a, P.Wildcard):
-                        pats.append(P.Wildcard())
-                    else:
-                        pats.append(P.Const(self._proc_value(a, env, name)))
-                self._exec_update(P.UpdateStmt(tname, pats, body))
+                self._exec_set(P.Atom(tname, lit.atom.args), env)
+                continue
+            pats: list = []
+            body: list = []
+            for i, a in enumerate(lit.atom.args):
+                if isinstance(a, P.Wildcard):
+                    pats.append(a)
+                    continue
+                pats.append(P.Var(f"_c{i}"))
+                if isinstance(a, P.AtMarked):
+                    body.append(P.AssignLit(f"_c{i}", P.Var(a.name)))
+                else:
+                    body.append(P.CompareLit(P.BinOp("==", P.Var(f"_c{i}"), a)))
+            if lit.kind == "update":
+                self._exec_update(P.UpdateStmt(tname, pats, body), env)
             else:
-                pats = [
-                    P.Wildcard()
-                    if isinstance(a, P.Wildcard)
-                    else P.Const(self._proc_value(a, env, name))
-                    for a in lit.atom.args
-                ]
-                self._exec_remove(P.RemoveStmt(tname, pats, []))
+                self._exec_remove(P.RemoveStmt(tname, pats, body), env)
 
     def _apply_query_index(self, name: str, indexes: list) -> None:
         """Attach a standalone `index N { ... }` block: Hash/Unique
@@ -3046,14 +3005,16 @@ class HeroQL:
                 base = base.base
             if not isinstance(base, P.Var):
                 raise HeroQLError("field access must start from a variable")
-            if ctx.frame is None:
-                raise _Unbound(base.name)
             v = base.name
-            if not ctx.frame.has(v):
-                raise _Unbound(v)
-            for fname in reversed(chain):
-                v = ctx.frame.ensure_field(v, fname)
-            return ctx.frame.df[v]
+            if ctx.frame is not None and ctx.frame.has(v):
+                for fname in reversed(chain):
+                    v = ctx.frame.ensure_field(v, fname)
+                return ctx.frame.df[v]
+            if v in ctx.classes:
+                return self._deref_scalar(ctx.classes[v], ctx.extra[v], chain[::-1])
+            if v in ctx.extra and ctx.frame is None:
+                raise HeroQLError(f"variable {v!r} is a scalar; cannot access field {chain[-1]!r}")
+            raise _Unbound(v)
         if isinstance(e, P.BinOp):
             left = self._expr(e.left, ctx)
             right = self._expr(e.right, ctx)
@@ -3091,6 +3052,33 @@ class HeroQL:
             ]
             return F.concat(*cols) if cols else F.lit("")
         raise HeroQLError(f"unsupported expression {type(e).__name__}")
+
+    def _deref_scalar(self, cls: str, key, chain: list):
+        """`v.f.g` in a row context (no frame), where `key` holds a key
+        of class `cls`: a correlated scalar subquery on the class key,
+        so the value stays a Column over the row's own table. Each
+        further hop joins the next class table into the subquery. Spark
+        refuses an unaggregated correlated scalar subquery; the key is
+        unique, so `max` reads the one match, and a dangling key reads
+        NULL."""
+        src = None
+        for i, fname in enumerate(chain):
+            if cls is None:
+                raise HeroQLError(f"field {chain[i - 1]!r} is a scalar; cannot access field {fname!r}")
+            cdef = self._def(cls)
+            if fname not in cdef.fields:
+                raise HeroQLError(f"{cls} has no field {fname!r}")
+            hop = self.table(cls).select(
+                F.col(cdef.key).alias(f"__d{i}"), F.col(fname).alias(f"__d{i + 1}")
+            )
+            src = hop if src is None else src.join(hop, f"__d{i}")
+            t = cdef.types[cdef.fields.index(fname)] if cdef.types else None
+            cls = t if t in self.defs else None
+        return (
+            src.where(F.col("__d0") == key.outer())
+            .select(F.max(f"__d{len(chain)}"))
+            .scalar()
+        )
 
     def _project_head(self, head: P.Atom, frame: Frame, fields: list[str]) -> DataFrame:
         if len(head.args) != len(fields):
@@ -3264,22 +3252,31 @@ class HeroQL:
 
     # ------------------------------------------------------------ mutations
 
-    def _exec_set(self, atom: P.Atom) -> None:
+    def _exec_set(self, atom: P.Atom, env: dict | None = None) -> None:
+        """The one insert step of `set` and `@insert`: the arity is
+        checked and every argument folds through _value before the row
+        is buffered."""
         if atom.member_of is not None:
             raise HeroQLError("member set is only valid inside `for query` actions")
-        row = []
-        for a in atom.args:
-            v = self._const_value(a)
-            if v is None and not isinstance(a, P.Const):
-                raise HeroQLError("set statement arguments must be constants (draft:130)")
-            row.append(v)
-        self._pending.setdefault(atom.name, []).append(tuple(row))
+        d = self.defs.get(atom.name)
+        if d is not None and len(atom.args) != len(d.fields):
+            raise HeroQLError(
+                f"{atom.name}: {len(atom.args)} value(s) for {len(d.fields)} column(s)"
+            )
+        row = tuple(self._value(a, env) for a in atom.args)
+        self._pending.setdefault(atom.name, []).append(row)
         if self._cur_src:
             self._pending_src.setdefault(atom.name, []).append(self._cur_src)
 
-    def _pattern_frame(self, name: str, patterns: list) -> tuple:
-        """Bind positional patterns of a mutation to the table's
-        columns → (df, var→column map, wildcard-ok)."""
+    def _mut_cond(self, kind: str, name: str, patterns: list, body: list,
+                  env: dict | None = None, updates: dict | None = None) -> tuple:
+        """Compile an update/remove over table `name` → (df, row
+        condition). A pattern is `_`, a fresh variable (it binds its
+        column) or any expression, compared to its column; the body
+        compiles in the same row context, where a later `=` local
+        shadows a pattern variable. Comparisons AND into the condition;
+        with `updates`, `=` to a pattern variable assigns that column
+        instead of binding a local."""
         self._flush(name)
         d = self._def(name)
         if name in self.rules:
@@ -3287,29 +3284,22 @@ class HeroQL:
         df = self.table(name)
         if len(patterns) != len(d.fields):
             raise HeroQLError(f"{name}: pattern arity {len(patterns)} != {len(d.fields)}")
-        mapping: dict[str, str] = {}
-        consts = []
-        for pat, f in zip(patterns, d.fields):
-            if isinstance(pat, P.Wildcard):
-                continue
-            if isinstance(pat, P.Var) and self._enum_member(pat.name) is None:
-                mapping[pat.name] = f
-                continue
-            cv = self._const_value(pat)
-            if cv is None and not isinstance(pat, P.Const):
-                raise HeroQLError("mutation patterns are variables, constants or _")
-            consts.append(F.col(f) == F.lit(cv))
-        return df, mapping, consts
-
-    def _mut_cond(self, kind: str, body: list, mapping: dict, consts: list,
-                  updates: dict | None = None):
-        """Compile an update/remove body over the table's columns: each
-        pattern variable reads its column, and a later `=` local
-        shadows it. Comparisons AND onto `consts` into the returned row
-        condition; with `updates`, `=` to a pattern variable assigns
-        that column instead of binding a local."""
-        ctx = _ExprCtx(self, None, {v: F.col(f) for v, f in mapping.items()})
-        conds = list(consts)
+        names: list = []
+        for pat in patterns:
+            fresh = (
+                isinstance(pat, P.Var)
+                and pat.name not in (env or {})
+                and pat.name not in names
+                and self._enum_member(pat.name) is None
+            )
+            names.append(pat.name if fresh else None)
+        ctx = self._row_ctx(d, names, env)
+        conds = [
+            F.col(f) == self._expr(pat, ctx)
+            for pat, f, n in zip(patterns, d.fields, names)
+            if n is None and not isinstance(pat, P.Wildcard)
+        ]
+        mapping = {n: f for n, f in zip(names, d.fields) if n is not None}
         for lit in body:
             if isinstance(lit, P.CompareLit):
                 conds.append(self._expr(lit.expr, ctx))
@@ -3319,19 +3309,23 @@ class HeroQL:
                     updates[mapping[lit.var]] = val
                 else:
                     ctx.extra[lit.var] = val
+                    ctx.classes.pop(lit.var, None)
             else:
                 raise HeroQLError(f"{kind} bodies take comparisons and `=` only")
-        return self._and(conds) if conds else F.lit(True)
+        return df, self._and(conds) if conds else F.lit(True)
 
-    def _exec_update(self, u: P.UpdateStmt) -> None:
+    def _exec_update(self, u: P.UpdateStmt, env: dict | None = None) -> None:
         """`update T(a,b,c) :- a == b, c = a + b;` (draft:131): body
         comparisons select rows; `=` to a pattern variable sets its
-        column SIMULTANEOUSLY from the old values."""
-        df, mapping, consts = self._pattern_frame(u.name, u.patterns)
+        column SIMULTANEOUSLY from the old values. Key columns stay
+        fixed, in memory as on snapshot tables: keys identify rows."""
         updates: dict[str, object] = {}
-        cond = self._mut_cond("update", u.body, mapping, consts, updates)
+        df, cond = self._mut_cond("update", u.name, u.patterns, u.body, env, updates)
         if not updates:
             raise HeroQLError("update assigns no pattern variable")
+        bad = [c for c in self._key_cols(u.name) if c in updates]
+        if bad:
+            raise HeroQLError(f"update may not assign key column(s) {bad} of {u.name!r}")
         out = df.select(
             *[
                 (F.when(cond, updates[c]).otherwise(F.col(c)).alias(c) if c in updates else F.col(c))
@@ -3340,14 +3334,7 @@ class HeroQL:
         )
         # a rewrite must not smuggle in rows that `set` would reject
         self._check_where(self._def(u.name), out, "update")
-        snap = self._snapshots.get(u.name)
-        if snap is not None:
-            keys = snap._load()["key_cols"]
-            bad = [c for c in updates if c in keys]
-            if bad:
-                raise HeroQLError(
-                    f"update may not assign key column(s) {bad} of snapshot table {u.name!r}"
-                )
+        if u.name in self._snapshots:
             # identical CASE-projection semantics, committed as one
             # copy-on-write version bounded to touched partitions
             self._commit_mutation(u.name, "update_where", cond, updates)
@@ -3383,7 +3370,7 @@ class HeroQL:
         if name in self.rules:
             raise HeroQLError(f"{name!r} is rule-defined; migrate base tables only")
         self._flush(name)
-        ctx = _ExprCtx(self, None, {f: F.col(f) for f in d.fields})
+        ctx = self._row_ctx(d)
         cols: dict = {}
         for cname, expr in s.items:
             if cname in cols:
@@ -3400,7 +3387,7 @@ class HeroQL:
         self.register_snapshot(name, snap, is_class=was_class)
         self._after_mutation(name)
 
-    def _exec_remove(self, r: P.RemoveStmt) -> None:
+    def _exec_remove(self, r: P.RemoveStmt, env: dict | None = None) -> None:
         self._flush(r.name)
         if r.patterns is None:  # remove T;  (draft:134)
             if r.name in self._snapshots:
@@ -3410,8 +3397,7 @@ class HeroQL:
                 self.tables[r.name] = df.where(F.lit(False))
             self._after_mutation(r.name)
             return
-        df, mapping, consts = self._pattern_frame(r.name, r.patterns)
-        cond = self._mut_cond("remove", r.body, mapping, consts)
+        df, cond = self._mut_cond("remove", r.name, r.patterns, r.body, env)
         if r.name in self._snapshots:
             self._commit_mutation(r.name, "delete_where", cond)
         else:

@@ -10,7 +10,10 @@ One row per key goes to stdout, then one JSON line
 
 With no keys it profiles bench.py's BENCH_QUERIES. `--explain` also
 writes each key's `explain("formatted")` plan (taken before the write)
-as markdown; with no keys it profiles the PLAN_NOTES keys, and
+as markdown, its run-specific ids (expression `#n`, `plan_id=`,
+`RDD[n]`) renumbered in order of first appearance, so two runs of one
+tree write the same file; with no keys it profiles the PLAN_NOTES keys,
+and
 
     python scripts/layer_profile.py --explain docs/PLANS.md
 
@@ -35,6 +38,7 @@ import functools
 import io
 import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -90,6 +94,8 @@ PLAN_NOTES = {
 }
 
 METRICS = OP_METRICS + ["wall_s"]
+#: run-specific ids of a formatted plan: (prefix)(number)
+RUN_IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
 HEADER = (
     f"{'key':28s} {'wall_s':>7s} | {'call_s':>7s} {'jobs':>5s} {'ckpts':>5s} {'batch':>5s} | "
     f"{'plan_ms':>7s} | {'jobs':>5s} {'stages':>6s} {'tasks':>6s} | "
@@ -112,6 +118,14 @@ def row(key: str, m: dict) -> str:
     )
 
 
+def renumber(plan: str) -> str:
+    """Number each kind of RUN_IDS 1, 2, ... in order of first appearance."""
+    for pat in RUN_IDS:
+        ids: dict[str, int] = {}
+        plan = re.sub(pat, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1)), plan)
+    return plan
+
+
 def profile_key(tracer: Tracer, call, explain: bool = False) -> tuple[dict, str | None]:
     """Run one zero-argument registry call and its noop write as one
     traced op: (metric -> value for every METRICS key, the formatted
@@ -128,7 +142,7 @@ def profile_key(tracer: Tracer, call, explain: bool = False) -> tuple[dict, str 
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            plan = buf.getvalue().strip()
+            plan = renumber(buf.getvalue().strip())
         t1 = time.perf_counter()
         materialize(df)
         rec["wall_s"] = rec["operators.call_s"] + time.perf_counter() - t1

@@ -2228,7 +2228,8 @@ def test_at_dialect_procedure_validation(spark):
         hql.run('Add("x");')
     with pytest.raises(HeroQLError, match="not a declared procedure"):
         hql.run('Nope("x");')
-    # expressions of parameters fold driver-side
+    # expressions of parameters compile through the rule expression
+    # compiler
     hql.run("query Add2(a: string, b: int) :- @insert T(a, b * 2 + 1);")
     hql.run('Add2("x", 10);')
     assert rows(hql.run("query (a, b) :- T(a, b);").queries[0]) == [("x", 21)]
@@ -2350,9 +2351,19 @@ set T(-1);
 set T(5);
 set T(70);
 data Tagged(st : Status, v : int);
+data class Pc(name : string, id : int);
+set Pc("a", 1);
+set Pc("b", 2);
+data Owns(p : Pc, x : int);
+set Owns(1, 10);
+set Owns(2, 20);
+set Owns(3, 30);
+data Picked(p : Pc, x : int) where p.name == "a";
 """
 
 _EXAMS = "query (s, sc) :- Exams(s, sc);"
+_T = "query (x) :- T(x);"
+_OWNS = "query (p, x) :- Owns(p, x);"
 
 
 @pytest.mark.parametrize("program, query, expect", [
@@ -2383,6 +2394,35 @@ _EXAMS = "query (s, sc) :- Exams(s, sc);"
     # global: with Limit = 60 both rows would become 61
     pytest.param("update Exams(s, Limit) :- Limit < 80, Limit = Limit + 1;", _EXAMS,
                  [("alice", 51), ("bob", 90)], id="pattern_var_shadows_global"),
+    # procedures lower onto set/update/remove, so their expressions
+    # are rule expressions
+    pytest.param('query Bang(s: string) :- @insert Exams($"$(s)!", 1); Bang("dan");',
+                 _EXAMS, [("alice", 50), ("bob", 90), ("dan!", 1)],
+                 id="procedure_interp_string"),
+    pytest.param("query Clamp(v: int) :- @insert T(if v > 0 then v else 0); Clamp(-5);",
+                 _T, [(-1,), (0,), (5,), (70,)], id="procedure_if_then_else"),
+    pytest.param("query Add(a: int, b: int) :- @insert T(a + b); Add(3, 1 + 2);",
+                 _T, [(-1,), (5,), (6,), (70,)], id="call_argument_expression"),
+    pytest.param("set T(1 + 2);", _T, [(-1,), (3,), (5,), (70,)], id="set_expression"),
+    # a class-typed pattern variable dereferences; the dangling key 3
+    # reads NULL and keeps its row
+    pytest.param('update Owns(p, x) :- p.name == "a", x = 1;', _OWNS,
+                 [(1, 1), (2, 20), (3, 30)], id="update_deref_pattern_var"),
+    pytest.param('remove Owns(p, x) :- p.name == "a";', _OWNS,
+                 [(2, 20), (3, 30)], id="remove_deref_pattern_var"),
+    pytest.param("""
+data class City(name : string, id : int);
+set City("X", 1);
+data class Pc2(name : string, city : City, id : int);
+set Pc2("a", 1, 10);
+set Pc2("b", 2, 20);
+data Own2(p : Pc2, x : int);
+set Own2(10, 1);
+set Own2(20, 2);
+update Own2(p, x) :- p.city.name == "X", x = 0;
+""", "query (p, x) :- Own2(p, x);", [(10, 0), (20, 2)], id="update_deref_two_hops"),
+    pytest.param("set Picked(1, 5);", "query (p, x) :- Picked(p, x);",
+                 [(1, 5)], id="where_deref_accepts"),
 ])
 def test_every_body_resolves_names_like_rules(spark, program, query, expect):
     """Globals, `Enum.Member` and `$"…"` resolve the same way in
@@ -2393,6 +2433,51 @@ def test_every_body_resolves_names_like_rules(spark, program, query, expect):
     hql.run(_NAME_RULE_SETUP)
     hql.run(program)
     assert rows(hql.run(query).queries[0]) == expect
+
+
+def test_where_deref_refuses_a_bad_set(spark):
+    """A `where` constraint that dereferences a class-typed column
+    refuses a row whose referenced instance breaks it."""
+    hql = HeroQL(spark)
+    hql.run(_NAME_RULE_SETUP)
+    with pytest.raises(HeroQLError, match="where"):
+        hql.run('set Picked(2, 5); query (p, x) :- Picked(p, x);')
+
+
+def test_update_may_not_assign_a_declared_unique_key(spark):
+    """An in-memory `update` may not assign an `index Unique(k)` key,
+    as on snapshot tables: keys identify rows, and assigning one could
+    leave two rows with the same key."""
+    hql = HeroQL(spark)
+    hql.run("data T(k : int, v : int) index Unique(k); set T(1, 1); set T(2, 2);")
+    with pytest.raises(HeroQLError, match="key column"):
+        hql.run("update T(k, v) :- k == 1, k = 2;")
+    assert rows(hql.run("query (k, v) :- T(k, v);").queries[0]) == [(1, 1), (2, 2)]
+
+
+def test_insert_arity_is_checked_before_the_row_is_buffered(spark):
+    """`set` and `@insert` with the wrong number of values fail at the
+    statement, with nothing buffered; an `@insert` whose target was
+    declared after the procedure fails at the call, inside a
+    transaction query's rollback."""
+    hql = HeroQL(spark)
+    hql.run("data E(s : string, v : int);")
+    with pytest.raises(HeroQLError, match="column"):
+        hql.run('set E("x");')
+    hql.run("""
+transaction query Late(s: string) :- @insert E(s, 1), @insert L(s);
+data L(s : string, v : int);
+""")
+    with pytest.raises(HeroQLError, match="column"):
+        hql.run('Late("y");')
+    assert rows(hql.run("query (s, v) :- E(s, v);").queries[0]) == []
+
+
+def test_insert_command_arity_is_checked_at_declaration(spark):
+    hql = HeroQL(spark)
+    hql.run("data E(s : string, v : int);")
+    with pytest.raises(HeroQLError, match="column"):
+        hql.run("query Short(s: string) :- @insert E(s);")
 
 
 def test_package_public_visibility(spark):
